@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from patuha_etl_dlt_spark.cdc.dedup import lww_agg, lww_salted, lww_semijoin, lww_window
+from patuha_etl_dlt_spark.cdc.dedup import lww_agg, lww_salted, lww_window
 from patuha_etl_dlt_spark.functions.sanitize import clean_string
 from patuha_etl_dlt_spark.functions.text import (
     LANG_STOPWORDS,
@@ -119,20 +119,6 @@ def cdc_lww_salted(spark, sf_dir):
     return lww_salted(ev, ["user_id"], ["ts", "event_id"], n_salt=8).select(*_lww_cols())
 
 
-def cdc_lww_semijoin(spark, sf_dir):
-    """Fourth physical LWW plan, same oracle: winner coordinates from a
-    column-pruned aggregation, broadcast LEFT SEMI back — the payload
-    never enters a shuffle (the heavy-payload strategy; see
-    cdc/dedup.py::lww_semijoin and the BASELINE.md round-5 crossover)."""
-    ev = _t(spark, sf_dir, "events")
-    return lww_semijoin(ev, ["user_id"], ["ts", "event_id"]).select(
-        "user_id",
-        F.col("ts").alias("last_ts"),
-        F.col("event_type").alias("last_event_type"),
-        F.col("value").alias("last_value"),
-    )
-
-
 def cdc_apply_deletes_lake(spark, sf_dir):
     """Flagship: the real engine end-to-end — events become I/U/D changes
     ('error' ⇒ delete), applied through LakeTable.merge in three batches;
@@ -156,11 +142,6 @@ def cdc_apply_deletes_lake(spark, sf_dir):
             delta.filter(F.col("_event_id") % 3 == i),
             batch_id=f"b{i}",
             collect_metrics=False,
-            # global overlay: each batch writes plain coalesced delta files
-            # at the session's shuffle width instead of pinning the whole
-            # plan to num_buckets partitions (8-wide on a 32-core box);
-            # the final read LWW-resolves identically (property-tested)
-            overlay="global",
         )
     return t.read().select("user_id", "ts", "event_type", "value", "props")
 
@@ -182,7 +163,6 @@ def cdc_pull_cycle(spark, sf_dir):
     scan filtered by it → exactly-once MERGE → cursor advance. Cycle 2
     MUST only see rows above cycle 1's cursor; the final state equals the
     one-shot LWW SQL over all events."""
-    from patuha_etl_dlt_spark.cdc.engine import EngineConfig
     from patuha_etl_dlt_spark.cdc.orchestrator import SyncOrchestrator
     from patuha_etl_dlt_spark.config import TableConfig
 
@@ -201,14 +181,7 @@ def cdc_pull_cycle(spark, sf_dir):
         num_buckets=8,
     )
     root = tempfile.mkdtemp(prefix="entry_pull_")
-    # global overlay: pull merges write plain coalesced delta files at the
-    # session's shuffle width instead of a plan pinned to num_buckets=8
-    # partitions; the read LWW-resolves identically (measured 2.6->2.1 s
-    # warm, 9.3->2.7 s cold at sf1.0)
-    orch = SyncOrchestrator(
-        spark, root, [cfg], sources={"pull": source},
-        engine_config=EngineConfig(overlay="global"),
-    )
+    orch = SyncOrchestrator(spark, root, [cfg], sources={"pull": source})
     (r1,) = orch.pull_cycle("t1")
     assert r1.status == "perfect", r1.metrics
     assert orch.engine("pull").cp.cursor() == cut  # cursor advanced to T1's edge
@@ -242,7 +215,6 @@ def cdc_snapshot_diff(spark, sf_dir):
     it) diff each full snapshot against the lake and MERGE only the
     derived I/U/D events; the final state must equal the T=∞ snapshot —
     including rows DELETED between the snapshots."""
-    from patuha_etl_dlt_spark.cdc.engine import EngineConfig
     from patuha_etl_dlt_spark.cdc.orchestrator import SyncOrchestrator
     from patuha_etl_dlt_spark.config import TableConfig
 
@@ -262,10 +234,7 @@ def cdc_snapshot_diff(spark, sf_dir):
         num_buckets=8,
     )
     root = tempfile.mkdtemp(prefix="entry_sd_")
-    orch = SyncOrchestrator(
-        spark, root, [cfg], sources={"sd": upstream_snapshot},
-        engine_config=EngineConfig(overlay="global"),  # see cdc_pull_cycle
-    )
+    orch = SyncOrchestrator(spark, root, [cfg], sources={"sd": upstream_snapshot})
     (r1,) = orch.pull_cycle("t1")
     assert r1.status == "perfect" and r1.metrics["changes"] > 0, r1.metrics
     phase["n"] = 2
@@ -1020,7 +989,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # CDC engine surface
         "cdc_lww_window": cdc_lww_window,
         "cdc_lww_agg": cdc_lww_agg,
-        "cdc_lww_semijoin": cdc_lww_semijoin,
         "cdc_lww_salted": cdc_lww_salted,
         "cdc_apply_deletes_lake": cdc_apply_deletes_lake,
         "cdc_pull_cycle": cdc_pull_cycle,
@@ -1087,7 +1055,6 @@ def oracle_sql() -> dict[str, str]:
     return {
         "cdc_lww_window": _LWW_ORACLE,
         "cdc_lww_agg": _LWW_ORACLE,
-        "cdc_lww_semijoin": _LWW_ORACLE,
         "cdc_lww_salted": _LWW_ORACLE,
         "cdc_apply_deletes_lake": _APPLY_ORACLE,
         "cdc_pull_cycle": _PULL_ORACLE,

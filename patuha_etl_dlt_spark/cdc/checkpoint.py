@@ -19,22 +19,37 @@ from __future__ import annotations
 import json
 import os
 import time
+from decimal import Decimal
 
 from patuha_etl_dlt_spark.lake.metadata import atomic_write
 
 
+_NUMERIC = (int, float, Decimal)
+
+
+def _encode_cursor(v):
+    """JSON form of a cursor: a Decimal (a DECIMAL cursor column) is
+    stored tagged with its exact digits, so it reads back as a Decimal
+    that compares numerically; every other cursor is stored as is."""
+    return {"decimal": str(v)} if isinstance(v, Decimal) else v
+
+
+def _decode_cursor(v):
+    return Decimal(v["decimal"]) if isinstance(v, dict) else v
+
+
 def _max_cursor(prev, new):
-    """Monotone-max for pull cursors that is TYPE-STABLE: int and float
-    compare numerically (a source whose cursor round-trips int→float —
-    e.g. a DOUBLE MAX() — can never move the high-water mark backwards);
-    same-type values compare natively; any other type change is an
-    explicit error, not a silent reset (the old behavior let a replayed
-    older batch regress the cursor and re-pull a whole window)."""
+    """Monotone-max for pull cursors that is TYPE-STABLE: int, float and
+    Decimal compare numerically (a source whose cursor round-trips
+    int→float — e.g. a DOUBLE MAX() — can never move the high-water mark
+    backwards); same-type values compare natively; any other type change
+    is an explicit error, not a silent reset (the old behavior let a
+    replayed older batch regress the cursor and re-pull a whole window)."""
     if prev is None:
         return new
     if (
-        isinstance(prev, (int, float))
-        and isinstance(new, (int, float))
+        isinstance(prev, _NUMERIC)
+        and isinstance(new, _NUMERIC)
         and not isinstance(prev, bool)
         and not isinstance(new, bool)
     ):
@@ -80,7 +95,7 @@ class CheckpointStore:
         high-water mark, ``pipeline_management.py:39-56`` — except stored
         authoritatively here instead of re-derived from the target per
         cycle). None until the first pull commits one."""
-        return self.read().get("cursor")
+        return _decode_cursor(self.read().get("cursor"))
 
     def commit(
         self, batch_id: str, new_offsets: dict[int, int], metrics: dict, cursor=None
@@ -98,12 +113,15 @@ class CheckpointStore:
         if cursor is not None:
             # monotone: a replayed/out-of-order commit can't move it back,
             # and a type flip can't bypass the guard (see _max_cursor)
-            st["cursor"] = _max_cursor(st.get("cursor"), cursor)
+            st["cursor"] = _encode_cursor(
+                _max_cursor(_decode_cursor(st.get("cursor")), cursor)
+            )
         st["committed_at"] = time.time()
         row = {"batch_id": batch_id, "ts": time.time(), **metrics}
-        # metrics log first (informational), state swap last (authoritative)
+        # metrics log first (informational), state swap last (authoritative);
+        # a Decimal cursor in the metrics is logged as its string
         with open(self.metrics_path, "a") as f:
-            f.write(json.dumps(row) + "\n")
+            f.write(json.dumps(row, default=str) + "\n")
         atomic_write(self.state_path, json.dumps(st))
 
     def has_batch(self, batch_id: str) -> bool:

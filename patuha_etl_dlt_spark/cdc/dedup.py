@@ -7,27 +7,18 @@ updates to a key. We make it deterministic: the winner per key is the
 event with the greatest ``(order_col, lsn)``; ``lsn`` is unique, so the
 order is total (SURVEY.md §2.5).
 
-Three physical strategies, same semantics:
+Three physical plans, same semantics:
 
 - ``lww_window``   — ``row_number() OVER (PARTITION BY key ORDER BY ... DESC)``.
   The textbook plan; requires a full sort of each key partition and has
   no map-side combine, so a hot key serializes into one task.
 - ``lww_agg``      — ``groupBy(key).agg(max_by(payload, order))``. Partial
   aggregation collapses duplicates map-side: a key with 10^6 events ships
-  ~1 row per input partition through the shuffle. **Default.**
+  ~1 row per input partition through the shuffle. **The engine's plan.**
 - ``lww_salted``   — explicit two-phase reduction for window-shaped plans:
   phase 1 reduces within (key, salt), phase 2 across salts. Defeats skew
   where a window is otherwise required (e.g. when you must keep the
   full winning row without restructuring). North-rule requirement.
-- ``lww_semijoin`` — winners WITHOUT moving the payload: a column-pruned
-  aggregation finds each key's winning (order, lsn) coordinate, then a
-  broadcast LEFT SEMI join keeps the winning rows map-side. The heavy
-  columns (KB-size html/text) never enter a shuffle — the dominant
-  data-movement term of a web-page CDC batch disappears. Requires the
-  winner set to fit a broadcast and ``(key, order, lsn)`` to be unique
-  per event (true by construction for binlog/WAL/Kafka feeds: the LSN is
-  a log position). The engine auto-selects it for small-enough batches in
-  global-overlay mode (see ``EngineConfig.lww_strategy``).
 
 Skew rationale follows "Rock you like a hurricane: taming skew in large
 scale analytics" (EuroSys 2018 — PAPERS.md): repartition the hot key's
@@ -66,44 +57,6 @@ def lww_agg(df: DataFrame, key_cols: list[str], order_cols: list[str]) -> DataFr
         .select(*key_cols, *[F.col(f"_w.{c}").alias(c) for c in payload])
     )
     return out.select(*df.columns)
-
-
-def lww_semijoin(df: DataFrame, key_cols: list[str], order_cols: list[str]) -> DataFrame:
-    """One row per key WITHOUT shuffling the payload: the winner
-    coordinate per key comes from a column-pruned aggregation (Catalyst
-    reads only key+order columns from the scan — on a parquet-staged
-    web-page feed that is a few narrow columns instead of the KB-size
-    html/text payload), broadcast back as a LEFT SEMI join, so winning
-    rows are selected map-side in the scan stage.
-
-    Winner selection matches ``lww_agg`` exactly: greatest
-    ``struct(order_cols)``, with SQL semantics ordering NULL fields first
-    (a NULL order loses to any value). Join equality is null-safe so a
-    winner with a NULL order column still matches its own row.
-
-    Preconditions (caller-checked): the winner set must fit a broadcast
-    (engine caps via ``lww_broadcast_max_keys``), and ``(key, order_cols)``
-    must be unique per event — true by construction for binlog/WAL/Kafka
-    feeds where the last order col is a log position. A duplicated
-    coordinate keeps both rows (the global-overlay read path LWW-resolves
-    them; identical replayed payloads are indistinguishable anyway).
-    """
-    from functools import reduce as _reduce
-
-    win = (
-        df.groupBy(*key_cols)
-        .agg(F.max(F.struct(*[F.col(c).alias(c) for c in order_cols])).alias("_w"))
-        .select(
-            *[F.col(k).alias(f"_lk_{i}") for i, k in enumerate(key_cols)],
-            *[F.col(f"_w.{c}").alias(f"_lo_{j}") for j, c in enumerate(order_cols)],
-        )
-    )
-    cond = _reduce(
-        lambda a, b: a & b,
-        [df[k].eqNullSafe(win[f"_lk_{i}"]) for i, k in enumerate(key_cols)]
-        + [df[c].eqNullSafe(win[f"_lo_{j}"]) for j, c in enumerate(order_cols)],
-    )
-    return df.join(F.broadcast(win), cond, "left_semi")
 
 
 def lww_salted(

@@ -14,11 +14,13 @@ logical commit", SURVEY.md §7): the MERGE snapshot records the batch id;
 on restart, an already-merged batch skips the MERGE and just re-commits
 offsets, so any crash point converges.
 
-Scale shape of one batch: the only wide operation is the single groupBy
-inside ``LakeTable.merge`` (map-side-combined ``max_by``). The offsets
-aggregation is per feed partition (thousands of groups, trivially small);
-the offset *filter* is a broadcast join against a few-thousand-row map.
-Nothing collects event data to the driver.
+Scale shape of one batch: two exchanges. The LWW pre-reduce
+(map-side-combined ``max_by``, at the session's shuffle width) runs
+before text extraction; ``LakeTable.merge`` then places the winners into
+their buckets for the write. The offsets aggregation is per feed
+partition (thousands of groups, trivially small); the offset *filter* is
+a literal map (or a broadcast join for very large maps). Nothing collects
+event data to the driver.
 """
 
 from __future__ import annotations
@@ -33,7 +35,7 @@ from pyspark.sql import functions as F
 
 from patuha_etl_dlt_spark.cdc import evolution
 from patuha_etl_dlt_spark.cdc.checkpoint import CheckpointStore
-from patuha_etl_dlt_spark.cdc.dedup import lww_agg, lww_semijoin
+from patuha_etl_dlt_spark.cdc.dedup import lww_agg
 from patuha_etl_dlt_spark.functions.html import with_extracted_text
 from patuha_etl_dlt_spark.functions.sanitize import sanitize_columns
 from patuha_etl_dlt_spark.lake.table import SYS_EVENT, LakeTable
@@ -57,12 +59,6 @@ class EngineConfig:
     # 'mor' appends batch-reduced overlay files (write cost O(delta));
     # 'cow' rewrites touched buckets (read-optimal). See LakeTable.merge.
     merge_mode: str = "mor"
-    # mor overlay layout: 'bucket' (one file per touched bucket — sharp
-    # bucket-pruned reads) or 'global' (plain coalesced files, bucket=-1 —
-    # write cost independent of num_buckets; the small-batch/low-traffic-
-    # table fast path, folded back to bucketed files on the compaction
-    # cadence). See LakeTable.merge.
-    overlay: str = "bucket"
     # fold merge-on-read overlays into base files every N batches
     # (reference hygiene analog: staging truncation each cycle,
     # pipeline_management.py:1106-1120). None = caller-managed.
@@ -88,49 +84,6 @@ class EngineConfig:
     # any replayed event at or below the horizon, and every future event
     # outranks the purged tombstone by LSN.
     gc_tombstones: bool = True
-    # Reduce the batch to one winner per key BEFORE text extraction: the
-    # pandas UDF then (a) runs post-shuffle, so its parallelism is
-    # spark.sql.shuffle.partitions instead of the input-split count — on a
-    # compressed feed a 200 MB batch is ~2 splits, which starves a 32-core
-    # executor — and (b) touches only winning rows (under duplication
-    # ratio D, a D× saving). Extraction is a pure function of html, so
-    # winner-then-extract ≡ extract-then-winner.
-    pre_reduce: bool = True
-    # HOW the pre-reduce moves data. 'shuffle' = lww_agg (one wide
-    # exchange of the full payload — also what bucket-aligns the rows, so
-    # it does double duty for bucketed overlay writes). 'broadcast' =
-    # lww_semijoin: winner coordinates from a column-pruned scan,
-    # broadcast LEFT SEMI back — the KB-size html/text payload never
-    # enters a shuffle OR an aggregation buffer. Only sound when the
-    # write needs no bucket alignment (mor + global overlay) and the
-    # winner set fits a broadcast.
-    #
-    # Which is faster is payload-width-dependent (interleaved A/B,
-    # 300k-event batches, BASELINE.md round 5): at ~8.5 KB pages the
-    # shuffle plan wins at high core counts (its post-shuffle AQE-packed
-    # partitions feed the extraction UDF better) and the exchange is
-    # cheap; at ~17 KB pages the shuffle plan's max_by buffers the full
-    # struct per key and collapses (19-75 s vs broadcast's stable 12.5 s
-    # at 16 cores). 'auto' therefore picks broadcast when the batch is
-    # eligible AND (a) the row count — known up front on the discovery
-    # path, via ``approx_rows``, or bounded from above by the
-    # checkpointed-offset gap — stays within lww_broadcast_max_keys, and (b)
-    # the MEASURED on-disk bytes/row of the previous merge's own files
-    # is at or above lww_broadcast_row_bytes (heavy payloads). The first
-    # batch of a fresh engine has no measurement and takes the
-    # always-safe shuffle plan; anything unknown likewise.
-    lww_strategy: str = "auto"
-    # broadcast-path cap: winner rows ≤ this (~100 MB driver/executor
-    # footprint at web-page key sizes). A backlog catch-up batch beyond it
-    # auto-falls back to the shuffle plan.
-    lww_broadcast_max_keys: int = 1_000_000
-    # 'auto' payload-width gate, in MEASURED on-disk bytes per written
-    # row (LakeTable.merge stats its own files — snappy-compressed,
-    # extracted text included): the crossover sits between the measured
-    # ~1.4 KB/row of 8.5 KB pages (shuffle wins) and ~2.7 KB/row of
-    # 17 KB pages (broadcast wins decisively). 0 = ignore width, decide
-    # on rows alone.
-    lww_broadcast_row_bytes: int = 2_000
     # columns never sanitized: merge keys (null keys are dropped with a
     # metric, not coerced) and extracted text (byte-identity contract)
     sanitize_exclude: tuple[str, ...] = ()
@@ -149,16 +102,6 @@ class CdcEngine:
         self.cp = checkpoints
         self.cfg = config or EngineConfig()
         self._n_batches: int | None = None  # compaction cadence counter
-        # last batch's observed event count — the 'auto' LWW strategy's
-        # fallback size estimate when the source doesn't know its own
-        # poll size (steady-state feeds have stable batch shapes)
-        self._last_events_applied: int | None = None
-        # measured on-disk bytes/row from the previous merge's own files
-        # (stat'd by LakeTable.merge): preferred width signal for the
-        # 'auto' LWW gate — Catalyst's estimate overstates width when a
-        # non-pushable filter (the literal-map offset predicate) carries
-        # no selectivity
-        self._last_row_bytes: float | None = None
 
     # ------------------------------------------------------------ plumbing
 
@@ -272,51 +215,16 @@ class CdcEngine:
             shutil.rmtree(bdir, ignore_errors=True)
         return clean, n_bad
 
-    def _lww_use_broadcast(self, known_rows: int | None) -> bool:
-        """Decide the pre-reduce plan (see EngineConfig.lww_strategy)."""
-        cfg = self.cfg
-        if cfg.lww_strategy == "shuffle":
-            return False
-        if not (cfg.merge_mode == "mor" and cfg.overlay == "global"):
-            # bucketed writes need the shuffle anyway (it bucket-aligns)
-            return False
-        if cfg.lww_strategy == "broadcast":
-            return True
-        if cfg.lww_strategy != "auto":
-            raise ValueError(f"unknown lww_strategy: {cfg.lww_strategy!r}")
-        if known_rows is not None:
-            rows = known_rows
-        else:
-            # no sound size bound for this batch (fresh engine on the
-            # offset-less path, or a caller that knows neither poll size
-            # nor offsets): the always-safe shuffle plan. A prior-batch
-            # estimate was used here once (last_applied × 2) and rejected:
-            # a backlog catch-up batch far beyond steady state would
-            # silently take the broadcast plan and risk failing the job on
-            # the broadcast size cap — apply_batch instead derives a SOUND
-            # upper bound from the checkpointed-offset gap when the source
-            # reports offsets (LSNs are unique, so per-partition
-            # new − committed bounds the batch's row count from above).
-            return False
-        if rows > cfg.lww_broadcast_max_keys:
-            return False
-        if not cfg.lww_broadcast_row_bytes:
-            return True
-        # width signal: measured bytes/row from the previous merge's own
-        # written files — one unit system, stat'd by the engine itself.
-        # (A Catalyst sizeInBytes estimate was tried and rejected: it
-        # overstates width whenever a non-pushable filter — the
-        # literal-map offset predicate — carries no selectivity, and its
-        # units don't line up with the measured threshold.) No
-        # measurement yet (first batch of a fresh engine) → the
-        # always-safe shuffle plan.
-        if self._last_row_bytes is None:
-            return False
-        return self._last_row_bytes >= cfg.lww_broadcast_row_bytes
-
-    def _prepare_delta(
-        self, events: DataFrame, renames: list, use_broadcast_lww: bool = False
-    ) -> DataFrame:
+    def _prepare_delta(self, events: DataFrame, renames: list) -> DataFrame:
+        """Renames, sanitize, then the LWW pre-reduce BEFORE text
+        extraction: the pandas UDF then (a) runs post-shuffle, so its
+        parallelism is the session's shuffle width instead of the
+        input-split count — on a compressed feed a 200 MB batch is ~2
+        splits, which starves a many-core executor — and (b) touches only
+        winning rows (under duplication ratio D, a D× saving). Extraction
+        is a pure function of html, so winner-then-extract ≡
+        extract-then-winner. The reduce is ``lww_agg``: its map-side
+        combine is the hot-key skew defence."""
         cfg = self.cfg
         df = events
         # events minted before a rename still carry the old column name;
@@ -337,12 +245,7 @@ class CdcEngine:
         keep = [c for c in df.columns if c not in (cfg.partition_col, cfg.schema_col)]
         df = df.select(*keep)
         snap = self.table.snapshot
-        if cfg.pre_reduce:
-            order = [snap.order_cols[0], SYS_EVENT]
-            if use_broadcast_lww:
-                df = lww_semijoin(df, snap.key_cols, order)
-            else:
-                df = lww_agg(df, snap.key_cols, order)
+        df = lww_agg(df, snap.key_cols, [snap.order_cols[0], SYS_EVENT])
         if cfg.extract_text and cfg.html_col in df.columns and cfg.text_col in df.columns:
             df = with_extracted_text(df, cfg.html_col, cfg.text_col)
         return df
@@ -355,7 +258,6 @@ class CdcEngine:
         batch_id: str | None = None,
         offsets: dict[int, int] | None = None,
         descriptors: list[str] | None = None,
-        approx_rows: int | None = None,
     ) -> dict:
         """Apply one change-event micro-batch exactly once.
 
@@ -365,13 +267,7 @@ class CdcEngine:
         its positions, so scanning the data to rediscover them is wasted
         work (one whole Spark job per batch, a pure Amdahl term that caps
         N→4N scaling on small batches). When either is absent the engine
-        falls back to the column-pruned discovery pre-pass.
-
-        ``approx_rows``: the source's own estimate of this batch's event
-        count (a Kafka consumer knows how many records it polled). Only
-        used to pick the LWW pre-reduce plan on the known-offsets path
-        (see ``EngineConfig.lww_strategy``); correctness never depends on
-        it."""
+        falls back to the column-pruned discovery pre-pass."""
         batch_id = batch_id or uuid.uuid4().hex
         t0 = time.time()
 
@@ -408,48 +304,35 @@ class CdcEngine:
                 F.count(F.lit(1)).alias("events_applied"),
                 F.sum((op == "D").cast("long")).alias("delete_events"),
             )
-            known_rows = approx_rows
-            if known_rows is None:
-                # sound row-count UPPER bound from the offset gap: each
-                # feed partition p can contribute at most
-                # (new_offset_p − committed_offset_p) events because LSNs
-                # are unique and the offset filter drops everything at or
-                # below the committed mark. Over-counts on sparse/global
-                # LSN spaces, which only ever forces the safe shuffle plan
-                # — never an under-sized broadcast (a backlog catch-up
-                # batch can no longer sneak past lww_broadcast_max_keys on
-                # a stale prior-batch estimate).
-                prev_off = self.cp.offsets()
-                known_rows = sum(
-                    max(0, int(l) - int(prev_off.get(int(p), -1)))
-                    for p, l in offsets.items()
-                )
         else:
             new_off, counts, descriptors = self._offsets_and_counts(fresh)
-            known_rows = counts["events_applied"]
         renames = evolution.evolve_table(self.table, None, descriptors=descriptors)
         if self.cfg.quarantine_dir:
             fresh, n_quarantined = self._quarantine(fresh, batch_id)
             counts["quarantined"] = n_quarantined
-        use_bcast = self.cfg.pre_reduce and self._lww_use_broadcast(known_rows)
-        delta = self._prepare_delta(fresh, renames, use_broadcast_lww=use_bcast)
+        delta = self._prepare_delta(fresh, renames)
         metrics = self.table.merge(
             delta,
             batch_id=batch_id,
             op_col=self.cfg.op_col,
             mode=self.cfg.merge_mode,
-            overlay=self.cfg.overlay,
-            # pre_reduce already left one winner per key — the merge can
-            # skip its in-batch reduction (one agg pass over the batch)
-            delta_reduced=self.cfg.pre_reduce,
+            # the pre-reduce already left one winner per key — the merge
+            # skips its in-batch reduction (one agg pass over the batch)
+            delta_reduced=True,
         )
         if obs_in is not None:
-            got = obs_in.get  # already resolved: the merge write ran the plan
+            # already resolved: the merge write ran the plan. Spark keeps no
+            # row for an empty batch — adaptive execution replaces a shuffle
+            # stage that produced no rows (here the pre-reduce's, which the
+            # bucket placement follows) together with every observation
+            # upstream of it; nothing filters rows before that shuffle, so
+            # a missing row means zero events.
+            got = obs_in.get if obs_in._jo.getRow().length() else {}
             # update, don't rebind: counts may already carry 'quarantined'
             # from the dead-letter split above
             counts.update(
-                events_applied=int(got["events_applied"] or 0),
-                delete_events=int(got["delete_events"] or 0),
+                events_applied=int(got.get("events_applied") or 0),
+                delete_events=int(got.get("delete_events") or 0),
             )
         metrics.update(counts)
         self.maybe_compact(metrics)
@@ -457,13 +340,8 @@ class CdcEngine:
             {"kind": o.kind, "name": o.name, "new_name": o.new_name, "typ": o.typ}
             for o in renames
         ]
-        metrics["lww_plan"] = "broadcast" if use_bcast else "shuffle"
         metrics["seconds"] = round(time.time() - t0, 3)
         self.cp.commit(batch_id, new_off, metrics)
-        if counts.get("events_applied") is not None:
-            self._last_events_applied = counts["events_applied"]
-        if metrics.get("bytes_written") and metrics.get("rows_written"):
-            self._last_row_bytes = metrics["bytes_written"] / metrics["rows_written"]
         return metrics
 
     def _gc_safe(self) -> bool:

@@ -14,16 +14,10 @@ pool so one table's large job cannot starve the rest. Retries are safe at
 any point because MERGE commits are atomic and batch-id idempotent.
 
 Concurrency note: correctness under concurrent cycles is carried by the
-per-table single-writer invariant plus the bucketed ``partitionBy`` write
-(rows always land in their key's bucket regardless of session-conf
-interleaving). The session-wide shuffle-partition knob merges pin is
-mutated only under ``lake.table._CONF_LOCK`` (set→job→restore is atomic
-across these threads, so no thread can capture another's temporary value
-and leak it into the session); tables whose bucket count already matches
-the session conf skip the lock and stay fully concurrent. The residual
-worst case is perf-only: a write racing a locked mutator may see the
-temporary conf and leave >1 file in a bucket for one commit, healed by
-the compaction cadence.
+per-table single-writer invariant. No path mutates session-wide conf:
+every width a job needs (bucket placement, the snapshot-diff join) is an
+explicit ``repartition`` in its own plan, so concurrent tables cannot
+disturb each other's layout.
 """
 
 from __future__ import annotations
@@ -38,7 +32,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from patuha_etl_dlt_spark.cdc import evolution
-from patuha_etl_dlt_spark.cdc.checkpoint import CheckpointStore
+from patuha_etl_dlt_spark.cdc.checkpoint import _NUMERIC, CheckpointStore
 from patuha_etl_dlt_spark.cdc.engine import CdcEngine, EngineConfig
 from patuha_etl_dlt_spark.cdc.retry import RetryPolicy, RetryQueue, with_retry
 from patuha_etl_dlt_spark.config import TableConfig
@@ -47,9 +41,9 @@ from patuha_etl_dlt_spark.lake import LakeTable
 
 def _check_cursor_type(prev, dtype) -> None:
     """Pre-merge guard matching ``checkpoint._max_cursor``'s type rules:
-    a committed int/float cursor is only advanceable by a NUMERIC source
-    column; a committed string cursor (timestamps/dates json-serialize to
-    str, see ``_json_cursor``) by a string/timestamp/date column. Any
+    a committed int/float/Decimal cursor is only advanceable by a NUMERIC
+    source column; a committed string cursor (timestamps/dates serialize
+    to str, see ``_json_cursor``) by a string/timestamp/date column. Any
     other combination would raise inside the post-merge checkpoint commit
     — permanently wedging the cycle — so it raises HERE, before the merge
     runs, where the failure is clean and the cycle retryable after an
@@ -58,7 +52,7 @@ def _check_cursor_type(prev, dtype) -> None:
 
     if prev is None:
         return
-    if isinstance(prev, (int, float)) and not isinstance(prev, bool):
+    if isinstance(prev, _NUMERIC) and not isinstance(prev, bool):
         ok = isinstance(dtype, T.NumericType)
     elif isinstance(prev, str):
         ok = isinstance(
@@ -76,12 +70,14 @@ def _check_cursor_type(prev, dtype) -> None:
 
 
 def _json_cursor(v):
-    """Canonical JSON-storable cursor value. Timestamps/dates become
+    """Canonical checkpoint cursor value. Timestamps/dates become
     Python's ``str()`` form (``YYYY-MM-DD HH:MM:SS[.ffffff]`` — fractions
     are absent or exactly 6 digits, so lexicographic order equals time
     order, keeping the checkpoint's monotone-max guard correct); ints,
-    floats and strings pass through unchanged."""
-    if v is None or isinstance(v, (int, float, str)):
+    floats, Decimals and strings pass through unchanged (a Decimal stays
+    exact and compares numerically — the checkpoint stores it tagged,
+    see ``checkpoint._encode_cursor``)."""
+    if v is None or isinstance(v, (*_NUMERIC, str)):
         return v
     return str(v)
 
@@ -270,47 +266,47 @@ class SyncOrchestrator:
                     diff_shuffle_partitions,
                     diff_snapshots,
                 )
-                from patuha_etl_dlt_spark.lake.table import _pinned_shuffle_conf
 
                 def one_diff() -> dict:
                     df, desc = self._build_scan(name, None)
                     ops = evolution.evolve_from_source(eng.table, df.schema)
                     snap_v = eng.table.snapshot.version
-                    delta = diff_snapshots(
-                        df, eng.table.read(), list(cfg.merge_key), op_col=eng.cfg.op_col
-                    ).withColumn("_event_id", F.lit(snap_v + 1).cast("long"))
                     # size the diff's full-outer-join shuffle from the
                     # TABLE's bytes, not the session constant (the round-5
-                    # 32 M-row spill cliff); AQE coalesces the excess when
-                    # the table is small. A bucketed-overlay merge re-pins
-                    # its WRITE to num_buckets inside (its own documented
-                    # trade); the global-overlay path runs entirely at
-                    # this width.
+                    # 32 M-row spill cliff): both inputs are hash-placed on
+                    # the keys at that width, so the join reuses those
+                    # exchanges; the merge then places the changes into
+                    # buckets for its write
                     diff_width = diff_shuffle_partitions(
                         eng.table,
                         int(self.spark.conf.get("spark.sql.shuffle.partitions")),
                     )
+                    keys = list(cfg.merge_key)
+                    delta = diff_snapshots(
+                        df.repartition(diff_width, *keys),
+                        eng.table.read().repartition(diff_width, *keys),
+                        keys,
+                        op_col=eng.cfg.op_col,
+                    ).withColumn("_event_id", F.lit(snap_v + 1).cast("long"))
                     obs = Observation()
                     opc = F.upper(F.col(eng.cfg.op_col))
-                    delta = delta.observe(
-                        obs,
-                        F.count(F.lit(1)).alias("changes"),
-                        F.sum((opc == "D").cast("long")).alias("delete_events"),
-                        F.sum((opc == "I").cast("long")).alias("insert_events"),
+                    m = eng.table.merge(
+                        delta,
+                        batch_id=bid,
+                        op_col=eng.cfg.op_col,
+                        mode=eng.cfg.merge_mode,
+                        # diff output is key-unique by construction (one
+                        # full-outer join on the keys of two key-unique
+                        # snapshots) — the merge can skip its in-batch
+                        # LWW reduction
+                        delta_reduced=True,
+                        observe=(
+                            obs,
+                            F.count(F.lit(1)).alias("changes"),
+                            F.sum((opc == "D").cast("long")).alias("delete_events"),
+                            F.sum((opc == "I").cast("long")).alias("insert_events"),
+                        ),
                     )
-                    with _pinned_shuffle_conf(self.spark, diff_width):
-                        m = eng.table.merge(
-                            delta,
-                            batch_id=bid,
-                            op_col=eng.cfg.op_col,
-                            mode=eng.cfg.merge_mode,
-                            overlay=eng.cfg.overlay,
-                            # diff output is key-unique by construction (one
-                            # full-outer join on the keys of two key-unique
-                            # snapshots) — the merge can skip its in-batch
-                            # LWW reduction
-                            delta_reduced=True,
-                        )
                     if m.get("skipped"):
                         if not eng.cp.has_batch(bid):
                             eng.cp.commit(bid, {}, {"skipped_merge": True})
@@ -357,17 +353,16 @@ class SyncOrchestrator:
                 # narrow rows cast up) merges cleanly
                 ops = evolution.evolve_from_source(eng.table, df.schema)
                 obs = Observation()
-                df = df.observe(
-                    obs,
-                    F.max(F.col(cfg.cursor)).alias("cursor_max"),
-                    F.count(F.lit(1)).alias("rows_pulled"),
-                )
                 m = eng.table.merge(
                     df,
                     batch_id=bid,
                     op_col=eng.cfg.op_col,
                     mode=eng.cfg.merge_mode,
-                    overlay=eng.cfg.overlay,
+                    observe=(
+                        obs,
+                        F.max(F.col(cfg.cursor)).alias("cursor_max"),
+                        F.count(F.lit(1)).alias("rows_pulled"),
+                    ),
                 )
                 if m.get("skipped"):
                     # crash heal: MERGE landed in a previous attempt but the

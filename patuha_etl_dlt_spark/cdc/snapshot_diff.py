@@ -56,9 +56,9 @@ def diff_shuffle_partitions(
     core-count-sized shuffle spills off a cliff (BASELINE.md round 5:
     3.2 s → 57 s between 8 M and 32 M rows). Sizing partitions so each
     holds ~``target_bytes`` keeps the hash join's per-task state bounded
-    (guide §2.2/§5); AQE coalescing shrinks the excess back when the
-    table is small, so over-provisioning is free. Driver cost is one
-    ``os.path.getsize`` per live data file (O(buckets))."""
+    (guide §2.2/§5). The pull loop repartitions both diff inputs on the
+    keys to this width; a small table stays at the session width. Driver
+    cost is one ``os.path.getsize`` per live data file (O(buckets))."""
     total = 0
     for f in table.snapshot.files:
         p = os.path.join(table.root, f.path)

@@ -6,7 +6,8 @@ dlt merge disposition (``/root/reference/source/pipeline_management.py:1076``,
 Spark-first design:
 
 - **Layout**: data files are Parquet, hash-bucketed on the merge key
-  (``pmod(xxhash64(key), num_buckets)``). A MERGE only reads and rewrites
+  (``pmod(hash(key), num_buckets)``, Spark's Murmur3 hash) and written
+  one file per touched bucket per commit. A MERGE only reads and rewrites
   the buckets its delta touches (copy-on-write at bucket granularity) —
   the analog of the reference's PK-index pre-creation
   (``index_management.py:177-231``), done with layout instead of indexes.
@@ -37,8 +38,7 @@ from __future__ import annotations
 import glob
 import json
 import os
-import threading
-from contextlib import contextmanager
+import shutil
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -54,42 +54,6 @@ SYS_EVENT = "_event_id"
 SYS_COLS = (SYS_DELETED, SYS_BATCH, SYS_EVENT)
 
 _ORDER_NULL_TS = "1970-01-01 00:00:00"
-
-# Serializes set→job→restore of session-wide SQL conf across the driver
-# threads a SyncOrchestrator(max_concurrency>1) runs merges from. Without
-# it, thread B can capture thread A's TEMPORARY value as its "previous"
-# conf and restore that after A already restored the original — leaving
-# the session permanently at another table's num_buckets. Threads whose
-# target conf already matches the session skip the lock entirely (the
-# common homogeneous-bucket-count case stays fully concurrent); a locked
-# mutator running beside an unlocked reader is the known perf-only worst
-# case (a bucket may get >1 file for one commit, healed by compaction).
-_CONF_LOCK = threading.RLock()
-
-
-@contextmanager
-def _pinned_shuffle_conf(spark: SparkSession, num_buckets: int, coalesce_knob: str | None = None):
-    """Run a write job with ``spark.sql.shuffle.partitions == num_buckets``
-    (and optionally the AQE coalesce flag pinned), restoring the previous
-    session conf afterwards — leak-free under concurrent callers."""
-    conf = spark.conf
-    target_sp = str(num_buckets)
-    cur_sp = conf.get("spark.sql.shuffle.partitions")
-    cur_co = conf.get("spark.sql.adaptive.coalescePartitions.enabled")
-    want_co = cur_co if coalesce_knob is None else coalesce_knob
-    if cur_sp == target_sp and want_co == cur_co:
-        yield
-        return
-    with _CONF_LOCK:
-        prev_sp = conf.get("spark.sql.shuffle.partitions")
-        prev_co = conf.get("spark.sql.adaptive.coalescePartitions.enabled")
-        try:
-            conf.set("spark.sql.shuffle.partitions", target_sp)
-            conf.set("spark.sql.adaptive.coalescePartitions.enabled", want_co)
-            yield
-        finally:
-            conf.set("spark.sql.shuffle.partitions", prev_sp)
-            conf.set("spark.sql.adaptive.coalescePartitions.enabled", prev_co)
 
 
 def _order_null_literal(typ: str):
@@ -242,14 +206,19 @@ class LakeTable:
     # --------------------------------------------------------------- reads
 
     def _bucket_expr(self, snap: Snapshot):
-        """Bucket assignment = Spark's own shuffle placement:
-        ``pmod(murmur3_hash(keys), B)`` is exactly HashPartitioning's
-        partition-id expression, so when a job runs with
-        ``spark.sql.shuffle.partitions == num_buckets``, a groupBy/join on
-        the keys lands every row in its bucket's partition — the bucketed
-        write then needs NO extra repartition (one data shuffle saved per
-        MERGE, and files come out one-per-bucket)."""
+        """Bucket of a row: ``pmod(hash(keys), num_buckets)`` (Murmur3,
+        seed 42, chained over composite keys)."""
         return F.pmod(F.hash(*[F.col(k) for k in snap.key_cols]), F.lit(snap.num_buckets))
+
+    def _place(self, snap: Snapshot, df: DataFrame) -> DataFrame:
+        """Bucket placement — the one exchange every bucketed write goes
+        through. Spark's hash partitioning computes a row's partition id
+        with the same expression as ``_bucket_expr``, so after
+        ``repartition(num_buckets, *keys)`` partition ``i`` holds exactly
+        bucket ``i``'s rows and the partitioned write emits one file per
+        touched bucket. Spark plans no second exchange when ``df`` is
+        already placed this way (e.g. the output of ``_lww_reduce``)."""
+        return df.repartition(snap.num_buckets, *[F.col(k) for k in snap.key_cols])
 
     def _align(self, df: DataFrame, schema: Schema, from_schema: Schema | None = None) -> DataFrame:
         """Project ``df`` to ``schema``: id-map names (when ``from_schema``
@@ -296,46 +265,35 @@ class LakeTable:
         )
 
     def _lww_reduce(self, snap: Snapshot, df: DataFrame) -> DataFrame:
-        """One LWW winner per key (max_by aggregate, map-side combined)."""
+        """One LWW winner per key (max_by aggregate). The rows are placed
+        into their buckets first, so the aggregate needs no exchange of
+        its own and its output is already placed for a bucketed write:
+        a reduce and its write share one exchange."""
         payload = [c for c in df.columns if c not in snap.key_cols]
         return (
-            df.groupBy(*snap.key_cols)
+            self._place(snap, df)
+            .groupBy(*snap.key_cols)
             .agg(F.max_by(F.struct(*payload), self._order_expr(snap)).alias("_w"))
             .select(*snap.key_cols, *[F.col(f"_w.{c}").alias(c) for c in payload])
         )
 
-    def _resolved(
-        self, snap: Snapshot, files: list[DataFile], wanted_buckets=None
-    ) -> DataFrame:
+    def _resolved(self, snap: Snapshot, files: list[DataFile]) -> DataFrame:
         """Merge-on-read resolution: buckets without delta overlays stream
         straight from their base files; buckets WITH overlays are
         LWW-reduced across base ∪ delta. Tombstones retained.
 
-        GLOBAL overlays (``bucket == -1``) overlap every bucket, so their
-        presence marks all buckets dirty until compaction folds them (the
-        documented read-cost trade of the small-batch write path). When
-        ``wanted_buckets`` is given (a bucket-pruned read), overlay rows
-        outside those buckets are filtered out by the bucket expression —
-        the overlay files themselves are scanned (they are small, recent
-        batches), but the rest of the table stays file-pruned."""
-        globals_ = [f for f in files if f.bucket == -1]
-        rest = [f for f in files if f.bucket != -1]
-        if globals_:
-            overlay = self._read_files(snap, globals_)
-            if wanted_buckets is not None:
-                overlay = overlay.filter(
-                    self._bucket_expr(snap).isin([int(b) for b in wanted_buckets])
-                )
-            return self._lww_reduce(
-                snap, self._read_files(snap, rest).unionByName(overlay)
-            )
-        dirty = {f.bucket for f in rest if f.kind == "delta"}
-        clean_files = [f for f in rest if f.bucket not in dirty]
-        dirty_files = [f for f in rest if f.bucket in dirty]
-        out = self._read_files(snap, clean_files)
-        if dirty_files:
-            out = out.unionByName(self._lww_reduce(snap, self._read_files(snap, dirty_files)))
-        return out
+        When every bucket is dirty (a compaction rewrite) the reduced part
+        is returned alone, not unioned with an empty frame, so it keeps
+        its bucket placement and the rewrite plans a single exchange."""
+        dirty = {f.bucket for f in files if f.kind == "delta"}
+        clean_files = [f for f in files if f.bucket not in dirty]
+        dirty_files = [f for f in files if f.bucket in dirty]
+        if not dirty_files:
+            return self._read_files(snap, clean_files)
+        reduced = self._lww_reduce(snap, self._read_files(snap, dirty_files))
+        if not clean_files:
+            return reduced
+        return self._read_files(snap, clean_files).unionByName(reduced)
 
     def read(
         self,
@@ -372,11 +330,7 @@ class LakeTable:
         the table entirely — O(touched state), not O(state)."""
         snap = self.snapshot
         wanted = set(buckets)
-        df = self._resolved(
-            snap,
-            [f for f in snap.files if f.bucket in wanted or f.bucket == -1],
-            wanted_buckets=wanted,
-        )
+        df = self._resolved(snap, [f for f in snap.files if f.bucket in wanted])
         if not include_deleted:
             df = df.filter(~F.coalesce(F.col(SYS_DELETED), F.lit(False)))
         if not include_system:
@@ -406,48 +360,45 @@ class LakeTable:
     # -------------------------------------------------------------- writes
 
     def _write_files(
-        self,
-        snap: Snapshot,
-        df: DataFrame,
-        distribute: bool = True,
-        kind: str = "base",
-        layout: str = "bucketed",
-    ) -> list[DataFile]:
-        """Write ``df`` (already aligned to snap.schema); return the new
-        DataFile entries.
+        self, snap: Snapshot, df: DataFrame, kind: str = "base", metrics: tuple = ()
+    ) -> tuple[list[DataFile], dict]:
+        """Write ``df`` (already aligned to snap.schema) bucket-placed, one
+        Hive partition dir per bucket; return the new DataFile entries and
+        the values of the aggregate ``metrics`` columns over the written
+        rows.
 
-        ``layout='bucketed'`` (default): one Hive partition dir per bucket.
-        ``distribute=True`` (Iceberg's hash write-distribution mode)
-        repartitions by bucket first so each bucket is exactly one file —
-        without it, every shuffle task writes a file into every bucket it
-        sees, and the resulting task×bucket file explosion dominates merge
-        cost (measured 4-6× slower at 64 buckets).
+        The metrics are observed AFTER placement, in the write's own
+        stage: observed upstream of the exchange, they are lost when
+        adaptive execution replaces an empty shuffle stage.
 
-        ``layout='plain'``: a GLOBAL overlay — no bucket column, no
-        ``partitionBy``, files recorded with ``bucket == -1`` (meaning
-        "overlaps every bucket"). This removes the O(num_buckets)
-        per-batch floor (dynamic-partition writer setup + one file commit
-        per bucket — profiled at ~2 s @64 buckets for a tiny merge,
-        BASELINE.md round 3) for batches far smaller than the bucket
-        count; compaction folds overlays back into bucketed base files."""
+        Checks the layout invariant the reads rely on — one file per
+        touched bucket — before anything is committed: a bucket that
+        received more than one file fails the write (and its files are
+        removed) instead of silently fragmenting the table."""
         rel = M.new_data_dir(self.root)
         out = os.path.join(self.root, rel)
-        if layout == "plain":
-            df.write.mode("overwrite").parquet(out)
-            return [
-                DataFile(os.path.relpath(p, self.root), -1, snap.schema_id, kind)
-                for p in glob.glob(os.path.join(out, "*.parquet"))
-            ]
-        dfw = df.withColumn("_bucket", self._bucket_expr(snap))
-        if distribute:
-            dfw = dfw.repartition(snap.num_buckets, "_bucket")
+        # a write task reads whole placed partitions, i.e. whole buckets, so
+        # merging them into at most one task per core keeps one file per
+        # bucket; adaptive execution never coalesces a numbered repartition
+        width = min(snap.num_buckets, self.spark.sparkContext.defaultParallelism)
+        dfw = self._place(snap, df).coalesce(width)
+        obs = Observation() if metrics else None
+        if obs is not None:
+            dfw = dfw.observe(obs, *metrics)
+        dfw = dfw.withColumn("_bucket", self._bucket_expr(snap))
         dfw.write.partitionBy("_bucket").mode("overwrite").parquet(out)
         new_files: list[DataFile] = []
         for bdir in glob.glob(os.path.join(out, "_bucket=*")):
             b = int(os.path.basename(bdir).split("=", 1)[1])
             for p in glob.glob(os.path.join(bdir, "*.parquet")):
                 new_files.append(DataFile(os.path.relpath(p, self.root), b, snap.schema_id, kind))
-        return new_files
+        if len(new_files) != len({f.bucket for f in new_files}):
+            shutil.rmtree(out, ignore_errors=True)
+            raise RuntimeError(
+                f"bucket layout violated: {len(new_files)} files for "
+                f"{len({f.bucket for f in new_files})} touched buckets under {rel}"
+            )
+        return new_files, (obs.get if obs is not None else {})
 
     def _commit(self, snap: Snapshot, files: list[DataFile], batch_id: str | None, summary: dict) -> Snapshot:
         ids = snap.batch_ids + ([batch_id] if batch_id else [])
@@ -485,13 +436,13 @@ class LakeTable:
             ),
             snap.schema,
         )
-        obs = Observation()
-        aligned = aligned.observe(obs, F.count(F.lit(1)).alias("rows_written"))
-        files = self._write_files(snap, aligned)
+        files, observed = self._write_files(
+            snap, aligned, metrics=(F.count(F.lit(1)).alias("rows_written"),)
+        )
         self._commit(
             snap, files, batch_id, {"operation": "overwrite", "batch_id": batch_id}
         )
-        return {"skipped": False, "batch_id": batch_id, **obs.get}
+        return {"skipped": False, "batch_id": batch_id, **observed}
 
     def merge(
         self,
@@ -500,8 +451,8 @@ class LakeTable:
         op_col: str | None = "op",
         collect_metrics: bool = True,
         mode: str = "mor",
-        overlay: str = "bucket",
         delta_reduced: bool = False,
+        observe: tuple = (),
     ) -> dict:
         """Key-partitioned MERGE of a change-event delta into the table.
 
@@ -524,18 +475,8 @@ class LakeTable:
           file each — read-optimal, write-amplified.
 
         Because the LWW reduction is associative/commutative, both modes
-        produce identical read() results in any mixture.
-
-        ``overlay`` (mor only): ``'bucket'`` (default) writes the batch
-        bucket-partitioned — one file per touched bucket, bucket-pruned
-        reads stay sharp, but a TINY batch still pays the O(num_buckets)
-        dynamic-partition writer floor. ``'global'`` writes the batch as
-        plain coalesced files tagged ``bucket=-1``: write cost is
-        O(batch) regardless of bucket count (the small-batch/low-traffic-
-        table fast path); until compaction folds them, reads LWW-resolve
-        every bucket and bucket-pruned reads must scan (but filter) the
-        overlay files. Both overlays mix freely and compaction restores
-        the pristine one-file-per-bucket layout.
+        produce identical read() results in any mixture. Either way the
+        new files are written one per touched bucket (``_write_files``).
 
         ``delta_reduced``: promise that ``delta`` already carries at most
         ONE row per key (e.g. the engine's pre-extraction LWW reduce). The
@@ -543,12 +484,21 @@ class LakeTable:
         identical (reducing singletons is the identity), one full
         aggregation pass over the batch saved.
 
-        Returns a metrics dict; a re-applied ``batch_id`` short-circuits to
+        ``observe``: ``(Observation, *aggregate columns)`` to evaluate over
+        the incoming ``delta`` rows (e.g. a pull's row count and cursor
+        max). The delta is bucket-placed first, so the observation runs in
+        the write's own stage: observed upstream of a shuffle it would be
+        lost whenever adaptive execution replaces an empty shuffle stage.
+
+        Returns a metrics dict (``files_written`` always equals
+        ``buckets_touched``); a re-applied ``batch_id`` short-circuits to
         ``{"skipped": True}`` (exactly-once).
         """
         snap = self.snapshot
         if batch_id and batch_id in snap.batch_ids:
             return {"skipped": True, "batch_id": batch_id}
+        if observe:
+            delta = self._place(snap, delta).observe(*observe)
 
         key_cond = F.lit(True)
         for k in snap.key_cols:
@@ -570,101 +520,49 @@ class LakeTable:
             winners = delta_aligned if delta_reduced else self._lww_reduce(snap, delta_aligned)
             kept_files = list(snap.files)
         elif mode == "cow":
-            if any(f.bucket == -1 for f in snap.files):
-                # global overlays overlap every bucket: rewriting only the
-                # delta-touched buckets while keeping the overlay would
-                # duplicate its untouched-bucket rows into unresolvable
-                # base files — fold everything (compaction-grade rewrite)
-                base_files, kept_files = list(snap.files), []
-            else:
-                # bucket pruning: only read base buckets the delta touches.
-                # The pre-scan projects the key columns only — Catalyst
-                # prunes everything else (including upstream pandas UDFs),
-                # so it is cheap.
-                touched_set = {
-                    r[0]
-                    for r in delta_aligned.select(self._bucket_expr(snap).alias("b"))
-                    .distinct()
-                    .collect()
-                }
-                base_files = [f for f in snap.files if f.bucket in touched_set]
-                kept_files = [f for f in snap.files if f.bucket not in touched_set]
+            # bucket pruning: only read base buckets the delta touches.
+            # The pre-scan projects the key columns only — Catalyst
+            # prunes everything else (including upstream pandas UDFs),
+            # so it is cheap.
+            touched_set = {
+                r[0]
+                for r in delta_aligned.select(self._bucket_expr(snap).alias("b"))
+                .distinct()
+                .collect()
+            }
+            base_files = [f for f in snap.files if f.bucket in touched_set]
+            kept_files = [f for f in snap.files if f.bucket not in touched_set]
             base = self._resolved(snap, base_files)
-            # LWW winner per key over (base ∪ delta): one hash aggregation
-            # with map-side partial agg (collapses duplicate/hot keys
-            # before the shuffle).
+            # LWW winner per key over (base ∪ delta), reduced in place
             winners = self._lww_reduce(snap, base.unionByName(delta_aligned))
         else:
             raise ValueError(f"unknown merge mode: {mode!r}")
 
-        obs_out = Observation()
-        if collect_metrics:
-            winners = winners.observe(
-                obs_out,
+        new_files, observed = self._write_files(
+            snap,
+            winners,
+            kind="delta" if mode == "mor" else "base",
+            metrics=(
                 F.count(F.lit(1)).alias("rows_written"),
                 F.sum(F.col(SYS_DELETED).cast("long")).alias("tombstones"),
             )
-
-        # run the merge job with shuffle partitions == num_buckets: the
-        # reduce's output partitioning — Hash(keys, num_buckets) — IS the
-        # bucket function (see _bucket_expr), so the bucketed file write
-        # needs NO further repartition; each row moves through exactly one
-        # shuffle and files land one per touched bucket.
-        #
-        # AQE partition coalescing stays governed by the session (default
-        # ON): an interleaved A/B (see BASELINE.md) measured coalescing-off
-        # 15-35% SLOWER at both 4 and 16 cores on small batches — packing
-        # post-shuffle partitions to ~64 MB beats raw 64-way parallelism
-        # (fewer pandas-UDF worker invocations, fewer tiny files). The
-        # spark.patuha.merge.aqeCoalesce knob exists to re-test this
-        # trade-off on other hardware.
-        if mode == "mor" and overlay == "global":
-            # plain write: no bucket partitioning to satisfy, so no session
-            # conf to pin — the write runs at the session's own shuffle
-            # width with AQE packing partitions to target size
-            new_files = self._write_files(
-                snap, winners, distribute=False, kind="delta", layout="plain"
-            )
-        elif (
-            self.spark.conf.get("spark.patuha.merge.writeWidth", "buckets") == "session"
-        ):
-            # bucketed write WITHOUT pinning the whole plan to num_buckets
-            # partitions: the upstream reduce/UDF stages run at the
-            # session's natural width and an EXPLICIT repartition places
-            # rows into their buckets just before the write. Trade: one
-            # extra shuffle of the reduced winners vs a plan whose
-            # parallelism is divorced from the executor count — the right
-            # side of the trade when cores << num_buckets (a 64-wide
-            # pandas-UDF stage on 4 cores churns ~40 python workers,
-            # measured ~2× slower batches) or cores >> num_buckets (a
-            # 64-partition plan starves a 1000-core cluster).
-            new_files = self._write_files(
-                snap, winners, distribute=True, kind="delta" if mode == "mor" else "base"
-            )
-        else:
-            merge_coalesce = self.spark.conf.get(
-                "spark.patuha.merge.aqeCoalesce",
-                self.spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled"),
-            )
-            with _pinned_shuffle_conf(self.spark, snap.num_buckets, merge_coalesce):
-                new_files = self._write_files(
-                    snap, winners, distribute=False, kind="delta" if mode == "mor" else "base"
-                )
+            if collect_metrics
+            else (),
+        )
         files = kept_files + new_files
         metrics: dict = {
             "skipped": False,
             "batch_id": batch_id,
             "mode": mode,
             "buckets_touched": len({f.bucket for f in new_files}),
+            "files_written": len(new_files),
             # on-disk bytes of this batch's files (driver-side stat of a
-            # handful of paths): feeds the engine's measured bytes/row —
-            # the LWW auto-strategy's width signal
+            # handful of paths)
             "bytes_written": sum(
                 os.path.getsize(os.path.join(self.root, f.path)) for f in new_files
             ),
         }
-        if collect_metrics:
-            metrics.update(obs_out.get)
+        metrics.update(observed)
         self._commit(snap, files, batch_id, {"operation": "merge", **metrics})
         return metrics
 
@@ -677,27 +575,18 @@ class LakeTable:
         This is the copy-on-write primitive the incremental rollup folds
         through: the caller has already read the touched buckets' state and
         recombined it, so re-reading base inside the write (as ``merge``'s
-        cow mode must) would double the state I/O. Runs with shuffle
-        partitions == num_buckets so an upstream groupBy on the key columns
-        leaves rows already bucket-placed (no extra repartition, one file
-        per bucket)."""
+        cow mode must) would double the state I/O."""
         snap = self.snapshot
         if batch_id and batch_id in snap.batch_ids:
             return {"skipped": True, "batch_id": batch_id}
-        if any(f.bucket == -1 for f in snap.files):
-            raise ValueError(
-                "replace_buckets: table has global overlay files (bucket=-1) "
-                "overlapping every bucket; run compact_deltas() first"
-            )
         wanted = set(buckets)
         df = df.withColumn(SYS_DELETED, F.lit(False)).withColumn(SYS_BATCH, F.lit(batch_id))
         if SYS_EVENT not in df.columns:
             df = df.withColumn(SYS_EVENT, F.lit(None).cast("long"))
         aligned = self._align(df, snap.schema)
-        obs = Observation()
-        aligned = aligned.observe(obs, F.count(F.lit(1)).alias("rows_written"))
-        with _pinned_shuffle_conf(self.spark, snap.num_buckets):
-            new_files = self._write_files(snap, aligned, distribute=False, kind="base")
+        new_files, observed = self._write_files(
+            snap, aligned, metrics=(F.count(F.lit(1)).alias("rows_written"),)
+        )
         stray = {f.bucket for f in new_files} - wanted
         if stray:
             raise ValueError(f"replace_buckets: df contains rows outside {sorted(wanted)}: buckets {sorted(stray)}")
@@ -706,7 +595,7 @@ class LakeTable:
             "skipped": False,
             "batch_id": batch_id,
             "buckets_replaced": len(wanted),
-            **obs.get,
+            **observed,
         }
         self._commit(snap, kept + new_files, batch_id, {"operation": "replace_buckets", **metrics})
         return metrics
@@ -737,29 +626,22 @@ class LakeTable:
         receiving deletes keep getting folded, which bounds growth exactly
         where growth happens."""
         snap = self.snapshot
-        if any(f.bucket == -1 for f in snap.files):
-            # a global overlay overlaps every bucket: fold the whole table
-            # back to the pristine one-file-per-bucket layout
-            targets = {f.bucket for f in snap.files} | {-1}
-            to_rewrite, kept = list(snap.files), []
-        else:
-            per_bucket: dict[int, int] = {}
-            for f in snap.files:
-                if f.kind == "delta":
-                    per_bucket[f.bucket] = per_bucket.get(f.bucket, 0) + 1
-            targets = {b for b, n in per_bucket.items() if n > max_delta_files_per_bucket}
-            if not targets:
-                return 0
-            to_rewrite = [f for f in snap.files if f.bucket in targets]
-            kept = [f for f in snap.files if f.bucket not in targets]
+        per_bucket: dict[int, int] = {}
+        for f in snap.files:
+            if f.kind == "delta":
+                per_bucket[f.bucket] = per_bucket.get(f.bucket, 0) + 1
+        targets = {b for b, n in per_bucket.items() if n > max_delta_files_per_bucket}
+        if not targets:
+            return 0
+        to_rewrite = [f for f in snap.files if f.bucket in targets]
+        kept = [f for f in snap.files if f.bucket not in targets]
         resolved = self._resolved(snap, to_rewrite)
         if purge_tombstones_below is not None:
             resolved = resolved.filter(
                 (~F.coalesce(F.col(SYS_DELETED), F.lit(False)))
                 | (F.coalesce(F.col(SYS_EVENT), F.lit(-1)) >= F.lit(int(purge_tombstones_below)))
             )
-        with _pinned_shuffle_conf(self.spark, snap.num_buckets):
-            files = kept + self._write_files(snap, resolved, distribute=False)
+        files = kept + self._write_files(snap, resolved)[0]
         self._commit(snap, files, None, {"operation": "compact_deltas", "buckets": len(targets)})
         return len(targets)
 
@@ -855,31 +737,6 @@ class LakeTable:
             )
         return deleted
 
-    def compact_files(self, max_files_per_bucket: int = 1) -> int:
-        """Bin-pack small files: rewrite every bucket that has more than
-        ``max_files_per_bucket`` files into one file (Iceberg's
-        rewrite_data_files analog). Returns buckets compacted. Needed when
-        appends/AQE-split writes fragment a bucket; MERGE itself already
-        writes one file per touched bucket."""
-        snap = self.snapshot
-        if any(f.bucket == -1 for f in snap.files):
-            # global overlays overlap every bucket — fold everything
-            targets = {f.bucket for f in snap.files}
-            to_rewrite, kept = list(snap.files), []
-        else:
-            per_bucket: dict[int, int] = {}
-            for f in snap.files:
-                per_bucket[f.bucket] = per_bucket.get(f.bucket, 0) + 1
-            targets = {b for b, n in per_bucket.items() if n > max_files_per_bucket}
-            if not targets:
-                return 0
-            to_rewrite = [f for f in snap.files if f.bucket in targets]
-            kept = [f for f in snap.files if f.bucket not in targets]
-        df = self._resolved(snap, to_rewrite)
-        files = kept + self._write_files(snap, df, distribute=True)
-        self._commit(snap, files, None, {"operation": "compact_files", "buckets": len(targets)})
-        return len(targets)
-
     def compact_tombstones(self, older_than_event_id: int) -> None:
         """Purge tombstones whose LSN every feed partition has passed —
         safe once no event with a smaller LSN can still arrive."""
@@ -889,5 +746,5 @@ class LakeTable:
             (~F.coalesce(F.col(SYS_DELETED), F.lit(False)))
             | (F.coalesce(F.col(SYS_EVENT), F.lit(-1)) >= F.lit(older_than_event_id))
         )
-        files = self._write_files(snap, kept)
+        files, _ = self._write_files(snap, kept)
         self._commit(snap, files, None, {"operation": "compact_tombstones"})

@@ -202,6 +202,33 @@ def _png_predict(raw: np.ndarray, prev: np.ndarray, ftype: int, bpp: int) -> np.
     return np.where((pa <= pb) & (pa <= pc), a, np.where(pb <= pc, b, c))
 
 
+def _png_file(width: int, height: int, color_type: int, scanlines: bytes) -> bytes:
+    """Assemble a PNG from its filtered scanline stream (default zlib
+    level, so equal scanlines always give equal bytes)."""
+    import zlib
+
+    ihdr = struct.pack(">IIBBBBB", width, height, 8, color_type, 0, 0, 0)
+    return (
+        _PNG_SIG
+        + _png_chunk(b"IHDR", ihdr)
+        + _png_chunk(b"IDAT", zlib.compress(scanlines))
+        + _png_chunk(b"IEND", b"")
+    )
+
+
+def _png_filtered_rows(pixels: np.ndarray, filter_type: int | str, bpp: int) -> bytes:
+    """Scanline stream of ``pixels`` (one row per image row): each row is
+    its filter-type byte followed by the filtered bytes."""
+    out, prev = [], np.zeros(pixels.shape[1], dtype=np.uint8)
+    for y in range(pixels.shape[0]):
+        ftype = (y % 5) if filter_type == "mixed" else int(filter_type)
+        pred = _png_predict(pixels[y], prev, ftype, bpp)
+        filtered = ((pixels[y].astype(np.int32) - pred) % 256).astype(np.uint8)
+        out.append(bytes([ftype]) + filtered.tobytes())
+        prev = pixels[y]
+    return b"".join(out)
+
+
 def synth_png(
     width: int,
     height: int,
@@ -215,44 +242,21 @@ def synth_png(
     deterministic gradient. ``filter_type`` 0-4 applies that scanline
     filter to every row; ``'mixed'`` cycles row % 5 (exercises every
     decoder unfilter path in one file)."""
-    import zlib
-
     ch = _PNG_CHANNELS[color_type]
     if fill is not None and filter_type == 0:
         # solid image, no filtering: every scanline is identical — build
         # the whole raw stream with one bytes multiply instead of a
-        # per-row Python loop through the predictor (the loop is pure
-        # overhead here: filter 0's prediction is zero, so the filtered
-        # bytes ARE the pixel bytes). Same decoded pixels; the IDAT
-        # byte stream differs only in deflate block boundaries, which no
-        # consumer observes (n_bytes is zlib-size-dependent either way).
+        # per-row Python loop through the predictor (filter 0's
+        # prediction is zero, so the filtered bytes ARE the pixel bytes).
+        # Byte-identical to the general path.
         raw = (bytes([0]) + bytes([fill % 256]) * (width * ch)) * height
-        ihdr = struct.pack(">IIBBBBB", width, height, 8, color_type, 0, 0, 0)
-        return (
-            _PNG_SIG
-            + _png_chunk(b"IHDR", ihdr)
-            + _png_chunk(b"IDAT", zlib.compress(raw, 1))
-            + _png_chunk(b"IEND", b"")
-        )
+        return _png_file(width, height, color_type, raw)
     if fill is not None:
         pixels = np.full((height, width * ch), fill % 256, dtype=np.uint8)
     else:
         y, x = np.mgrid[0:height, 0 : width * ch]
         pixels = ((x * 3 + y * 7 + (x % ch)) % 256).astype(np.uint8)
-    out, prev = [], np.zeros(width * ch, dtype=np.uint8)
-    for y in range(height):
-        ftype = (y % 5) if filter_type == "mixed" else int(filter_type)
-        pred = _png_predict(pixels[y], prev, ftype, ch)
-        filtered = ((pixels[y].astype(np.int32) - pred) % 256).astype(np.uint8)
-        out.append(bytes([ftype]) + filtered.tobytes())
-        prev = pixels[y]
-    ihdr = struct.pack(">IIBBBBB", width, height, 8, color_type, 0, 0, 0)
-    return (
-        _PNG_SIG
-        + _png_chunk(b"IHDR", ihdr)
-        + _png_chunk(b"IDAT", zlib.compress(b"".join(out)))
-        + _png_chunk(b"IEND", b"")
-    )
+    return _png_file(width, height, color_type, _png_filtered_rows(pixels, filter_type, ch))
 
 
 def _png_unfilter_row(

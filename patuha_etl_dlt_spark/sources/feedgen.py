@@ -8,7 +8,7 @@ sanitizers — reference behaviors data_processing.py:50-98), and optional
 schema-evolution stages.
 
 The generator is pure numpy/pandas on the driver for test scales; the
-benchmark path (`bench.py`) generates partitions distributively via
+benchmark path (``generate_events_distributed``) generates partitions via
 ``spark.range`` + native column functions so 10^7+ events never sit in
 driver memory.
 """

@@ -37,6 +37,7 @@ from __future__ import annotations
 
 import math
 from dataclasses import dataclass, field
+from decimal import Decimal
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -61,8 +62,8 @@ def infer_dialect(url: str) -> str:
 
 def sql_literal(v, dialect: str = "ansi") -> str:
     """Render a Python value as a safe SQL literal: numerics unquoted
-    (non-finite floats are rejected — ``repr`` of inf/nan is invalid
-    SQL), strings single-quoted with embedded quotes doubled. Under the
+    (Decimals in plain notation; non-finite floats and decimals are
+    rejected — ``repr`` of inf/nan is invalid SQL), strings single-quoted with embedded quotes doubled. Under the
     ``mysql`` dialect backslashes are doubled too: MySQL treats ``\\`` as
     an escape by default, so a trailing backslash in a DB-sourced cursor
     value would otherwise swallow the closing quote (malformed SQL /
@@ -75,6 +76,10 @@ def sql_literal(v, dialect: str = "ansi") -> str:
         return repr(v)
     if isinstance(v, int):
         return repr(v)
+    if isinstance(v, Decimal):
+        if not v.is_finite():
+            raise ValueError(f"non-finite decimal has no SQL literal: {v!r}")
+        return format(v, "f")
     s = str(v)
     if dialect == "mysql":
         s = s.replace("\\", "\\\\")
@@ -94,7 +99,7 @@ class JdbcSourceConfig:
     url: str  # jdbc:mysql://host:3306/db
     table: str
     cursor_col: str | None = None  # reference 'modifier'
-    last_value: object | None = None  # checkpointed cursor (str | int | float)
+    last_value: object | None = None  # checkpointed cursor (str | int | float | Decimal)
     partition_col: str | None = None  # numeric/date col for parallel pull
     lower_bound: str | None = None
     upper_bound: str | None = None

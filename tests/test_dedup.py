@@ -56,34 +56,9 @@ def test_salted_handles_null_order_col(spark):
         assert len(out) == 1 and out[0]["v"] == "y"  # lsn breaks the tie
 
 
-def test_lww_semijoin_matches_agg(spark):
-    """The broadcast semi-join plan selects exactly the rows lww_agg's
-    winners are built from — including keys whose order column is NULL
-    (null-safe join) and keys with a single event."""
-    import datetime as dt
-
-    from patuha_etl_dlt_spark.cdc.dedup import lww_agg, lww_semijoin
-
-    rows = []
-    for i in range(400):
-        k = f"u{i % 60}"
-        ts = None if i % 7 == 0 else dt.datetime(2026, 1, 1 + i % 5)
-        rows.append((k, ts, i, f"payload-{i}"))
-    df = spark.createDataFrame(rows, "url string, warc_ts timestamp, lsn long, body string")
-    want = {
-        (r["url"], r["lsn"]) for r in lww_agg(df, ["url"], ["warc_ts", "lsn"]).collect()
-    }
-    got_rows = lww_semijoin(df, ["url"], ["warc_ts", "lsn"]).collect()
-    got = {(r["url"], r["lsn"]) for r in got_rows}
-    assert got == want and len(got_rows) == len(got) == 60
-    # payload came through untouched (no struct repacking)
-    bodies = {r["lsn"]: r["body"] for r in got_rows}
-    assert all(v == f"payload-{k}" for k, v in bodies.items())
-
-
 def test_lww_plans_agree_property(spark):
-    """Property check: all four physical LWW plans (window, agg, salted,
-    semijoin) select the SAME winner coordinate (key, lsn) on random
+    """Property check: all three physical LWW plans (window, agg, salted)
+    select the SAME winner coordinate (key, lsn) on random
     event sets — including NULL order values, single-event keys, and
     adversarial ties in the order column (lsn, unique, breaks them)."""
     import datetime as dt
@@ -91,7 +66,7 @@ def test_lww_plans_agree_property(spark):
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
 
-    from patuha_etl_dlt_spark.cdc.dedup import lww_agg, lww_salted, lww_semijoin, lww_window
+    from patuha_etl_dlt_spark.cdc.dedup import lww_agg, lww_salted, lww_window
 
     ev = st.tuples(
         st.sampled_from(["a", "b", "c"]),
@@ -113,7 +88,7 @@ def test_lww_plans_agree_property(spark):
             if k not in best or coord > best[k]:
                 best[k] = coord
         want = {(k, lsn) for k, (_, lsn) in best.items()}
-        for plan in (lww_window, lww_agg, lww_salted, lww_semijoin):
+        for plan in (lww_window, lww_agg, lww_salted):
             got = {(r["url"], r["lsn"]) for r in plan(df, ["url"], ["warc_ts", "lsn"]).collect()}
             assert got == want, (plan.__name__, got, want)
 

@@ -98,6 +98,17 @@ def test_mysql_literal_escaping_traps():
         sql_literal(float("nan"), "mysql")
 
 
+def test_decimal_literal_is_plain_numeric():
+    """A DECIMAL cursor renders unquoted, in plain notation, exactly."""
+    from decimal import Decimal
+
+    assert sql_literal(Decimal("10.50"), "mysql") == "10.50"
+    assert sql_literal(Decimal("1E+2"), "ansi") == "100"
+    assert sql_literal(Decimal("-0.000001"), "ansi") == "-0.000001"
+    with pytest.raises(ValueError, match="non-finite"):
+        sql_literal(Decimal("NaN"), "ansi")
+
+
 def test_mysql_identifier_quoting():
     assert quote_ident("users", "mysql") == "`users`"
     assert quote_ident("app.users", "mysql") == "`app`.`users`"

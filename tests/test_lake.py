@@ -195,11 +195,14 @@ def test_null_keys_dropped(spark, table):
 def test_compact_files_and_tombstones(spark, table):
     table.merge(ev(spark, [(1, "I", "a", 1, "A1"), (2, "I", "b", 1, "B1")]), batch_id="b1")
     table.merge(ev(spark, [(3, "D", "a", 5, "X")]), batch_id="b2")
-    # fragment a bucket via append-style extra merge, then compact
+    # stack overlay files on the buckets, then fold them
     table.merge(ev(spark, [(4, "I", "c", 6, "C1")]), batch_id="b3")
     n0 = len(table.snapshot.files)
-    table.compact_files(max_files_per_bucket=1)
-    assert len(table.snapshot.files) <= n0
+    assert table.compact_deltas() > 0
+    files = table.snapshot.files
+    assert len(files) <= n0
+    assert all(f.kind == "base" for f in files)
+    assert len(files) == len({f.bucket for f in files})  # one file per bucket
     assert state(table) == {"b": "B1", "c": "C1"}
     # tombstone for 'a' purged once all partitions passed lsn 3
     assert table.read(include_deleted=True, include_system=True).count() == 3
@@ -369,74 +372,6 @@ def test_point_lookup_prunes_buckets(spark, tmp_path):
     assert len(touched) <= 2 < 8, touched
 
 
-def test_global_overlay_merge_equivalent_and_folds(spark, tmp_path):
-    """overlay='global' (the bucket-count-independent small-batch write
-    path) must produce identical read()/read_buckets() state to bucketed
-    overlays, survive tombstones, refuse replace_buckets until folded, and
-    compact back to one file per bucket."""
-    batches = [
-        [(1, "I", "a", 1, "A1"), (2, "I", "b", 1, "B1"), (3, "I", "c", 1, "C1")],
-        [(4, "U", "a", 2, "A2"), (5, "D", "b", 2, ""), (6, "I", "d", 1, "D1")],
-        [(7, "U", "d", 0, "D0"), (8, "I", "e", 1, "E1")],  # late event loses
-    ]
-    tg = LakeTable.create(
-        spark, str(tmp_path / "g"), PAGES, key_cols="url", order_col="warc_ts", num_buckets=4
-    )
-    tb = LakeTable.create(
-        spark, str(tmp_path / "b"), PAGES, key_cols="url", order_col="warc_ts", num_buckets=4
-    )
-    for i, rows in enumerate(batches):
-        mg = tg.merge(ev(spark, rows), batch_id=f"b{i}", overlay="global")
-        tb.merge(ev(spark, rows), batch_id=f"b{i}")
-        assert mg["skipped"] is False
-    want = {"a": "A2", "c": "C1", "d": "D1", "e": "E1"}
-    assert state(tg) == state(tb) == want
-    assert all(f.bucket == -1 and f.kind == "delta" for f in tg.snapshot.files)
-
-    # bucket-pruned read still resolves overlay rows for exactly the
-    # wanted buckets (overlay files are scanned but filtered)
-    snap = tg.snapshot
-    buckets = {
-        r["url"]: r["b"]
-        for r in ev(spark, batches[0] + batches[1] + batches[2])
-        .select("url", tg._bucket_expr(snap).alias("b")).distinct().collect()
-    }
-    wanted = {buckets["a"], buckets["e"]}
-    got = {r["url"]: r["text"] for r in tg.read_buckets(wanted).collect()}
-    assert got == {u: x for u, x in want.items() if buckets[u] in wanted}
-
-    # replace_buckets is guarded while global overlays exist
-    with pytest.raises(ValueError, match="global overlay"):
-        tg.replace_buckets(tg.read_buckets([0]), [0])
-
-    # exactly-once replay with the global layout
-    assert tg.merge(ev(spark, batches[1]), batch_id="b1", overlay="global")["skipped"] is True
-
-    # compaction folds overlays to the pristine one-file-per-bucket layout
-    assert tg.compact_deltas() > 0
-    assert state(tg) == want
-    files = tg.snapshot.files
-    assert all(f.bucket >= 0 and f.kind == "base" for f in files)
-    per_bucket: dict[int, int] = {}
-    for f in files:
-        per_bucket[f.bucket] = per_bucket.get(f.bucket, 0) + 1
-    assert all(n == 1 for n in per_bucket.values())
-    # deleted key 'b' must not resurrect post-fold
-    assert "b" not in state(tg)
-
-
-def test_global_overlay_then_cow_merge_folds_everything(spark, tmp_path):
-    t = LakeTable.create(
-        spark, str(tmp_path / "gc"), PAGES, key_cols="url", order_col="warc_ts", num_buckets=4
-    )
-    t.merge(ev(spark, [(1, "I", "a", 1, "A1"), (2, "I", "b", 1, "B1")]), batch_id="b0", overlay="global")
-    # a cow merge on a globally-overlaid table performs a full fold (the
-    # overlay overlaps every bucket) — state correct, no -1 files remain
-    t.merge(ev(spark, [(3, "U", "a", 2, "A2"), (4, "I", "c", 1, "C1")]), batch_id="b1", mode="cow")
-    assert state(t) == {"a": "A2", "b": "B1", "c": "C1"}
-    assert all(f.bucket >= 0 for f in t.snapshot.files)
-
-
 def test_delta_reduced_merge_matches_plain(spark, tmp_path):
     """delta_reduced=True on a pre-reduced batch (one winner per key) is
     exactly equivalent — winner choice, tombstones, null-key filter."""
@@ -464,57 +399,102 @@ def test_delta_reduced_merge_matches_plain(spark, tmp_path):
     assert t2.read(include_deleted=True, include_system=True).filter("_deleted").count() == 1
 
 
-def test_read_buckets_under_global_overlay_still_prunes_base(spark, tmp_path):
-    """With a global overlay present, a bucket-pruned read must open ONLY
-    the wanted buckets' base files plus the (small) overlay files — other
-    buckets' base files stay unopened (checked via inputFiles)."""
+def _files_per_bucket(files) -> dict[int, int]:
+    per_bucket: dict[int, int] = {}
+    for f in files:
+        per_bucket[f.bucket] = per_bucket.get(f.bucket, 0) + 1
+    return per_bucket
+
+
+def test_range_fed_merge_writes_one_file_per_bucket(spark, tmp_path):
+    """A delta fed from ``spark.range`` is already clustered on its key,
+    so Spark plans its LWW aggregate with no exchange of its own. Bucket
+    placement must still be explicit: every touched bucket gets exactly
+    one file, not one per input split."""
     t = LakeTable.create(
-        spark, str(tmp_path / "pr"), PAGES, key_cols="url", order_col="warc_ts", num_buckets=4
+        spark, str(tmp_path / "rg"), [("k", "long"), ("v", "string")],
+        key_cols="k", order_col=None, num_buckets=4,
     )
-    rows = [(i, "I", f"u{i}", 1, f"X{i}") for i in range(40)]
-    t.merge(ev(spark, rows), batch_id="b0")
-    t.compact_deltas()  # bucketed base, one file per bucket
-    t.merge(ev(spark, [(100, "U", "u1", 2, "X1b")]), batch_id="b1", overlay="global")
+    delta = spark.range(0, 400, 1, 4).select(
+        F.col("id").alias("k"),
+        F.concat(F.lit("v"), F.col("id").cast("string")).alias("v"),
+        F.col("id").alias("_event_id"),
+    )
+    m = t.merge(delta, batch_id="b0")
+    per_bucket = _files_per_bucket(t.snapshot.files)
+    assert per_bucket == {b: 1 for b in range(4)}, per_bucket
+    assert m["files_written"] == m["buckets_touched"] == 4
+    assert t.read().count() == 400
 
+
+@pytest.mark.parametrize(
+    "columns,keys,rows",
+    [
+        ([("k", "string"), ("v", "long")], ["k"], [(f"key-{i}", i) for i in range(2000)]),
+        ([("k", "int"), ("v", "long")], ["k"], [(i * 7919 - 5000, i) for i in range(2000)]),
+        ([("k", "long"), ("v", "long")], ["k"], [(i * (1 << 33) + i, i) for i in range(2000)]),
+        (
+            [("k", "date"), ("v", "long")],
+            ["k"],
+            [(dt.date(2000, 1, 1) + dt.timedelta(days=i), i) for i in range(2000)],
+        ),
+        (
+            [("a", "string"), ("b", "int"), ("v", "long")],
+            ["a", "b"],
+            [(f"s{i % 37}", i % 53, i) for i in range(2000)],
+        ),
+    ],
+    ids=["string", "int", "long", "date", "composite"],
+)
+def test_partition_id_equals_bucket_expr(spark, tmp_path, columns, keys, rows):
+    """The write path's premise: after bucket placement, a row's Spark
+    partition id IS its bucket (hash partitioning uses the same Murmur3
+    hash, seed 42, as ``_bucket_expr``)."""
+    t = LakeTable.create(
+        spark, str(tmp_path / "pid"), columns, key_cols=keys, order_col=None, num_buckets=7
+    )
     snap = t.snapshot
-    base = {f.bucket: f.path for f in snap.files if f.bucket >= 0}
-    overlay_paths = {f.path for f in snap.files if f.bucket == -1}
-    assert len(base) == 4 and overlay_paths
-
-    wanted = 2
-    opened = {p.split(str(tmp_path / "pr") + "/")[-1] for p in t.read_buckets([wanted]).inputFiles()}
-    assert base[wanted] in opened
-    assert overlay_paths <= opened  # overlays overlap everything: scanned (but filtered)
-    for b, path in base.items():
-        if b != wanted:
-            assert path not in opened  # untouched base never opened
-
-
-def test_merge_write_width_session_equivalent(spark, tmp_path):
-    """spark.patuha.merge.writeWidth=session: the batch plan runs at
-    session width with an explicit bucket repartition before the write —
-    state identical to the pinned default, still one file per bucket."""
-    rows1 = [(i, "I", f"u{i}", 1, f"A{i}") for i in range(40)]
-    rows2 = [(100 + i, "U" if i % 3 else "D", f"u{i}", 2, f"B{i}") for i in range(20)]
-    tp = LakeTable.create(
-        spark, str(tmp_path / "wp"), PAGES, key_cols="url", order_col="warc_ts", num_buckets=8
+    df = spark.createDataFrame(rows, ", ".join(f"{n} {typ}" for n, typ in columns))
+    placed = t._place(snap, df).select(
+        F.spark_partition_id().alias("p"), t._bucket_expr(snap).alias("b")
     )
-    ts_ = LakeTable.create(
-        spark, str(tmp_path / "ws"), PAGES, key_cols="url", order_col="warc_ts", num_buckets=8
-    )
-    tp.merge(ev(spark, rows1), batch_id="b0")
-    tp.merge(ev(spark, rows2), batch_id="b1")
-    spark.conf.set("spark.patuha.merge.writeWidth", "session")
-    try:
-        ts_.merge(ev(spark, rows1), batch_id="b0")
-        ts_.merge(ev(spark, rows2), batch_id="b1")
-    finally:
-        spark.conf.unset("spark.patuha.merge.writeWidth")
-    assert state(tp) == state(ts_)
-    # each commit wrote at most one file per bucket (commit = the
-    # per-write data dir, the second path component)
-    import os
-    from collections import Counter
+    assert placed.filter(F.col("p") != F.col("b")).count() == 0
+    assert placed.select("b").distinct().count() == 7
 
-    counts = Counter((f.bucket, os.path.dirname(f.path)) for f in ts_.snapshot.files)
-    assert all(v == 1 for v in counts.values())
+
+def test_write_rejects_more_than_one_file_per_bucket(spark, tmp_path, monkeypatch):
+    """The one-file-per-bucket invariant is checked before the commit: a
+    write that fragments a bucket raises and commits nothing."""
+    t = LakeTable.create(
+        spark, str(tmp_path / "inv"), PAGES, key_cols="url", order_col="warc_ts", num_buckets=2
+    )
+    v0 = t.snapshot.version
+    rows = [(i, "I", f"u{i}", 1, f"X{i}") for i in range(40)]
+    # without placement every input split writes into every bucket
+    monkeypatch.setattr(LakeTable, "_place", lambda self, snap, df: df.repartition(4))
+    with pytest.raises(RuntimeError, match="bucket layout violated"):
+        t.merge(ev(spark, rows), batch_id="b0", delta_reduced=True)
+    assert t.snapshot.version == v0
+    assert not t.has_batch("b0")
+
+
+def test_empty_writes_keep_their_observed_metrics(spark, tmp_path):
+    """Metrics observed around a bucketed write survive an empty input
+    (adaptive execution replaces an empty shuffle stage, and with it any
+    observation made upstream of the shuffle)."""
+    from pyspark.sql import Observation
+
+    t = LakeTable.create(
+        spark, str(tmp_path / "em"), PAGES, key_cols="url", order_col="warc_ts", num_buckets=4
+    )
+    empty = ev(spark, [(1, "I", "a", 1, "A1")]).filter("_event_id > 1")
+    assert t.overwrite(empty, batch_id="o0")["rows_written"] == 0
+    for i, reduced in enumerate((False, True)):
+        obs = Observation()
+        m = t.merge(
+            empty, batch_id=f"b{i}", delta_reduced=reduced,
+            observe=(obs, F.count(F.lit(1)).alias("n"), F.max("warc_ts").alias("mx")),
+        )
+        assert (m["rows_written"], m["files_written"], m["buckets_touched"]) == (0, 0, 0)
+        assert obs.get == {"n": 0, "mx": None}
+    assert t.read().count() == 0

@@ -291,6 +291,23 @@ def test_decode_media_stdlib_png_roundtrip(spark):
     assert got[902]["n_bytes"] == 0
 
 
+def test_synth_png_solid_fast_path_matches_general_path():
+    """The solid-image fast path (one bytes multiply, no predictor loop)
+    yields the same bytes as the general scanline path for that image."""
+    from patuha_etl_dlt_spark.operators.multimodal import (
+        _PNG_CHANNELS,
+        _png_file,
+        _png_filtered_rows,
+        synth_png,
+    )
+
+    for ct, ch in _PNG_CHANNELS.items():
+        for w, h, fill in ((1, 1, 0), (9, 5, 42), (61, 37, 300)):
+            pixels = np.full((h, w * ch), fill % 256, dtype=np.uint8)
+            general = _png_file(w, h, ct, _png_filtered_rows(pixels, 0, ch))
+            assert synth_png(w, h, fill=fill, color_type=ct) == general, (ct, w, h, fill)
+
+
 def test_ngram_jaccard_prefix_filter_is_exact(docs_df):
     full = {
         (r["id_a"], r["id_b"]): r["jaccard"]

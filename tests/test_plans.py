@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from patuha_etl_dlt_spark.plans import (
     count_exchanges,
     formatted_plan,
+    has_partial_aggregation,
     has_pushed_filter,
     read_schema_columns,
     uses_broadcast_join,
@@ -60,9 +61,9 @@ def test_small_dim_join_broadcasts(spark):
 
 
 def test_merge_plan_single_data_shuffle(spark, tmp_path):
-    """The MERGE write runs with shuffle partitions == num_buckets and the
-    bucket function == shuffle placement, so the written files land one per
-    bucket with no repartition (check by file layout, the observable)."""
+    """The MERGE write places rows with one explicit hash repartition on
+    the keys, whose partition ids ARE the buckets, so the written files
+    land one per bucket (check by file layout, the observable)."""
     from patuha_etl_dlt_spark.cdc.envelope import PAGES_COLUMNS
     from patuha_etl_dlt_spark.lake import LakeTable
 
@@ -80,7 +81,7 @@ def test_merge_plan_single_data_shuffle(spark, tmp_path):
     per_bucket: dict[int, int] = {}
     for f in files:
         per_bucket[f.bucket] = per_bucket.get(f.bucket, 0) + 1
-    # one file per touched bucket (AQE may coalesce but never splits here)
+    # one file per touched bucket
     assert all(v == 1 for v in per_bucket.values()), per_bucket
     assert len(per_bucket) == 8
 
@@ -129,9 +130,9 @@ def test_rollup_partials_map_side_combined(spark, tmp_path):
 
 
 def test_engine_apply_plan_one_shuffle_and_no_second_reduce(spark, tmp_path):
-    """The full apply path (offset filter → sanitize → pre-reduce →
+    """The batch preparation (offset filter → sanitize → pre-reduce →
     extraction) carries exactly ONE shuffle (the map-side-combined LWW
-    groupBy); with pre_reduce on, the merge must NOT re-reduce the batch
+    groupBy); after the pre-reduce the merge must NOT re-reduce the batch
     (delta_reduced), and the literal-map offset filter must not introduce
     a broadcast exchange."""
     import datetime as dt
@@ -176,40 +177,100 @@ def test_engine_apply_plan_one_shuffle_and_no_second_reduce(spark, tmp_path):
         LT._lww_reduce = orig
 
 
-def test_broadcast_lww_plan_keeps_payload_out_of_exchanges(spark, tmp_path):
-    """The broadcast pre-reduce plan: ONE hash exchange total (the
-    column-pruned winner aggregation — which must be map-side combined),
-    a broadcast LEFT SEMI join, and the payload-bearing scan side flows
-    into the pandas UDF with no exchange — the KB-size html/text columns
-    never move through a shuffle."""
+def _record_placements(monkeypatch) -> list:
+    """Record every frame ``LakeTable._place`` returns; the last one of a
+    write is the frame the bucketed writer runs."""
+    from patuha_etl_dlt_spark.lake.table import LakeTable
+
+    placed = []
+    orig = LakeTable._place
+
+    def spy(self, snap, df):
+        out = orig(self, snap, df)
+        placed.append(out)
+        return out
+
+    monkeypatch.setattr(LakeTable, "_place", spy)
+    return placed
+
+
+def _pages_batch(spark, lo: int, n: int):
     import datetime as dt
 
-    from patuha_etl_dlt_spark.cdc import CdcEngine, CheckpointStore
-    from patuha_etl_dlt_spark.cdc.engine import EngineConfig
-    from patuha_etl_dlt_spark.cdc.envelope import PAGES_COLUMNS
-    from patuha_etl_dlt_spark.lake import LakeTable
-    from patuha_etl_dlt_spark.plans import count_exchanges, formatted_plan, has_partial_aggregation
-
-    t = LakeTable.create(
-        spark, str(tmp_path / "blp"), PAGES_COLUMNS, "url", "warc_ts", num_buckets=8
-    )
-    eng = CdcEngine(
-        t, CheckpointStore(str(tmp_path / "blp_cp")),
-        EngineConfig(overlay="global", lww_strategy="broadcast"),
-    )
     rows = [
         (i, i % 4, "U", f"u{i % 50}", dt.datetime(2026, 1, 1), b"<p>x</p>", None, "en", None)
-        for i in range(200)
+        for i in range(lo, lo + n)
     ]
-    df = spark.createDataFrame(
+    return spark.createDataFrame(
         rows,
         "lsn long, partition_id int, op string, url string, warc_ts timestamp, "
         "html binary, text string, lang string, schema_json string",
     )
-    assert eng._lww_use_broadcast(known_rows=len(rows)) is True
-    delta = eng._prepare_delta(df, [], use_broadcast_lww=True)
-    plan = formatted_plan(delta)
-    assert count_exchanges(delta) == 1, plan  # winners agg only
-    assert has_partial_aggregation(delta), plan
-    assert "BroadcastHashJoin" in plan and "LeftSemi" in plan, plan
-    assert "BroadcastExchange" in plan, plan
+
+
+def test_push_apply_plans_two_exchanges(spark, tmp_path, monkeypatch):
+    """Push path: the map-side-combined LWW pre-reduce at session width,
+    then — because the extraction pandas UDF drops the partitioning —
+    one placement of the winners into buckets. Exactly two exchanges."""
+    from patuha_etl_dlt_spark.cdc import CdcEngine, CheckpointStore
+    from patuha_etl_dlt_spark.cdc.envelope import PAGES_COLUMNS
+    from patuha_etl_dlt_spark.lake import LakeTable
+
+    t = LakeTable.create(spark, str(tmp_path / "push"), PAGES_COLUMNS, "url", "warc_ts", num_buckets=8)
+    eng = CdcEngine(t, CheckpointStore(str(tmp_path / "push_cp")))
+    placed = _record_placements(monkeypatch)
+    m = eng.apply_batch(
+        _pages_batch(spark, 0, 200), batch_id="b0", offsets={p: 199 for p in range(4)}, descriptors=[]
+    )
+    plan = formatted_plan(placed[-1])
+    assert count_exchanges(placed[-1]) == 2, plan
+    assert has_partial_aggregation(placed[-1]), plan  # the hot-key combine stays
+    assert m["files_written"] == m["buckets_touched"]
+
+
+def test_pull_merge_plans_one_exchange(spark, tmp_path, monkeypatch):
+    """Pull path: the merge's in-batch LWW reduce is placed on the
+    bucket partitioning, so the write reuses its exchange — one in all."""
+    from patuha_etl_dlt_spark.cdc.orchestrator import SyncOrchestrator
+    from patuha_etl_dlt_spark.config import TableConfig
+
+    def source(spark_, last):
+        rows = [(i % 30, i, f"n{i}") for i in range(120)]
+        return spark_.createDataFrame(rows, "k long, c long, n string").filter(
+            F.col("c") > (-1 if last is None else last)
+        )
+
+    cfg = TableConfig(
+        table="p", merge_key=("k",), cursor="c",
+        columns=(("k", "long"), ("c", "long"), ("n", "string")), num_buckets=4,
+    )
+    orch = SyncOrchestrator(spark, str(tmp_path / "pull"), [cfg], sources={"p": source})
+    placed = _record_placements(monkeypatch)
+    (r,) = orch.pull_cycle("c1")
+    assert r.status == "perfect", r.metrics
+    assert count_exchanges(placed[-1]) == 1, formatted_plan(placed[-1])
+    assert r.metrics["files_written"] == r.metrics["buckets_touched"]
+
+
+def test_compaction_rewrite_plans_one_exchange(spark, tmp_path, monkeypatch):
+    """A compact_deltas rewrite reduces every dirty bucket in place and
+    writes it with no second exchange — also with a tombstone purge."""
+    from patuha_etl_dlt_spark.lake import LakeTable
+
+    t = LakeTable.create(
+        spark, str(tmp_path / "cmp"), [("k", "long"), ("v", "string")], "k", None, num_buckets=4
+    )
+    for b in range(3):
+        rows = [(i, "D" if (i + b) % 7 == 0 else "U", f"v{b}", b * 100 + i) for i in range(40)]
+        t.merge(spark.createDataFrame(rows, "k long, op string, v string, _event_id long"), batch_id=f"b{b}")
+    placed = _record_placements(monkeypatch)
+    for horizon in (None, 150):
+        assert t.compact_deltas(purge_tombstones_below=horizon) > 0
+        assert count_exchanges(placed[-1]) == 1, formatted_plan(placed[-1])
+        files = t.snapshot.files
+        assert len(files) == len({f.bucket for f in files})
+        # dirty one bucket again for the purge pass
+        t.merge(
+            spark.createDataFrame([(1, "U", "x", 1000)], "k long, op string, v string, _event_id long"),
+            batch_id=f"again{horizon}",
+        )

@@ -383,12 +383,12 @@ def test_concurrent_pull_cycle_matches_sequential(spark, tmp_path):
 
 
 def test_pull_loop_overlay_passthrough_and_compaction_cadence(spark, tmp_path):
-    """ADVICE r4: pull cycles must honor EngineConfig.overlay AND advance
-    the engine's compaction cadence — without it a long-running
-    run_pull_loop in mor mode accretes one overlay file-set per cycle
-    forever. Global-overlay pulls write bucket==-1 files; every
-    compact_every cycles the fold restores the bucketed layout, so the
-    file count stays bounded over many cycles."""
+    """Pull cycles write merge-on-read overlays one file per touched
+    bucket AND advance the engine's compaction cadence — without it a
+    long-running run_pull_loop in mor mode accretes one overlay file-set
+    per cycle forever. Every compact_every cycles the fold restores one
+    base file per bucket, so the file count stays bounded over many
+    cycles."""
     from patuha_etl_dlt_spark.cdc.engine import EngineConfig
 
     feed = {"n": 4}
@@ -405,13 +405,15 @@ def test_pull_loop_overlay_passthrough_and_compaction_cadence(spark, tmp_path):
     )
     orch = SyncOrchestrator(
         spark, str(tmp_path / "sync"), [cfg], sources={"pc": source},
-        engine_config=EngineConfig(overlay="global", compact_every=3),
+        engine_config=EngineConfig(compact_every=3),
     )
     (r1,) = orch.pull_cycle("c1")
     assert r1.status == "perfect"
     t = orch.engine("pc").table
-    # overlay honored: the pull merge wrote global (bucket==-1) files
-    assert {f.bucket for f in t.snapshot.files if f.kind == "delta"} == {-1}
+    # the pull merge wrote bucket-placed overlays, one file per bucket
+    deltas = [f for f in t.snapshot.files if f.kind == "delta"]
+    assert deltas and all(f.bucket >= 0 for f in deltas)
+    assert r1.metrics["files_written"] == r1.metrics["buckets_touched"] == len(deltas)
 
     file_counts = []
     for i in range(2, 14):
@@ -427,11 +429,22 @@ def test_pull_loop_overlay_passthrough_and_compaction_cadence(spark, tmp_path):
     assert len(rows) == feed["n"] and rows[0] == "n0"
 
 
-def test_snapshot_diff_pull_respects_overlay_and_compacts(spark, tmp_path):
-    """The snapshot_diff pull path passes overlay + delta_reduced through
-    and rides the same compaction cadence (its per-cycle full table read
-    degrades monotonically if overlays accrete)."""
+def test_snapshot_diff_pull_respects_overlay_and_compacts(spark, tmp_path, monkeypatch):
+    """The snapshot_diff pull path writes bucket-placed overlays, passes
+    delta_reduced through and rides the same compaction cadence (its
+    per-cycle full table read degrades monotonically if overlays
+    accrete)."""
     from patuha_etl_dlt_spark.cdc.engine import EngineConfig
+    from patuha_etl_dlt_spark.lake import LakeTable
+
+    merge_kwargs = []
+    orig_merge = LakeTable.merge
+
+    def spy(self, *a, **kw):
+        merge_kwargs.append(kw)
+        return orig_merge(self, *a, **kw)
+
+    monkeypatch.setattr(LakeTable, "merge", spy)
 
     state = {"rows": {i: f"v{i}" for i in range(6)}}
 
@@ -446,17 +459,24 @@ def test_snapshot_diff_pull_respects_overlay_and_compacts(spark, tmp_path):
     )
     orch = SyncOrchestrator(
         spark, str(tmp_path / "sync"), [cfg], sources={"sd": source},
-        engine_config=EngineConfig(overlay="global", compact_every=2, extract_text=False),
+        engine_config=EngineConfig(compact_every=2, extract_text=False),
     )
-    orch.pull_cycle("c1")
+    (r1,) = orch.pull_cycle("c1")
     t = orch.engine("sd").table
-    assert {f.bucket for f in t.snapshot.files if f.kind == "delta"} == {-1}
+    deltas = [f for f in t.snapshot.files if f.kind == "delta"]
+    assert deltas and all(f.bucket >= 0 for f in deltas)
+    assert r1.metrics["files_written"] == r1.metrics["buckets_touched"] == len(deltas)
+    assert [kw.get("delta_reduced") for kw in merge_kwargs] == [True]
     state["rows"][6] = "v6"
     del state["rows"][0]  # upstream DELETE propagates via the diff
     orch.pull_cycle("c2")  # cadence fires here (compact_every=2)
-    assert all(f.bucket >= 0 for f in t.snapshot.files)
+    files = t.snapshot.files
+    assert all(f.kind == "base" for f in files)
+    assert len(files) == len({f.bucket for f in files})
     got = {r["k"]: r["v"] for r in t.read().collect()}
     assert got == state["rows"]
+    (r3,) = orch.pull_cycle("c3")  # upstream unchanged: an empty diff
+    assert r3.status == "perfect" and r3.metrics["changes"] == 0, r3.metrics
 
 
 def test_cursor_type_flip_fails_before_merge(spark, tmp_path):
@@ -495,6 +515,53 @@ def test_cursor_type_flip_fails_before_merge(spark, tmp_path):
     assert eng.table.snapshot.version == v_before
     assert eng.cp.cursor() == 11
     assert not eng.cp.has_batch("c2:w")
+
+
+def test_decimal_cursor_pulls_advance_numerically(spark, tmp_path):
+    """A DECIMAL cursor column survives consecutive pull cycles (the
+    checkpoint used to store it as a string, which the next cycle's type
+    guard rejected), is pushed to the source as a plain numeric literal,
+    and advances numerically: 9.50 < 10.50, though "9.50" > "10.50"."""
+    from decimal import Decimal
+
+    db = tmp_path / "decdb"
+    jvm = spark._jvm
+    jvm.java.lang.Class.forName(DRIVER)
+    conn = jvm.java.sql.DriverManager.getConnection(f"jdbc:derby:{db};create=true")
+    st = conn.createStatement()
+    try:
+        st.executeUpdate("CREATE TABLE px (id BIGINT PRIMARY KEY, c DECIMAL(10,2), v VARCHAR(16))")
+        for i in range(1, 10):
+            st.executeUpdate(f"INSERT INTO px VALUES ({i}, {i}.50, 'a{i}')")
+        # Derby folds unquoted identifiers to upper-case
+        cfg = TableConfig(
+            table="px", merge_key=("ID",), cursor="C",
+            columns=(("ID", "long"), ("C", "decimal(10,2)"), ("V", "string")), num_buckets=4,
+        )
+        src = JdbcSourceConfig(url=f"jdbc:derby:{db}", table="px", cursor_col="c", driver=DRIVER)
+        orch = SyncOrchestrator(spark, str(tmp_path / "sync"), [cfg], sources={"px": src})
+        (r1,) = orch.pull_cycle("c1")
+        assert r1.status == "perfect", r1.metrics
+        eng = orch.engine("px")
+        assert eng.cp.cursor() == Decimal("9.50")
+
+        st.executeUpdate("INSERT INTO px VALUES (10, 10.50, 'a10')")
+        st.executeUpdate("UPDATE px SET c = 11.50, v = 'b3' WHERE id = 3")
+        (r2,) = orch.pull_cycle("c2")
+        assert r2.status == "perfect", r2.metrics
+        assert r2.metrics["last_value"] == Decimal("9.50")
+        assert r2.metrics["rows_pulled"] == 2  # only rows above 9.50
+        assert "9.50" in r2.metrics["source_query"]
+        assert eng.cp.cursor() == Decimal("11.50")
+
+        (r3,) = orch.pull_cycle("c3")  # nothing new: cursor holds
+        assert r3.status == "perfect" and r3.metrics["rows_pulled"] == 0, r3.metrics
+        assert eng.cp.cursor() == Decimal("11.50")
+        got = {r["ID"]: r["V"] for r in eng.table.read().collect()}
+        assert got == {**{i: f"a{i}" for i in range(1, 11)}, 3: "b3"}
+    finally:
+        st.close()
+        conn.close()
 
 
 def test_diff_shuffle_partitions_sized_from_table_bytes(spark, tmp_path):
