@@ -138,11 +138,7 @@ def cdc_apply_deletes_lake(spark, sf_dir):
         num_buckets=8,
     )
     for i in range(3):
-        t.merge(
-            delta.filter(F.col("_event_id") % 3 == i),
-            batch_id=f"b{i}",
-            collect_metrics=False,
-        )
+        t.merge(delta.filter(F.col("_event_id") % 3 == i), batch_id=f"b{i}")
     return t.read().select("user_id", "ts", "event_type", "value", "props")
 
 

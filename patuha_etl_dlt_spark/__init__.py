@@ -17,7 +17,8 @@ A brand-new engine with the capabilities of the reference
 
 No Iceberg/Delta jars exist in this environment, so the lake layer is a
 minimal, self-contained snapshot format on Parquet (atomic manifest
-pointer, bucket-pruned copy-on-write merge, column-ID schema evolution,
+pointer, merge-on-read overlays with bucket-pruned reads and compaction,
+column-ID schema evolution,
 snapshot-summary batch ids) — the same contract Iceberg would provide.
 """
 

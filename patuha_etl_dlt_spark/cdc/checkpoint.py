@@ -143,8 +143,9 @@ class CheckpointStore:
             "offsets": {int(k): int(v) for k, v in st["offsets"].items()},
         }
         recent = self.metrics_tail(10)
+        # every commit records its seconds; only event applies count events
         applied = sum(m.get("events_applied", 0) for m in recent)
-        secs = sum(m.get("seconds", 0.0) for m in recent)
+        secs = sum(m.get("seconds", 0.0) for m in recent if "events_applied" in m)
         out["recent_events_applied"] = applied
         out["recent_events_per_sec"] = round(applied / secs, 1) if secs else None
         out["last_batch_metrics"] = recent[-1] if recent else None

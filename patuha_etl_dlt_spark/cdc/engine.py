@@ -12,7 +12,9 @@ one declarative plan):
 Exactly-once across the two writes (MERGE, then offsets — "two writes, one
 logical commit", SURVEY.md §7): the MERGE snapshot records the batch id;
 on restart, an already-merged batch skips the MERGE and just re-commits
-offsets, so any crash point converges.
+offsets, so any crash point converges. That sequence lives in one place,
+``CdcEngine.commit_once``; the push apply, the snapshot seed and the
+orchestrator's pulls each supply only their write step.
 
 Scale shape of one batch: two exchanges. The LWW pre-reduce
 (map-side-combined ``max_by``, at the session's shuffle width) runs
@@ -28,7 +30,7 @@ from __future__ import annotations
 import os
 import time
 import uuid
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
@@ -56,12 +58,10 @@ class EngineConfig:
     text_col: str = "text"
     extract_text: bool = True
     sanitize: bool = True
-    # 'mor' appends batch-reduced overlay files (write cost O(delta));
-    # 'cow' rewrites touched buckets (read-optimal). See LakeTable.merge.
-    merge_mode: str = "mor"
     # fold merge-on-read overlays into base files every N batches
     # (reference hygiene analog: staging truncation each cycle,
-    # pipeline_management.py:1106-1120). None = caller-managed.
+    # pipeline_management.py:1106-1120). 1 = the read-optimized layout
+    # (one base file per bucket after every commit); None = caller-managed.
     compact_every: int | None = 8
     # on the compaction cadence, also drop snapshot manifests (and data
     # files no kept snapshot references) beyond the last K — bounds
@@ -252,6 +252,31 @@ class CdcEngine:
 
     # ------------------------------------------------------------- apply
 
+    def commit_once(self, batch_id: str, write, heal_offsets=None) -> dict:
+        """The exactly-once commit step every table write goes through
+        (push apply, snapshot seed, and the orchestrator's pulls).
+
+        ``write()`` performs the table write with ``batch_id`` stamped into
+        the lake snapshot and returns ``(metrics, offsets, cursor)``; then
+        the compaction cadence advances and the checkpoint commits. Two
+        writes, one logical commit: a crash between the lake snapshot and
+        the checkpoint is healed here on replay — the batch is already in
+        the table, so nothing is rewritten and only the checkpoint is
+        re-committed, with the offsets ``heal_offsets()`` recomputes (none
+        when it is not given). A healed pull leaves its cursor unchanged:
+        the next cycle re-pulls the gap and the LWW merge converges."""
+        t0 = time.time()
+        if self.table.has_batch(batch_id):
+            if not self.cp.has_batch(batch_id):
+                offsets = heal_offsets() if heal_offsets is not None else {}
+                self.cp.commit(batch_id, offsets, {"skipped_merge": True})
+            return {"skipped": True, "batch_id": batch_id}
+        metrics, offsets, cursor = write()
+        self.maybe_compact(metrics)
+        metrics["seconds"] = round(time.time() - t0, 3)
+        self.cp.commit(batch_id, offsets, metrics, cursor=cursor)
+        return metrics
+
     def apply_batch(
         self,
         events: DataFrame,
@@ -269,17 +294,22 @@ class CdcEngine:
         N→4N scaling on small batches). When either is absent the engine
         falls back to the column-pruned discovery pre-pass."""
         batch_id = batch_id or uuid.uuid4().hex
-        t0 = time.time()
 
-        if self.table.has_batch(batch_id):
-            # crash healed: MERGE landed, offsets may not have — recompute
-            # them from the batch and re-commit the checkpoint (idempotent).
-            if offsets is None:
-                offsets, _, _ = self._offsets_and_counts(self._filter_new(events))
-            if not self.cp.has_batch(batch_id):
-                self.cp.commit(batch_id, offsets, {"skipped_merge": True})
-            return {"skipped": True, "batch_id": batch_id}
+        def heal_offsets():
+            # the batch already merged: recompute its offsets from it
+            if offsets is not None:
+                return offsets
+            return self._offsets_and_counts(self._filter_new(events))[0]
 
+        return self.commit_once(
+            batch_id,
+            lambda: self._apply_write(events, batch_id, offsets, descriptors),
+            heal_offsets,
+        )
+
+    def _apply_write(self, events, batch_id, offsets, descriptors):
+        """``apply_batch``'s write step: filter, evolve, prepare and MERGE
+        the batch; returns ``(metrics, offsets, None)`` for the commit."""
         # one column-pruned pre-pass (offsets + counts + schema descriptors
         # — partition_id/lsn/op/schema_json only) unless the source already
         # told us; the heavy payload columns are read exactly once, inside
@@ -306,16 +336,13 @@ class CdcEngine:
             )
         else:
             new_off, counts, descriptors = self._offsets_and_counts(fresh)
-        renames = evolution.evolve_table(self.table, None, descriptors=descriptors)
+        renames = evolution.evolve_table(self.table, descriptors)
         if self.cfg.quarantine_dir:
-            fresh, n_quarantined = self._quarantine(fresh, batch_id)
-            counts["quarantined"] = n_quarantined
-        delta = self._prepare_delta(fresh, renames)
+            fresh, counts["quarantined"] = self._quarantine(fresh, batch_id)
         metrics = self.table.merge(
-            delta,
+            self._prepare_delta(fresh, renames),
             batch_id=batch_id,
             op_col=self.cfg.op_col,
-            mode=self.cfg.merge_mode,
             # the pre-reduce already left one winner per key — the merge
             # skips its in-batch reduction (one agg pass over the batch)
             delta_reduced=True,
@@ -335,14 +362,8 @@ class CdcEngine:
                 delete_events=int(got.get("delete_events") or 0),
             )
         metrics.update(counts)
-        self.maybe_compact(metrics)
-        metrics["evolution_ops"] = [
-            {"kind": o.kind, "name": o.name, "new_name": o.new_name, "typ": o.typ}
-            for o in renames
-        ]
-        metrics["seconds"] = round(time.time() - t0, 3)
-        self.cp.commit(batch_id, new_off, metrics)
-        return metrics
+        metrics["evolution_ops"] = evolution.ops_json(renames)
+        return metrics, new_off, None
 
     def _gc_safe(self) -> bool:
         """The min-offset tombstone horizon is only sound when LWW order is
@@ -353,10 +374,11 @@ class CdcEngine:
         return self.table.snapshot.order_cols[0] == SYS_EVENT
 
     def maybe_compact(self, metrics: dict | None = None) -> dict | None:
-        """Advance the compaction cadence by one committed merge and fold
-        when it fires — called by ``apply_batch`` AND by the pull paths
-        (``SyncOrchestrator._pull_one``), so a long-running ``run_pull_loop``
-        in mor mode cannot accrete one overlay file-set per cycle forever.
+        """Advance the compaction cadence by one committed write and fold
+        when it fires — called by ``commit_once``, so every write path
+        (push, pull, snapshot seed) rides it and a long-running
+        ``run_pull_loop`` cannot accrete one overlay file-set per cycle
+        forever.
 
         The in-memory counter is seeded from the checkpoint once:
         re-parsing the whole state document every batch is a per-batch
@@ -366,7 +388,7 @@ class CdcEngine:
         advanced past it and the offset filter drops any replay below it;
         ONLY when the table's LWW order is the LSN itself, see
         ``_gc_safe``) and (b) expires old snapshots when configured."""
-        if not (self.cfg.compact_every and self.cfg.merge_mode == "mor"):
+        if not self.cfg.compact_every:
             return metrics
         if self._n_batches is None:
             self._n_batches = self.cp.read()["n_batches_total"]
@@ -393,10 +415,10 @@ class CdcEngine:
     def seed_snapshot(self, snapshot_df: DataFrame, batch_id: str = "seed") -> dict:
         """Initial full load — the reference's full-refresh/replace path
         (pipeline_management.py:1225-1506) as one overwrite commit."""
-        m = self.table.overwrite(snapshot_df, batch_id=batch_id)
-        if not m.get("skipped"):
-            self.cp.commit(batch_id, {}, m)
-        return m
+        return self.commit_once(
+            batch_id,
+            lambda: (self.table.overwrite(snapshot_df, batch_id=batch_id), {}, None),
+        )
 
     # --------------------------------------------------------------- loop
 

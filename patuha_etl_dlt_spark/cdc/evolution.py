@@ -7,17 +7,14 @@ INFORMATION_SCHEMA diff + ``ALTER TABLE ADD COLUMN``
 (``/root/reference/source/schema_management.py:11-57``) — add-only and
 name-based; columns are never dropped (``README.MD:395``), a rule we keep.
 
-Scale note: ``distinct(schema_json)`` over a batch is a tiny aggregation
-(a handful of distinct descriptors per batch at worst); the resulting DDL
+Scale note: the engine collects the distinct ``schema_json`` descriptors
+inside its offsets pass (a handful per batch at worst); the resulting DDL
 is metadata-only, so evolution costs no data rewrite at any scale.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+from dataclasses import asdict, dataclass
 
 from patuha_etl_dlt_spark.cdc.envelope import parse_descriptor
 from patuha_etl_dlt_spark.lake.metadata import WIDENINGS, Schema, type_name
@@ -105,29 +102,17 @@ def evolve_from_source(table: LakeTable, spark_schema) -> list[EvolutionOp]:
     return ops
 
 
-def evolve_table(
-    table: LakeTable,
-    events: DataFrame | None,
-    schema_col: str = "schema_json",
-    descriptors: list[str] | None = None,
-) -> list[EvolutionOp]:
-    """Detect envelope schemas and evolve ``table``. Returns the ops
-    applied (renames are applied with their pre-rename names, so callers
-    can remap delta columns that still carry old names).
+def ops_json(ops: list[EvolutionOp]) -> list[dict]:
+    """The ``evolution_ops`` commit metric: one dict per applied op,
+    without its unset fields."""
+    return [{k: v for k, v in asdict(o).items() if v is not None} for o in ops]
 
-    Pass ``descriptors`` directly when they were already collected in an
-    earlier aggregation pass (the engine folds this into its offsets job
-    to save a scan); otherwise they are read from ``events``."""
-    if descriptors is None:
-        if events is None or schema_col not in events.columns:
-            return []
-        descriptors = [
-            r[0]
-            for r in events.select(schema_col)
-            .filter(F.col(schema_col).isNotNull())
-            .distinct()
-            .collect()
-        ]
+
+def evolve_table(table: LakeTable, descriptors: list[str]) -> list[EvolutionOp]:
+    """Evolve ``table`` to hold every envelope schema in ``descriptors``
+    (the engine collects them in its offsets pass). Returns the ops
+    applied (renames are applied with their pre-rename names, so callers
+    can remap delta columns that still carry old names)."""
     descriptors = [d for d in descriptors if d is not None]
     applied: list[EvolutionOp] = []
     # deterministic order: ascending max field id ⇒ older descriptors first

@@ -153,8 +153,10 @@ class SyncOrchestrator:
 
     # -------------------------------------------------------------- cycle
 
-    def _apply_one(self, name: str, df: DataFrame, batch_id: str) -> SyncResult:
-        cfg = self.configs[name]
+    def _run_table(self, name: str, batch_id: str, step) -> SyncResult:
+        """One table's part of a cycle: ``step(name, engine, bid)`` runs
+        with retry under the table's FAIR pool; any failure becomes a
+        'failed' result instead of aborting the cycle."""
         eng = self._engines[name]
         bid = f"{batch_id}:{name}"
         # a per-table FAIR pool: with spark.scheduler.mode=FAIR set on the
@@ -163,40 +165,47 @@ class SyncOrchestrator:
         # are per-thread, so this is concurrency-safe (unlike session conf).
         self.spark.sparkContext.setLocalProperty("spark.scheduler.pool", f"table-{name}")
         try:
-            if cfg.mode == "snapshot":
-                m = with_retry(lambda: eng.seed_snapshot(df, batch_id=bid), self.retry_policy)
-            else:
-                m = with_retry(lambda: eng.apply_batch(df, batch_id=bid), self.retry_policy)
-            status = "skipped" if m.get("skipped") else "perfect"
-            return SyncResult(name, bid, status, m)
+            m = with_retry(lambda: step(name, eng, bid), self.retry_policy)
+            return SyncResult(name, bid, "skipped" if m.get("skipped") else "perfect", m)
         except Exception as e:  # noqa: BLE001
             return SyncResult(name, bid, "failed", {"error": str(e)})
         finally:
             self.spark.sparkContext.setLocalProperty("spark.scheduler.pool", None)
 
-    def run_cycle(self, batches: dict[str, DataFrame], batch_id: str) -> list[SyncResult]:
-        """One sync cycle: apply each table's pending delta (cdc mode) or
-        snapshot (snapshot mode), with retry; failures are queued for the
-        next cycle (re-application is idempotent). Tables are independent
-        single-writer, so with ``max_concurrency > 1`` they run from a
-        driver thread pool (the Spark-native analog of the reference's
-        BATCH_SIZE-of-8 pipelining); results keep input order and the
-        retry queue is fed from the coordinating thread only."""
+    def _fan_out(self, names: list[str], batch_id: str, step) -> list[SyncResult]:
+        """``_run_table`` every table in ``names`` — from a driver thread pool
+        when ``max_concurrency > 1`` (tables are independent single-writer,
+        the Spark-native analog of the reference's BATCH_SIZE-of-8
+        pipelining). Results keep input order; failures are queued for the
+        next cycle from the coordinating thread only."""
         # instantiate engines up front (dict mutation stays single-threaded)
-        for name in batches:
+        for name in names:
             self.engine(name)
-        items = list(batches.items())
-        if self.max_concurrency > 1 and len(items) > 1:
+
+        def run(name: str) -> SyncResult:
+            return self._run_table(name, batch_id, step)
+
+        if self.max_concurrency > 1 and len(names) > 1:
             with ThreadPoolExecutor(max_workers=self.max_concurrency) as pool:
-                results = list(
-                    pool.map(lambda kv: self._apply_one(kv[0], kv[1], batch_id), items)
-                )
+                results = list(pool.map(run, names))
         else:
-            results = [self._apply_one(name, df, batch_id) for name, df in items]
+            results = [run(n) for n in names]
         for r in results:
             if r.status == "failed":
                 self.retry_queue.push(r.table, r.batch_id)
         return results
+
+    def run_cycle(self, batches: dict[str, DataFrame], batch_id: str) -> list[SyncResult]:
+        """One sync cycle: apply each table's pending delta (cdc mode) or
+        snapshot (snapshot mode), with retry; failures are queued for the
+        next cycle (re-application is idempotent)."""
+
+        def apply(name: str, eng: CdcEngine, bid: str) -> dict:
+            if self.configs[name].mode == "snapshot":
+                return eng.seed_snapshot(batches[name], bid)
+            return eng.apply_batch(batches[name], bid)
+
+        return self._fan_out(list(batches), batch_id, apply)
 
     # --------------------------------------------------------------- pull
 
@@ -245,160 +254,119 @@ class SyncOrchestrator:
         row = eng.table.read().agg(F.max(F.col(cursor_col)).alias("m")).first()
         return _json_cursor(row["m"])
 
-    def _pull_one(self, name: str, batch_id: str) -> SyncResult:
+    def _pull_one(self, name: str, eng: CdcEngine, bid: str) -> dict:
+        """One table's pull through the engine's exactly-once commit step,
+        which heals a replayed cycle id before any source scan runs."""
+        write = {
+            "snapshot": self._snapshot_write,
+            "snapshot_diff": self._diff_write,
+        }.get(self.configs[name].mode, self._cursor_write)
+        return eng.commit_once(bid, lambda: write(name, eng, bid))
+
+    def _snapshot_write(self, name: str, eng: CdcEngine, bid: str):
+        """Full-refresh pull: the scanned source replaces the table."""
+        df, desc = self._build_scan(name, None)
+        return {**eng.table.overwrite(df, batch_id=bid), "source_query": desc}, {}, None
+
+    def _cursor_write(self, name: str, eng: CdcEngine, bid: str):
+        """Cursor pull: scan above the checkpointed cursor, merge, and hand
+        the advanced cursor to the commit."""
         cfg = self.configs[name]
-        eng = self._engines[name]
-        bid = f"{batch_id}:{name}"
-        self.spark.sparkContext.setLocalProperty("spark.scheduler.pool", f"table-{name}")
-        try:
-            if cfg.mode == "snapshot":
-                df, desc = self._build_scan(name, None)
-                m = with_retry(lambda: eng.seed_snapshot(df, batch_id=bid), self.retry_policy)
-                m["source_query"] = desc
-                return SyncResult(name, bid, "skipped" if m.get("skipped") else "perfect", m)
+        last = eng.cp.cursor()
+        if last is None:
+            last = self._derive_cursor_from_target(eng, cfg.cursor)
+        df, desc = self._build_scan(name, last)
+        # fail a cursor TYPE FLIP before any state lands: the checkpoint's
+        # monotone guard would raise inside commit — after the MERGE —
+        # wedging the cycle on the heal path (every retry skips the merge
+        # and re-raises on re-commit). The source column's type is known
+        # from the introspected scan schema, so the mismatch is detectable
+        # up front, where failing is clean and retryable.
+        _check_cursor_type(last, df.schema[cfg.cursor].dataType)
+        # source-introspection evolution BEFORE apply: a column
+        # added/widened upstream evolves the lake table as metadata-only
+        # ops, then the batch (old rows NULL-filled, narrow rows cast up)
+        # merges cleanly
+        ops = evolution.evolve_from_source(eng.table, df.schema)
+        obs = Observation()
+        m = eng.table.merge(
+            df,
+            batch_id=bid,
+            op_col=eng.cfg.op_col,
+            observe=(
+                obs,
+                F.max(F.col(cfg.cursor)).alias("cursor_max"),
+                F.count(F.lit(1)).alias("rows_pulled"),
+            ),
+        )
+        got = obs.get
+        new_cursor = _json_cursor(got["cursor_max"])
+        # an empty pull still commits the (derived) cursor, so a cold
+        # checkpoint warms up and never re-derives again
+        cursor = new_cursor if new_cursor is not None else last
+        m.update(
+            rows_pulled=int(got["rows_pulled"] or 0),
+            last_value=last,
+            cursor=cursor,
+            source_query=desc,
+            evolution_ops=evolution.ops_json(ops),
+        )
+        return m, {}, cursor
 
-            if cfg.mode == "snapshot_diff":
-                # full pull, but MERGE only the derived I/U/D changes —
-                # the mode that propagates upstream DELETEs (a cursor can
-                # never see them) at O(changes) write cost vs the full
-                # refresh's O(target) rewrite. See cdc.snapshot_diff.
-                from patuha_etl_dlt_spark.cdc.snapshot_diff import (
-                    diff_shuffle_partitions,
-                    diff_snapshots,
-                )
+    def _diff_write(self, name: str, eng: CdcEngine, bid: str):
+        """Snapshot-diff pull: full pull, but MERGE only the derived
+        I/U/D changes — the mode that propagates upstream DELETEs (a
+        cursor can never see them) at O(changes) write cost vs the full
+        refresh's O(target) rewrite. See cdc.snapshot_diff."""
+        from patuha_etl_dlt_spark.cdc.snapshot_diff import (
+            diff_shuffle_partitions,
+            diff_snapshots,
+        )
 
-                def one_diff() -> dict:
-                    df, desc = self._build_scan(name, None)
-                    ops = evolution.evolve_from_source(eng.table, df.schema)
-                    snap_v = eng.table.snapshot.version
-                    # size the diff's full-outer-join shuffle from the
-                    # TABLE's bytes, not the session constant (the round-5
-                    # 32 M-row spill cliff): both inputs are hash-placed on
-                    # the keys at that width, so the join reuses those
-                    # exchanges; the merge then places the changes into
-                    # buckets for its write
-                    diff_width = diff_shuffle_partitions(
-                        eng.table,
-                        int(self.spark.conf.get("spark.sql.shuffle.partitions")),
-                    )
-                    keys = list(cfg.merge_key)
-                    delta = diff_snapshots(
-                        df.repartition(diff_width, *keys),
-                        eng.table.read().repartition(diff_width, *keys),
-                        keys,
-                        op_col=eng.cfg.op_col,
-                    ).withColumn("_event_id", F.lit(snap_v + 1).cast("long"))
-                    obs = Observation()
-                    opc = F.upper(F.col(eng.cfg.op_col))
-                    m = eng.table.merge(
-                        delta,
-                        batch_id=bid,
-                        op_col=eng.cfg.op_col,
-                        mode=eng.cfg.merge_mode,
-                        # diff output is key-unique by construction (one
-                        # full-outer join on the keys of two key-unique
-                        # snapshots) — the merge can skip its in-batch
-                        # LWW reduction
-                        delta_reduced=True,
-                        observe=(
-                            obs,
-                            F.count(F.lit(1)).alias("changes"),
-                            F.sum((opc == "D").cast("long")).alias("delete_events"),
-                            F.sum((opc == "I").cast("long")).alias("insert_events"),
-                        ),
-                    )
-                    if m.get("skipped"):
-                        if not eng.cp.has_batch(bid):
-                            eng.cp.commit(bid, {}, {"skipped_merge": True})
-                        return {**m, "source_query": desc}
-                    got = obs.get
-                    m.update(
-                        changes=int(got["changes"] or 0),
-                        delete_events=int(got["delete_events"] or 0),
-                        insert_events=int(got["insert_events"] or 0),
-                        source_query=desc,
-                        evolution_ops=[
-                            {"kind": o.kind, "name": o.name, "typ": o.typ} for o in ops
-                        ],
-                    )
-                    # same hygiene cadence as the push path (before the
-                    # checkpoint commit, like apply_batch — the counter
-                    # seeds from n_batches_total): without it a
-                    # long-running pull loop in mor mode accretes one
-                    # overlay file-set per cycle and every next diff's full
-                    # table read degrades monotonically
-                    eng.maybe_compact(m)
-                    eng.cp.commit(bid, {}, m)
-                    return m
-
-                m = with_retry(one_diff, self.retry_policy)
-                return SyncResult(name, bid, "skipped" if m.get("skipped") else "perfect", m)
-
-            def one_pull() -> dict:
-                last = eng.cp.cursor()
-                if last is None:
-                    last = self._derive_cursor_from_target(eng, cfg.cursor)
-                df, desc = self._build_scan(name, last)
-                # fail a cursor TYPE FLIP before any state lands: the
-                # checkpoint's monotone guard would raise inside commit —
-                # after the MERGE — wedging the cycle on the heal path
-                # (every retry skips the merge and re-raises on
-                # re-commit). The source column's type is known from the
-                # introspected scan schema, so the mismatch is detectable
-                # up front, where failing is clean and retryable.
-                _check_cursor_type(last, df.schema[cfg.cursor].dataType)
-                # source-introspection evolution BEFORE apply: a column
-                # added/widened upstream evolves the lake table as
-                # metadata-only ops, then the batch (old rows NULL-filled,
-                # narrow rows cast up) merges cleanly
-                ops = evolution.evolve_from_source(eng.table, df.schema)
-                obs = Observation()
-                m = eng.table.merge(
-                    df,
-                    batch_id=bid,
-                    op_col=eng.cfg.op_col,
-                    mode=eng.cfg.merge_mode,
-                    observe=(
-                        obs,
-                        F.max(F.col(cfg.cursor)).alias("cursor_max"),
-                        F.count(F.lit(1)).alias("rows_pulled"),
-                    ),
-                )
-                if m.get("skipped"):
-                    # crash heal: MERGE landed in a previous attempt but the
-                    # checkpoint may not have — re-commit it with the cursor
-                    # unchanged; the next cycle re-pulls the gap and the LWW
-                    # merge makes the re-application converge (idempotent)
-                    if not eng.cp.has_batch(bid):
-                        eng.cp.commit(bid, {}, {"skipped_merge": True})
-                    return {**m, "source_query": desc}
-                got = obs.get
-                new_cursor = _json_cursor(got["cursor_max"])
-                m.update(
-                    rows_pulled=int(got["rows_pulled"] or 0),
-                    last_value=last,
-                    cursor=new_cursor if new_cursor is not None else last,
-                    source_query=desc,
-                    evolution_ops=[
-                        {"kind": o.kind, "name": o.name, "typ": o.typ} for o in ops
-                    ],
-                )
-                # engine hygiene cadence (compact_deltas + snapshot expiry)
-                # applies to pull cycles too — see maybe_compact; runs
-                # before the checkpoint commit like apply_batch so the
-                # counter seed stays consistent
-                eng.maybe_compact(m)
-                # an empty pull still commits the (derived) cursor, so a
-                # cold checkpoint warms up and never re-derives again
-                eng.cp.commit(bid, {}, m, cursor=new_cursor if new_cursor is not None else last)
-                return m
-
-            m = with_retry(one_pull, self.retry_policy)
-            return SyncResult(name, bid, "skipped" if m.get("skipped") else "perfect", m)
-        except Exception as e:  # noqa: BLE001
-            return SyncResult(name, bid, "failed", {"error": str(e)})
-        finally:
-            self.spark.sparkContext.setLocalProperty("spark.scheduler.pool", None)
+        df, desc = self._build_scan(name, None)
+        ops = evolution.evolve_from_source(eng.table, df.schema)
+        snap_v = eng.table.snapshot.version
+        # size the diff's full-outer-join shuffle from the TABLE's bytes,
+        # not the session constant (the round-5 32 M-row spill cliff): both
+        # inputs are hash-placed on the keys at that width, so the join
+        # reuses those exchanges; the merge then places the changes into
+        # buckets for its write
+        diff_width = diff_shuffle_partitions(
+            eng.table, int(self.spark.conf.get("spark.sql.shuffle.partitions"))
+        )
+        keys = list(self.configs[name].merge_key)
+        delta = diff_snapshots(
+            df.repartition(diff_width, *keys),
+            eng.table.read().repartition(diff_width, *keys),
+            keys,
+            op_col=eng.cfg.op_col,
+        ).withColumn("_event_id", F.lit(snap_v + 1).cast("long"))
+        obs = Observation()
+        opc = F.upper(F.col(eng.cfg.op_col))
+        m = eng.table.merge(
+            delta,
+            batch_id=bid,
+            op_col=eng.cfg.op_col,
+            # diff output is key-unique by construction (one full-outer
+            # join on the keys of two key-unique snapshots) — the merge can
+            # skip its in-batch LWW reduction
+            delta_reduced=True,
+            observe=(
+                obs,
+                F.count(F.lit(1)).alias("changes"),
+                F.sum((opc == "D").cast("long")).alias("delete_events"),
+                F.sum((opc == "I").cast("long")).alias("insert_events"),
+            ),
+        )
+        got = obs.get
+        m.update(
+            changes=int(got["changes"] or 0),
+            delete_events=int(got["delete_events"] or 0),
+            insert_events=int(got["insert_events"] or 0),
+            source_query=desc,
+            evolution_ops=evolution.ops_json(ops),
+        )
+        return m, {}, None
 
     def pull_cycle(self, batch_id: str, tables: list[str] | None = None) -> list[SyncResult]:
         """One closed-loop sync cycle — the reference's actual entry point
@@ -414,20 +382,11 @@ class SyncOrchestrator:
         Like the reference's cursor sync, a pull cycle sees inserts and
         updates only — upstream DELETEs don't bump a cursor column, so
         they need the event-envelope path (``run_cycle``/``apply_batch``
-        with op='D'). Failures queue for retry; re-running a cycle id is
-        idempotent end-to-end (merge batch-id + checkpoint heal)."""
+        with op='D') or ``snapshot_diff`` mode. Failures queue for retry;
+        re-running a cycle id is idempotent end-to-end (merge batch-id +
+        checkpoint heal, ``CdcEngine.commit_once``)."""
         names = [n for n in (tables if tables is not None else self.configs) if n in self.sources]
-        for name in names:
-            self.engine(name)
-        if self.max_concurrency > 1 and len(names) > 1:
-            with ThreadPoolExecutor(max_workers=self.max_concurrency) as pool:
-                results = list(pool.map(lambda n: self._pull_one(n, batch_id), names))
-        else:
-            results = [self._pull_one(n, batch_id) for n in names]
-        for r in results:
-            if r.status == "failed":
-                self.retry_queue.push(r.table, r.batch_id)
-        return results
+        return self._fan_out(names, batch_id, self._pull_one)
 
     def run_pull_loop(
         self,

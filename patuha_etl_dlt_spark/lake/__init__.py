@@ -5,7 +5,8 @@ jars exist in this environment, so we implement the needed subset directly,
 Spark-first):
 
 - atomic snapshot commits via a manifest + pointer-file swap,
-- key-bucketed data layout with bucket-pruned copy-on-write MERGE,
+- key-bucketed data layout with merge-on-read MERGE overlays and
+  bucket-granular compaction,
 - column-ID-based schema evolution (add / rename / type-widen),
 - snapshot-summary batch ids for exactly-once re-apply,
 - tombstoned deletes (LWW registers) so merge is commutative and replay

@@ -7,8 +7,10 @@ Spark-first design:
 
 - **Layout**: data files are Parquet, hash-bucketed on the merge key
   (``pmod(hash(key), num_buckets)``, Spark's Murmur3 hash) and written
-  one file per touched bucket per commit. A MERGE only reads and rewrites
-  the buckets its delta touches (copy-on-write at bucket granularity) —
+  one file per touched bucket per commit. A MERGE appends its
+  batch-reduced delta as overlay files (merge-on-read: write cost
+  O(delta)); reads resolve only the buckets they touch, and
+  ``compact_deltas`` folds a bucket's overlays back into one base file —
   the analog of the reference's PK-index pre-creation
   (``index_management.py:177-231``), done with layout instead of indexes.
 - **MERGE semantics**: last-writer-wins registers. The winner per key is
@@ -35,6 +37,7 @@ Spark-first design:
 
 from __future__ import annotations
 
+import dataclasses
 import glob
 import json
 import os
@@ -404,17 +407,12 @@ class LakeTable:
         ids = snap.batch_ids + ([batch_id] if batch_id else [])
         if snap.batch_retention is not None:
             ids = ids[-snap.batch_retention:]
-        new = Snapshot(
+        new = dataclasses.replace(
+            snap,
             version=snap.version + 1,
             parent=snap.version,
-            schema_id=snap.schema_id,
-            schemas=snap.schemas,
-            key_cols=snap.key_cols,
-            order_cols=snap.order_cols,
-            num_buckets=snap.num_buckets,
             files=files,
             batch_ids=ids,
-            batch_retention=snap.batch_retention,
             summary=summary,
         )
         M.write_snapshot(self.meta_dir, new)
@@ -449,8 +447,6 @@ class LakeTable:
         delta: DataFrame,
         batch_id: str | None = None,
         op_col: str | None = "op",
-        collect_metrics: bool = True,
-        mode: str = "mor",
         delta_reduced: bool = False,
         observe: tuple = (),
     ) -> dict:
@@ -464,25 +460,19 @@ class LakeTable:
         THEN DELETE / UPDATE WHEN NOT MATCHED THEN INSERT`` — but
         commutative (see module docstring).
 
-        ``mode`` (the Iceberg copy-on-write vs merge-on-read choice):
-
-        - ``'mor'`` (default): the batch-reduced delta is APPENDED as
-          overlay files; reads LWW-resolve overlays against base. Write
-          cost per batch is O(delta), not O(touched table state) — the
-          right default for a write-heavy CDC tail. Compaction
-          (``compact_deltas``) folds overlays down on a schedule.
-        - ``'cow'``: touched buckets are rewritten to one resolved base
-          file each — read-optimal, write-amplified.
-
-        Because the LWW reduction is associative/commutative, both modes
-        produce identical read() results in any mixture. Either way the
-        new files are written one per touched bucket (``_write_files``).
+        Merge-on-read: the batch's LWW winners are APPENDED as overlay
+        files, one per touched bucket (``_write_files``); reads LWW-resolve
+        overlays against base. Write cost per batch is O(delta), not
+        O(touched table state). ``compact_deltas`` folds overlays back into
+        one base file per bucket — run after every merge, that is the
+        read-optimal layout, with identical ``read()`` results because the
+        LWW reduction is associative and commutative.
 
         ``delta_reduced``: promise that ``delta`` already carries at most
         ONE row per key (e.g. the engine's pre-extraction LWW reduce). The
-        mor path then skips its in-batch reduction — the winner is
-        identical (reducing singletons is the identity), one full
-        aggregation pass over the batch saved.
+        merge then skips its in-batch reduction — the winner is identical
+        (reducing singletons is the identity), one full aggregation pass
+        over the batch saved.
 
         ``observe``: ``(Observation, *aggregate columns)`` to evaluate over
         the incoming ``delta`` rows (e.g. a pull's row count and cursor
@@ -491,8 +481,9 @@ class LakeTable:
         lost whenever adaptive execution replaces an empty shuffle stage.
 
         Returns a metrics dict (``files_written`` always equals
-        ``buckets_touched``); a re-applied ``batch_id`` short-circuits to
-        ``{"skipped": True}`` (exactly-once).
+        ``buckets_touched``; ``rows_written``/``tombstones`` are observed
+        in the write's own stage, no extra job); a re-applied ``batch_id``
+        short-circuits to ``{"skipped": True}`` (exactly-once).
         """
         snap = self.snapshot
         if batch_id and batch_id in snap.batch_ids:
@@ -513,47 +504,21 @@ class LakeTable:
         if SYS_EVENT not in delta.columns:
             delta = delta.withColumn(SYS_EVENT, F.lit(None).cast("long"))
         delta_aligned = self._align(delta, snap.schema)
-
-        if mode == "mor":
-            # winners WITHIN the batch only; appended as overlay files.
-            # No base read, no bucket pre-scan: write cost is O(delta).
-            winners = delta_aligned if delta_reduced else self._lww_reduce(snap, delta_aligned)
-            kept_files = list(snap.files)
-        elif mode == "cow":
-            # bucket pruning: only read base buckets the delta touches.
-            # The pre-scan projects the key columns only — Catalyst
-            # prunes everything else (including upstream pandas UDFs),
-            # so it is cheap.
-            touched_set = {
-                r[0]
-                for r in delta_aligned.select(self._bucket_expr(snap).alias("b"))
-                .distinct()
-                .collect()
-            }
-            base_files = [f for f in snap.files if f.bucket in touched_set]
-            kept_files = [f for f in snap.files if f.bucket not in touched_set]
-            base = self._resolved(snap, base_files)
-            # LWW winner per key over (base ∪ delta), reduced in place
-            winners = self._lww_reduce(snap, base.unionByName(delta_aligned))
-        else:
-            raise ValueError(f"unknown merge mode: {mode!r}")
+        # winners WITHIN the batch only; no base read: write cost is O(delta)
+        winners = delta_aligned if delta_reduced else self._lww_reduce(snap, delta_aligned)
 
         new_files, observed = self._write_files(
             snap,
             winners,
-            kind="delta" if mode == "mor" else "base",
+            kind="delta",
             metrics=(
                 F.count(F.lit(1)).alias("rows_written"),
                 F.sum(F.col(SYS_DELETED).cast("long")).alias("tombstones"),
-            )
-            if collect_metrics
-            else (),
+            ),
         )
-        files = kept_files + new_files
         metrics: dict = {
             "skipped": False,
             "batch_id": batch_id,
-            "mode": mode,
             "buckets_touched": len({f.bucket for f in new_files}),
             "files_written": len(new_files),
             # on-disk bytes of this batch's files (driver-side stat of a
@@ -561,9 +526,9 @@ class LakeTable:
             "bytes_written": sum(
                 os.path.getsize(os.path.join(self.root, f.path)) for f in new_files
             ),
+            **observed,
         }
-        metrics.update(observed)
-        self._commit(snap, files, batch_id, {"operation": "merge", **metrics})
+        self._commit(snap, snap.files + new_files, batch_id, {"operation": "merge", **metrics})
         return metrics
 
     def replace_buckets(self, df: DataFrame, buckets, batch_id: str | None = None) -> dict:
@@ -572,10 +537,9 @@ class LakeTable:
         files are replaced with freshly-written base files and every other
         bucket's files are kept untouched. Batch-id idempotent like merge.
 
-        This is the copy-on-write primitive the incremental rollup folds
+        This is the bucket-rewrite primitive the incremental rollup folds
         through: the caller has already read the touched buckets' state and
-        recombined it, so re-reading base inside the write (as ``merge``'s
-        cow mode must) would double the state I/O."""
+        recombined it, so the write needs no base read of its own."""
         snap = self.snapshot
         if batch_id and batch_id in snap.batch_ids:
             return {"skipped": True, "batch_id": batch_id}
@@ -647,49 +611,39 @@ class LakeTable:
 
     # ----------------------------------------------------- schema evolution
 
-    def _evolve(self, fn, op: str) -> None:
+    def _evolve(self, fn, op: str, **changes) -> None:
+        """Metadata-only successor snapshot with schema ``fn(schema)`` (no
+        data rewrite); ``changes`` carries other fields that move with it
+        (a rename's key/order columns)."""
         snap = self.snapshot
         new_schema = fn(snap.schema)
         if new_schema is snap.schema:
             return
         sid = max(snap.schemas) + 1
-        new = Snapshot(
-            version=snap.version + 1,
-            parent=snap.version,
-            schema_id=sid,
-            schemas={**snap.schemas, sid: new_schema},
-            key_cols=snap.key_cols,
-            order_cols=snap.order_cols,
-            num_buckets=snap.num_buckets,
-            files=snap.files,  # metadata-only: no data rewrite
-            batch_ids=snap.batch_ids,
-            batch_retention=snap.batch_retention,
-            summary={"operation": op},
+        M.write_snapshot(
+            self.meta_dir,
+            dataclasses.replace(
+                snap,
+                version=snap.version + 1,
+                parent=snap.version,
+                schema_id=sid,
+                schemas={**snap.schemas, sid: new_schema},
+                summary={"operation": op},
+                **changes,
+            ),
         )
-        M.write_snapshot(self.meta_dir, new)
 
     def add_column(self, name: str, typ: str) -> None:
         self._evolve(lambda s: s.add_column(name, typ), f"add_column:{name}")
 
     def rename_column(self, old: str, new: str) -> None:
         snap = self.snapshot
-        sid = max(snap.schemas) + 1
-        M.write_snapshot(
-            self.meta_dir,
-            Snapshot(
-                version=snap.version + 1,
-                parent=snap.version,
-                schema_id=sid,
-                schemas={**snap.schemas, sid: snap.schema.rename_column(old, new)},
-                # keep key/order metadata consistent through renames
-                key_cols=[new if k == old else k for k in snap.key_cols],
-                order_cols=[new if c == old else c for c in snap.order_cols],
-                num_buckets=snap.num_buckets,
-                files=snap.files,
-                batch_ids=snap.batch_ids,
-                batch_retention=snap.batch_retention,
-                summary={"operation": f"rename_column:{old}->{new}"},
-            ),
+        self._evolve(
+            lambda s: s.rename_column(old, new),
+            f"rename_column:{old}->{new}",
+            # keep key/order metadata consistent through renames
+            key_cols=[new if k == old else k for k in snap.key_cols],
+            order_cols=[new if c == old else c for c in snap.order_cols],
         )
 
     def widen_column(self, name: str, new_type: str) -> None:
@@ -697,7 +651,7 @@ class LakeTable:
             # bucket placement is murmur3-hash-of-key, and murmur3(int) !=
             # murmur3(long): widening a key column silently invalidates
             # every recorded DataFile.bucket — bucket-pruned reads would
-            # miss rows and cow merges would leave the same key live in
+            # miss rows and merges would leave the same key live in
             # two buckets. Refuse; this needs an explicit migration.
             raise ValueError(
                 f"widen_column: {name!r} is a merge-key column; the bucket "

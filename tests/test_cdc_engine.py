@@ -126,6 +126,39 @@ def test_crash_between_merge_and_checkpoint_heals(spark, tmp_path, feed):
     assert table_state(eng.table) == oracle_state(feed)
 
 
+def test_offset_filter_broadcast_fallback_matches_literal_map(spark, tmp_path, monkeypatch):
+    """Above ``_MAX_LITERAL_OFFSETS`` checkpointed partitions the offset
+    filter joins a broadcast offsets table instead of inlining a literal
+    map; both keep exactly the events above their partition's offset
+    (every event of a partition with no offset)."""
+    from patuha_etl_dlt_spark.cdc import engine as engine_mod
+
+    n_parts = 1100
+    assert n_parts > engine_mod._MAX_LITERAL_OFFSETS
+    eng = make_engine(spark, tmp_path)
+    eng.cp.commit("offsets", {p: p % 7 for p in range(n_parts)}, {})
+    events = spark.range(0, 3300).select(
+        (F.col("id") % (n_parts + 50)).cast("int").alias("partition_id"),
+        (F.col("id") % 11).alias("lsn"),
+        F.col("id").alias("eid"),
+    )
+
+    def kept(df):
+        return {(r["partition_id"], r["lsn"], r["eid"]) for r in df.collect()}
+
+    fallback_df = eng._filter_new(events)
+    assert "Broadcast" in fallback_df._jdf.queryExecution().executedPlan().toString()
+    fallback = kept(fallback_df)
+    monkeypatch.setattr(engine_mod, "_MAX_LITERAL_OFFSETS", n_parts)
+    literal = kept(eng._filter_new(events))
+    want = {
+        (e % (n_parts + 50), e % 11, e)
+        for e in range(3300)
+        if e % 11 > (e % (n_parts + 50) % 7 if e % (n_parts + 50) < n_parts else -1)
+    }
+    assert fallback == literal == want and want
+
+
 def test_duplicate_delivery_and_dup_lsn_within_batch(spark, tmp_path):
     spec = FeedSpec(n_urls=50, n_events=500, dup_rate=0.2, seed=7)
     feed = generate_pandas(spec)

@@ -109,9 +109,12 @@ def test_merge_commutes(spark, tmp_path):
 
 
 def test_bucket_pruning(spark, table):
-    table.merge(ev(spark, [(i, "I", f"u{i}", 1, f"T{i}") for i in range(40)]), batch_id="seed", mode="cow")
-    m = table.merge(ev(spark, [(100, "U", "u3", 9, "NEW")]), batch_id="b2", mode="cow")
+    table.merge(ev(spark, [(i, "I", f"u{i}", 1, f"T{i}") for i in range(40)]), batch_id="seed")
+    assert table.compact_deltas() == table.snapshot.num_buckets
+    m = table.merge(ev(spark, [(100, "U", "u3", 9, "NEW")]), batch_id="b2")
     assert m["buckets_touched"] == 1
+    # only the touched bucket carries an overlay, so only it is rewritten
+    assert table.compact_deltas() == 1
     assert state(table)["u3"] == "NEW"
     assert len(state(table)) == 40
 
@@ -155,11 +158,12 @@ def test_rename_key_column(spark, table):
 
 
 def test_time_travel_and_expire(spark, table):
-    # cow: the second merge REPLACES the bucket file, so expiring the old
-    # snapshot can reclaim it (mor appends, so nothing would be orphaned)
-    table.merge(ev(spark, [(1, "I", "a", 1, "A1")]), batch_id="b1", mode="cow")
+    # merges append overlays; compacting REPLACES the bucket's files with
+    # one base file, so expiring the old snapshots can reclaim them
+    table.merge(ev(spark, [(1, "I", "a", 1, "A1")]), batch_id="b1")
     v1 = table.snapshot.version
-    table.merge(ev(spark, [(2, "U", "a", 2, "A2")]), batch_id="b2", mode="cow")
+    table.merge(ev(spark, [(2, "U", "a", 2, "A2")]), batch_id="b2")
+    assert table.compact_deltas() == 1
     assert {r["text"] for r in table.read(snapshot_version=v1).collect()} == {"A1"}
     n = table.expire_snapshots(keep_last=1)
     assert n >= 1
@@ -212,27 +216,30 @@ def test_compact_files_and_tombstones(spark, table):
 
 
 def test_mor_cow_mixture_equivalent(spark, tmp_path):
-    """Any mixture of merge-on-read and copy-on-write produces the same
-    readable state (LWW reduction is associative/commutative)."""
+    """Overlays only, compaction after every merge (the read-optimized,
+    copy-on-write layout) and compaction after one merge all produce the
+    same readable state (LWW reduction is associative/commutative)."""
     batches = [
         [(1, "I", "a", 1, "A1"), (2, "I", "b", 1, "B1")],
         [(3, "U", "a", 5, "A2"), (4, "D", "b", 5, "X")],
         [(5, "U", "a", 2, "OLD"), (6, "I", "c", 1, "C1")],
     ]
     states = []
-    for modes in (["mor", "mor", "mor"], ["cow", "cow", "cow"], ["mor", "cow", "mor"]):
-        t = LakeTable.create(
-            spark, str(tmp_path / f"t_{''.join(m[0] for m in modes)}"), PAGES, "url", "warc_ts", num_buckets=2
-        )
-        for i, (rows, m) in enumerate(zip(batches, modes)):
-            t.merge(ev(spark, rows), batch_id=f"b{i}", mode=m)
+    for name, compact_after in (("none", ()), ("every", (0, 1, 2)), ("second", (1,))):
+        t = LakeTable.create(spark, str(tmp_path / f"t_{name}"), PAGES, "url", "warc_ts", num_buckets=2)
+        for i, rows in enumerate(batches):
+            t.merge(ev(spark, rows), batch_id=f"b{i}")
+            if i in compact_after:
+                assert t.compact_deltas() > 0
+        if compact_after == (0, 1, 2):
+            assert all(f.kind == "base" for f in t.snapshot.files)
         states.append(state(t))
     assert states[0] == states[1] == states[2] == {"a": "A2", "c": "C1"}
 
 
 def test_compact_deltas_preserves_state(spark, table):
     for i, rows in enumerate([[(1, "I", "a", 1, "A1")], [(2, "U", "a", 5, "A2")], [(3, "D", "a", 7, "X")], [(4, "I", "b", 1, "B1")]]):
-        table.merge(ev(spark, rows), batch_id=f"b{i}", mode="mor")
+        table.merge(ev(spark, rows), batch_id=f"b{i}")
     assert any(f.kind == "delta" for f in table.snapshot.files)
     before = state(table)
     n = table.compact_deltas()

@@ -65,9 +65,9 @@ def test_any_batching_and_order_converges(spark, tmp_path_factory, events, data)
     root = tmp_path_factory.mktemp("prop")
     t = LakeTable.create(spark, str(root / "t"), COLS, "k", "ts", num_buckets=2)
     for j in order:
-        t.merge(to_df(spark, events, batches[j]), batch_id=f"b{j}", collect_metrics=False)
-    t.merge(to_df(spark, events, batches[dup]), batch_id=f"b{dup}", collect_metrics=False)  # no-op
-    t.merge(to_df(spark, events, batches[dup]), batch_id="redelivered", collect_metrics=False)
+        t.merge(to_df(spark, events, batches[j]), batch_id=f"b{j}")
+    t.merge(to_df(spark, events, batches[dup]), batch_id=f"b{dup}")  # no-op
+    t.merge(to_df(spark, events, batches[dup]), batch_id="redelivered")
 
     got = {r["k"]: r["v"] for r in t.read().collect()}
     assert got == py_oracle(events)

@@ -185,6 +185,63 @@ def test_pull_cycle_crash_between_merge_and_checkpoint_heals(spark, tmp_path):
     assert eng.table.read().count() == 10 and eng.cp.cursor() == 9
 
 
+def test_snapshot_mode_pull_crash_heals(spark, tmp_path):
+    """A full-refresh (snapshot mode) pull heals a lost checkpoint like
+    every other write: replaying the cycle id skips the overwrite, puts
+    the batch back into the checkpoint, and the table reports healthy."""
+    import os
+
+    def source(spark_, last):
+        return spark_.createDataFrame([(i, f"n{i}") for i in range(5)], "k long, n string")
+
+    cfg = TableConfig(
+        table="s", merge_key=("k",), cursor="", mode="snapshot",
+        columns=(("k", "long"), ("n", "string")), num_buckets=4,
+    )
+    orch = SyncOrchestrator(spark, str(tmp_path / "sync"), [cfg], sources={"s": source})
+    (r1,) = orch.pull_cycle("c1")
+    assert r1.status == "perfect"
+    eng = orch.engine("s")
+
+    os.unlink(eng.cp.state_path)  # the checkpoint write never happened
+    (r,) = orch.pull_cycle("c1")
+    assert r.status == "skipped"
+    assert eng.cp.has_batch("c1:s")
+    assert orch.status()["status"] == "healthy"
+    assert eng.table.read().count() == 5
+
+
+def test_snapshot_diff_pull_crash_heals(spark, tmp_path):
+    """A snapshot-diff pull whose checkpoint was lost heals on replay, and
+    the next cycle still lands an upstream delete as a tombstone."""
+    import os
+
+    state = {"rows": [(i, f"n{i}") for i in range(6)]}
+
+    def source(spark_, last):
+        return spark_.createDataFrame(state["rows"], "k long, n string")
+
+    cfg = TableConfig(
+        table="sd", merge_key=("k",), cursor="", mode="snapshot_diff",
+        columns=(("k", "long"), ("n", "string")), num_buckets=4,
+    )
+    orch = SyncOrchestrator(spark, str(tmp_path / "sync"), [cfg], sources={"sd": source})
+    (r1,) = orch.pull_cycle("c1")
+    assert r1.status == "perfect" and r1.metrics["changes"] == 6
+    eng = orch.engine("sd")
+
+    os.unlink(eng.cp.state_path)
+    (r,) = orch.pull_cycle("c1")
+    assert r.status == "skipped" and eng.cp.has_batch("c1:sd")
+
+    state["rows"] = [row for row in state["rows"] if row[0] != 2]  # upstream DELETE
+    (r2,) = orch.pull_cycle("c2")
+    assert r2.status == "perfect" and r2.metrics["delete_events"] == 1
+    assert {row["k"] for row in eng.table.read().collect()} == {0, 1, 3, 4, 5}
+    tombstones = eng.table.read(include_deleted=True, include_system=True).filter("_deleted")
+    assert [row["k"] for row in tombstones.collect()] == [2]
+
+
 def test_pull_cycle_dynamic_partition_bounds(spark, tmp_path, derby):
     """A JDBC source with partition_col but NO static bounds gets
     per-cycle bounds probed from the current incremental window, so the
@@ -385,7 +442,7 @@ def test_concurrent_pull_cycle_matches_sequential(spark, tmp_path):
 def test_pull_loop_overlay_passthrough_and_compaction_cadence(spark, tmp_path):
     """Pull cycles write merge-on-read overlays one file per touched
     bucket AND advance the engine's compaction cadence — without it a
-    long-running run_pull_loop in mor mode accretes one overlay file-set
+    long-running run_pull_loop accretes one overlay file-set
     per cycle forever. Every compact_every cycles the fold restores one
     base file per bucket, so the file count stays bounded over many
     cycles."""
