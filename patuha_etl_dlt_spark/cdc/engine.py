@@ -1,4 +1,4 @@
-"""CdcEngine — the per-batch apply pipeline and the continuous driver loop.
+"""CdcEngine — the per-batch apply pipeline.
 
 One micro-batch apply (the reference's ``process_incremental_table``,
 ``/root/reference/source/pipeline_management.py:605-1223``, collapsed into
@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 from patuha_etl_dlt_spark.cdc import evolution
 from patuha_etl_dlt_spark.cdc.checkpoint import CheckpointStore
 from patuha_etl_dlt_spark.cdc.dedup import lww_agg
+from patuha_etl_dlt_spark.cdc.envelope import HTML, LSN, OP, PARTITION, SCHEMA, TEXT
 from patuha_etl_dlt_spark.functions.html import with_extracted_text
 from patuha_etl_dlt_spark.functions.sanitize import sanitize_columns
 from patuha_etl_dlt_spark.lake.table import SYS_EVENT, LakeTable
@@ -48,45 +49,21 @@ from patuha_etl_dlt_spark.lake.table import SYS_EVENT, LakeTable
 _MAX_LITERAL_OFFSETS = 1024
 
 
+def _delete_count(df: DataFrame):
+    """Aggregate counting a batch's delete events; a batch without ``op``
+    is all upserts."""
+    op = F.upper(F.col(OP)) if OP in df.columns else F.lit("U")
+    return F.sum((op == "D").cast("long"))
+
+
 @dataclass
 class EngineConfig:
-    lsn_col: str = "lsn"
-    op_col: str = "op"
-    partition_col: str = "partition_id"
-    schema_col: str = "schema_json"
-    html_col: str = "html"
-    text_col: str = "text"
     extract_text: bool = True
-    sanitize: bool = True
     # fold merge-on-read overlays into base files every N batches
     # (reference hygiene analog: staging truncation each cycle,
     # pipeline_management.py:1106-1120). 1 = the read-optimized layout
     # (one base file per bucket after every commit); None = caller-managed.
     compact_every: int | None = 8
-    # on the compaction cadence, also drop snapshot manifests (and data
-    # files no kept snapshot references) beyond the last K — bounds
-    # metadata-directory growth on long-running feeds (Iceberg
-    # expire_snapshots analog). None = keep full history (time travel).
-    expire_snapshots_keep: int | None = None
-    # on the compaction cadence, purge tombstones every feed partition has
-    # passed (event id < min(checkpointed offsets)) from the buckets being
-    # rewritten anyway — opportunistic, O(0) extra I/O. SAFETY: the purge
-    # only fires when the table's primary LWW order column IS the LSN
-    # (order_col=None at create time ⇒ order_cols[0] == _event_id). Under
-    # any other order column the horizon is NOT sufficient: a future event
-    # with lsn above the horizon but an older/NULL order value would have
-    # LOST the LWW race to the purged tombstone (key stays deleted), and
-    # purging would silently resurrect it — the engine does not require
-    # order_col to be monotone in LSN, so it cannot assume it. Tables
-    # ordered by a business column keep their tombstones until the
-    # operator calls compact_tombstones() with a horizon they can vouch
-    # for. Replay safety on the LSN-ordered path: the offset filter drops
-    # any replayed event at or below the horizon, and every future event
-    # outranks the purged tombstone by LSN.
-    gc_tombstones: bool = True
-    # columns never sanitized: merge keys (null keys are dropped with a
-    # metric, not coerced) and extracted text (byte-identity contract)
-    sanitize_exclude: tuple[str, ...] = ()
     # dead-letter directory: rows with fatal problems (NULL merge-key
     # components — nothing to merge on) are appended there as parquet with
     # _reject_reason and _batch_id instead of being silently dropped (the
@@ -132,19 +109,16 @@ class CdcEngine:
                 ]
             )
             return events.filter(
-                F.col(self.cfg.lsn_col)
-                > F.coalesce(
-                    omap[F.col(self.cfg.partition_col).cast("long")], F.lit(-1).cast("long")
-                )
+                F.col(LSN)
+                > F.coalesce(omap[F.col(PARTITION).cast("long")], F.lit(-1).cast("long"))
             )
         spark = events.sparkSession
         odf = spark.createDataFrame(
-            [(int(p), int(l)) for p, l in offsets.items()],
-            f"{self.cfg.partition_col} int, _offset long",
+            [(int(p), int(l)) for p, l in offsets.items()], f"{PARTITION} int, _offset long"
         )
         return (
-            events.join(F.broadcast(odf), self.cfg.partition_col, "left")
-            .filter(F.col(self.cfg.lsn_col) > F.coalesce(F.col("_offset"), F.lit(-1)))
+            events.join(F.broadcast(odf), PARTITION, "left")
+            .filter(F.col(LSN) > F.coalesce(F.col("_offset"), F.lit(-1)))
             .drop("_offset")
         )
 
@@ -154,21 +128,13 @@ class CdcEngine:
         partition_id/lsn/op/schema_json; Catalyst prunes the heavy payload
         columns out of the scan, and partial aggregation keeps the
         collect_set tiny — a handful of distinct descriptors per batch)."""
-        cfg = self.cfg
-        op = (
-            F.upper(F.col(cfg.op_col))
-            if cfg.op_col in events.columns
-            else F.lit("U")
-        )
-        schema = (
-            F.col(cfg.schema_col) if cfg.schema_col in events.columns else F.lit(None).cast("string")
-        )
+        schema = F.col(SCHEMA) if SCHEMA in events.columns else F.lit(None).cast("string")
         rows = (
-            events.groupBy(cfg.partition_col)
+            events.groupBy(PARTITION)
             .agg(
-                F.max(cfg.lsn_col).alias("m"),
+                F.max(LSN).alias("m"),
                 F.count(F.lit(1)).alias("n"),
-                F.sum((op == "D").cast("long")).alias("d"),
+                _delete_count(events).alias("d"),
                 F.collect_set(schema).alias("s"),
             )
             .collect()
@@ -225,7 +191,6 @@ class CdcEngine:
         is a pure function of html, so winner-then-extract ≡
         extract-then-winner. The reduce is ``lww_agg``: its map-side
         combine is the hot-key skew defence."""
-        cfg = self.cfg
         df = events
         # events minted before a rename still carry the old column name;
         # remap (or coalesce when both generations coexist in one batch)
@@ -236,18 +201,15 @@ class CdcEngine:
                 df = df.withColumn(op.new_name, F.coalesce(F.col(op.new_name), F.col(op.name))).drop(op.name)
             elif op.name in df.columns:
                 df = df.withColumnRenamed(op.name, op.new_name)
-        if cfg.sanitize:
-            keys = tuple(self.table.snapshot.key_cols)
-            df = sanitize_columns(
-                df, exclude=keys + (cfg.text_col, cfg.op_col, cfg.schema_col) + cfg.sanitize_exclude
-            )
-        df = df.withColumnRenamed(cfg.lsn_col, SYS_EVENT)
-        keep = [c for c in df.columns if c not in (cfg.partition_col, cfg.schema_col)]
-        df = df.select(*keep)
         snap = self.table.snapshot
+        # merge keys are never sanitized (NULL keys are dropped with a
+        # metric, not coerced), nor is the extracted text (byte-identity)
+        df = sanitize_columns(df, exclude=(*snap.key_cols, TEXT, OP, SCHEMA))
+        df = df.withColumnRenamed(LSN, SYS_EVENT)
+        df = df.select(*[c for c in df.columns if c not in (PARTITION, SCHEMA)])
         df = lww_agg(df, snap.key_cols, [snap.order_cols[0], SYS_EVENT])
-        if cfg.extract_text and cfg.html_col in df.columns and cfg.text_col in df.columns:
-            df = with_extracted_text(df, cfg.html_col, cfg.text_col)
+        if self.cfg.extract_text and HTML in df.columns and TEXT in df.columns:
+            df = with_extracted_text(df, HTML, TEXT)
         return df
 
     # ------------------------------------------------------------- apply
@@ -323,16 +285,11 @@ class CdcEngine:
             # plan: the counts fall out of the MERGE job itself, zero extra
             # jobs, measured BEFORE the LWW pre-reduce collapses duplicates.
             new_off, counts = offsets, {}
-            op = (
-                F.upper(F.col(self.cfg.op_col))
-                if self.cfg.op_col in fresh.columns
-                else F.lit("U")
-            )
             obs_in = Observation()
             fresh = fresh.observe(
                 obs_in,
                 F.count(F.lit(1)).alias("events_applied"),
-                F.sum((op == "D").cast("long")).alias("delete_events"),
+                _delete_count(fresh).alias("delete_events"),
             )
         else:
             new_off, counts, descriptors = self._offsets_and_counts(fresh)
@@ -342,7 +299,6 @@ class CdcEngine:
         metrics = self.table.merge(
             self._prepare_delta(fresh, renames),
             batch_id=batch_id,
-            op_col=self.cfg.op_col,
             # the pre-reduce already left one winner per key — the merge
             # skips its in-batch reduction (one agg pass over the batch)
             delta_reduced=True,
@@ -366,11 +322,30 @@ class CdcEngine:
         return metrics, new_off, None
 
     def _gc_safe(self) -> bool:
-        """The min-offset tombstone horizon is only sound when LWW order is
-        the LSN itself: with a business order column, an above-horizon
-        event can still LOSE to a below-horizon tombstone (older/NULL
-        order value), so purging that tombstone would resurrect the key.
-        See EngineConfig.gc_tombstones."""
+        """Whether the compaction cadence may purge tombstones below the
+        min-offset horizon (event id < min of the checkpointed offsets) from
+        the buckets it rewrites anyway — opportunistic, no extra I/O.
+
+        Only when the table's LWW order IS the LSN (``order_col=None`` at
+        create time, so ``order_cols[0] == _event_id``). Under any other
+        order column the horizon is NOT sufficient: a future event with an
+        LSN above the horizon but an older/NULL order value would have LOST
+        the LWW race to the purged tombstone (the key stays deleted), and
+        purging would silently resurrect it — the engine does not require
+        the order column to be monotone in LSN, so it cannot assume it.
+        Tables ordered by a business column keep their tombstones until the
+        operator calls ``compact_tombstones()`` with a horizon they can
+        vouch for.
+
+        On an LSN-ordered table the horizon assumes a FIXED partition set:
+        every feed partition that will ever deliver has already committed
+        an offset. Replays are then safe — the offset filter drops any
+        event at or below a partition's offset, and every future event
+        outranks the purged tombstone by LSN. A partition that has never
+        committed is not in the checkpoint, so its events are not bounded
+        by the horizon: one carrying an LSN below it can still arrive and
+        win against a key whose tombstone was purged
+        (``test_tombstone_gc_late_partition_resurrects_key``)."""
         return self.table.snapshot.order_cols[0] == SYS_EVENT
 
     def maybe_compact(self, metrics: dict | None = None) -> dict | None:
@@ -382,34 +357,20 @@ class CdcEngine:
 
         The in-memory counter is seeded from the checkpoint once:
         re-parsing the whole state document every batch is a per-batch
-        fixed cost that grows with history. On the cadence it also
-        (a) purges passed tombstones from the rewrite (``gc_tombstones``;
-        horizon = min checkpointed offset — every feed partition has
-        advanced past it and the offset filter drops any replay below it;
-        ONLY when the table's LWW order is the LSN itself, see
-        ``_gc_safe``) and (b) expires old snapshots when configured."""
+        fixed cost that grows with history. On the cadence the fold also
+        purges passed tombstones when ``_gc_safe`` allows it."""
         if not self.cfg.compact_every:
             return metrics
         if self._n_batches is None:
             self._n_batches = self.cp.read()["n_batches_total"]
         self._n_batches += 1
         if self._n_batches % self.cfg.compact_every == 0:
-            horizon = None
-            if self.cfg.gc_tombstones and self._gc_safe():
-                offs = self.cp.offsets()
-                if offs:
-                    horizon = min(offs.values())
-            out = {
-                "compacted_buckets": self.table.compact_deltas(
-                    purge_tombstones_below=horizon
-                )
-            }
-            if self.cfg.expire_snapshots_keep:
-                out["expired_files"] = self.table.expire_snapshots(
-                    keep_last=self.cfg.expire_snapshots_keep
-                )
+            offs = self.cp.offsets() if self._gc_safe() else {}
+            n = self.table.compact_deltas(
+                purge_tombstones_below=min(offs.values()) if offs else None
+            )
             if metrics is not None:
-                metrics.update(out)
+                metrics["compacted_buckets"] = n
         return metrics
 
     def seed_snapshot(self, snapshot_df: DataFrame, batch_id: str = "seed") -> dict:
@@ -419,18 +380,3 @@ class CdcEngine:
             batch_id,
             lambda: (self.table.overwrite(snapshot_df, batch_id=batch_id), {}, None),
         )
-
-    # --------------------------------------------------------------- loop
-
-    def run(self, batch_source, interval_s: float = 0.0, max_batches: int | None = None) -> list[dict]:
-        """Continuous micro-cycle loop (reference: ``db_pipeline.py:75-94``,
-        ``while True: sync; sleep(INTERVAL)``). ``batch_source`` yields
-        (batch_id, DataFrame) pairs; returns per-batch metrics."""
-        out = []
-        for i, (batch_id, df) in enumerate(batch_source):
-            out.append(self.apply_batch(df, batch_id))
-            if max_batches is not None and i + 1 >= max_batches:
-                break
-            if interval_s:
-                time.sleep(interval_s)
-        return out

@@ -21,30 +21,42 @@ import json
 from pyspark.sql import types as T
 
 from patuha_etl_dlt_spark.lake.metadata import Field, Schema
+from patuha_etl_dlt_spark.lake.table import OP
+
+# envelope columns (``op`` is defined beside the lake's system columns,
+# because the merge reads it): the event's LSN, its feed partition, and
+# its payload schema descriptor
+LSN = "lsn"
+PARTITION = "partition_id"
+SCHEMA = "schema_json"
+ENVELOPE_COLS = [LSN, OP, PARTITION, SCHEMA]
+
+# payload columns the engine derives from one another: ``text`` is
+# extracted from ``html``
+HTML = "html"
+TEXT = "text"
 
 # base payload: the `pages` shape from BASELINE.json input_hint
 PAGES_COLUMNS: list[tuple[str, str]] = [
     ("url", "string"),
     ("warc_ts", "timestamp"),
-    ("html", "binary"),
-    ("text", "string"),
+    (HTML, "binary"),
+    (TEXT, "string"),
     ("lang", "string"),
 ]
-
-ENVELOPE_COLS = ["lsn", "op", "partition_id", "schema_json"]
 
 
 def event_struct(payload: list[tuple[str, str]] = PAGES_COLUMNS) -> T.StructType:
     from patuha_etl_dlt_spark.lake.metadata import spark_type
 
     fields = [
-        T.StructField("lsn", T.LongType(), False),
-        T.StructField("op", T.StringType(), False),
+        T.StructField(LSN, T.LongType(), False),
+        T.StructField(OP, T.StringType(), False),
     ]
     fields += [T.StructField(n, spark_type(t), True) for n, t in payload]
     fields += [
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("schema_json", T.StringType(), True),
+        T.StructField(PARTITION, T.IntegerType(), False),
+        T.StructField(SCHEMA, T.StringType(), True),
     ]
     return T.StructType(fields)
 

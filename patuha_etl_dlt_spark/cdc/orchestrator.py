@@ -37,6 +37,7 @@ from patuha_etl_dlt_spark.cdc.engine import CdcEngine, EngineConfig
 from patuha_etl_dlt_spark.cdc.retry import RetryPolicy, RetryQueue, with_retry
 from patuha_etl_dlt_spark.config import TableConfig
 from patuha_etl_dlt_spark.lake import LakeTable
+from patuha_etl_dlt_spark.lake.table import OP
 
 
 def _check_cursor_type(prev, dtype) -> None:
@@ -292,7 +293,6 @@ class SyncOrchestrator:
         m = eng.table.merge(
             df,
             batch_id=bid,
-            op_col=eng.cfg.op_col,
             observe=(
                 obs,
                 F.max(F.col(cfg.cursor)).alias("cursor_max"),
@@ -339,14 +339,12 @@ class SyncOrchestrator:
             df.repartition(diff_width, *keys),
             eng.table.read().repartition(diff_width, *keys),
             keys,
-            op_col=eng.cfg.op_col,
         ).withColumn("_event_id", F.lit(snap_v + 1).cast("long"))
         obs = Observation()
-        opc = F.upper(F.col(eng.cfg.op_col))
+        opc = F.upper(F.col(OP))
         m = eng.table.merge(
             delta,
             batch_id=bid,
-            op_col=eng.cfg.op_col,
             # diff output is key-unique by construction (one full-outer
             # join on the keys of two key-unique snapshots) — the merge can
             # skip its in-batch LWW reduction

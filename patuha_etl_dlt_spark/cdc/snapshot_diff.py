@@ -43,6 +43,8 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from patuha_etl_dlt_spark.lake.table import OP
+
 
 def diff_shuffle_partitions(
     table, session_partitions: int, target_bytes: int = 64 << 20
@@ -69,14 +71,9 @@ def diff_shuffle_partitions(
     return max(int(session_partitions), int(total // max(1, int(target_bytes))))
 
 
-def diff_snapshots(
-    new: DataFrame,
-    old: DataFrame,
-    key_cols: list[str] | str,
-    op_col: str = "op",
-) -> DataFrame:
+def diff_snapshots(new: DataFrame, old: DataFrame, key_cols: list[str] | str) -> DataFrame:
     """Change events turning ``old`` into ``new``: columns = ``new``'s
-    columns plus ``op_col`` ('I' | 'U' | 'D'). Unchanged keys emit
+    columns plus ``op`` ('I' | 'U' | 'D'). Unchanged keys emit
     nothing. Payload comparison covers ``new``'s non-key columns; a
     column ``old`` lacks (source schema grew) compares against NULL, so
     rows that gained a value surface as updates. Delete events carry the
@@ -107,11 +104,7 @@ def diff_snapshots(
     )
     side = F.coalesce(F.col("_new"), F.col("_old"))
     return (
-        j.withColumn(op_col, op)
-        .filter(F.col(op_col).isNotNull())
-        .select(
-            *key_cols,
-            *[side.getField(c).alias(c) for c in payload],
-            op_col,
-        )
+        j.withColumn(OP, op)
+        .filter(F.col(OP).isNotNull())
+        .select(*key_cols, *[side.getField(c).alias(c) for c in payload], OP)
     )

@@ -55,6 +55,8 @@ SYS_DELETED = "_deleted"
 SYS_BATCH = "_batch_id"
 SYS_EVENT = "_event_id"
 SYS_COLS = (SYS_DELETED, SYS_BATCH, SYS_EVENT)
+# change-event operation column a merge delta may carry: 'I' | 'U' | 'D'
+OP = "op"
 
 _ORDER_NULL_TS = "1970-01-01 00:00:00"
 
@@ -298,6 +300,16 @@ class LakeTable:
             return reduced
         return self._read_files(snap, clean_files).unionByName(reduced)
 
+    @staticmethod
+    def _view(df: DataFrame, include_deleted: bool, include_system: bool) -> DataFrame:
+        """A resolved frame as readers see it: live rows only, and without
+        the system columns, unless asked for."""
+        if not include_deleted:
+            df = df.filter(~F.coalesce(F.col(SYS_DELETED), F.lit(False)))
+        if not include_system:
+            df = df.drop(*SYS_COLS)
+        return df
+
     def read(
         self,
         include_deleted: bool = False,
@@ -311,12 +323,7 @@ class LakeTable:
             if snapshot_version is None
             else M.read_snapshot(self.meta_dir, snapshot_version)
         )
-        df = self._resolved(snap, snap.files)
-        if not include_deleted:
-            df = df.filter(~F.coalesce(F.col(SYS_DELETED), F.lit(False)))
-        if not include_system:
-            df = df.drop(*SYS_COLS)
-        return df
+        return self._view(self._resolved(snap, snap.files), include_deleted, include_system)
 
     def read_buckets(
         self,
@@ -334,11 +341,7 @@ class LakeTable:
         snap = self.snapshot
         wanted = set(buckets)
         df = self._resolved(snap, [f for f in snap.files if f.bucket in wanted])
-        if not include_deleted:
-            df = df.filter(~F.coalesce(F.col(SYS_DELETED), F.lit(False)))
-        if not include_system:
-            df = df.drop(*SYS_COLS)
-        return df
+        return self._view(df, include_deleted, include_system)
 
     def lookup(self, keys, include_system: bool = False) -> DataFrame:
         """Point lookup: current rows for the given key values, reading
@@ -418,6 +421,18 @@ class LakeTable:
         M.write_snapshot(self.meta_dir, new)
         return new
 
+    def _stamped(
+        self, snap: Snapshot, df: DataFrame, batch_id: str | None, deleted=None
+    ) -> DataFrame:
+        """``df`` aligned to the schema with its system columns stamped: the
+        tombstone flag (``deleted``, else False), the batch id, and a NULL
+        event id unless ``df`` carries one."""
+        df = df.withColumn(SYS_DELETED, F.lit(False) if deleted is None else deleted)
+        df = df.withColumn(SYS_BATCH, F.lit(batch_id))
+        if SYS_EVENT not in df.columns:
+            df = df.withColumn(SYS_EVENT, F.lit(None).cast("long"))
+        return self._align(df, snap.schema)
+
     def overwrite(self, df: DataFrame, batch_id: str | None = None) -> dict:
         """Full refresh (the reference's ``write_disposition="replace"`` path,
         ``pipeline_management.py:1225-1506``): target := source, as a new
@@ -425,17 +440,10 @@ class LakeTable:
         snap = self.snapshot
         if batch_id and batch_id in snap.batch_ids:
             return {"skipped": True, "batch_id": batch_id}
-        aligned = self._align(
-            df.withColumn(SYS_DELETED, F.lit(False))
-            .withColumn(SYS_BATCH, F.lit(batch_id))
-            .withColumn(
-                SYS_EVENT,
-                F.col(SYS_EVENT) if SYS_EVENT in df.columns else F.lit(None).cast("long"),
-            ),
-            snap.schema,
-        )
         files, observed = self._write_files(
-            snap, aligned, metrics=(F.count(F.lit(1)).alias("rows_written"),)
+            snap,
+            self._stamped(snap, df, batch_id),
+            metrics=(F.count(F.lit(1)).alias("rows_written"),),
         )
         self._commit(
             snap, files, batch_id, {"operation": "overwrite", "batch_id": batch_id}
@@ -446,7 +454,6 @@ class LakeTable:
         self,
         delta: DataFrame,
         batch_id: str | None = None,
-        op_col: str | None = "op",
         delta_reduced: bool = False,
         observe: tuple = (),
     ) -> dict:
@@ -454,8 +461,9 @@ class LakeTable:
 
         ``delta`` carries the user columns (any subset, any historical
         names — it is id-less so matched by current name, cast as needed),
-        plus ``_event_id`` (the LSN) and optionally ``op_col`` with values
-        'I'|'U'|'D'. Rows with op='D' become tombstones. Equivalent to
+        plus ``_event_id`` (the LSN) and optionally an ``op`` column with
+        values 'I'|'U'|'D'. Rows with op='D' become tombstones; a delta
+        without ``op`` is all upserts. Equivalent to
         Iceberg ``MERGE INTO t USING delta ON key WHEN MATCHED [AND op='D']
         THEN DELETE / UPDATE WHEN NOT MATCHED THEN INSERT`` — but
         commutative (see module docstring).
@@ -496,14 +504,8 @@ class LakeTable:
             key_cond = key_cond & F.col(k).isNotNull()
         delta = delta.filter(key_cond)
 
-        if op_col and op_col in delta.columns:
-            deleted = F.upper(F.col(op_col)) == F.lit("D")
-        else:
-            deleted = F.lit(False)
-        delta = delta.withColumn(SYS_DELETED, deleted).withColumn(SYS_BATCH, F.lit(batch_id))
-        if SYS_EVENT not in delta.columns:
-            delta = delta.withColumn(SYS_EVENT, F.lit(None).cast("long"))
-        delta_aligned = self._align(delta, snap.schema)
+        deleted = F.upper(F.col(OP)) == F.lit("D") if OP in delta.columns else None
+        delta_aligned = self._stamped(snap, delta, batch_id, deleted)
         # winners WITHIN the batch only; no base read: write cost is O(delta)
         winners = delta_aligned if delta_reduced else self._lww_reduce(snap, delta_aligned)
 
@@ -544,12 +546,10 @@ class LakeTable:
         if batch_id and batch_id in snap.batch_ids:
             return {"skipped": True, "batch_id": batch_id}
         wanted = set(buckets)
-        df = df.withColumn(SYS_DELETED, F.lit(False)).withColumn(SYS_BATCH, F.lit(batch_id))
-        if SYS_EVENT not in df.columns:
-            df = df.withColumn(SYS_EVENT, F.lit(None).cast("long"))
-        aligned = self._align(df, snap.schema)
         new_files, observed = self._write_files(
-            snap, aligned, metrics=(F.count(F.lit(1)).alias("rows_written"),)
+            snap,
+            self._stamped(snap, df, batch_id),
+            metrics=(F.count(F.lit(1)).alias("rows_written"),),
         )
         stray = {f.bucket for f in new_files} - wanted
         if stray:
@@ -564,22 +564,33 @@ class LakeTable:
         self._commit(snap, kept + new_files, batch_id, {"operation": "replace_buckets", **metrics})
         return metrics
 
-    def compact_deltas(
-        self,
-        max_delta_files_per_bucket: int = 0,
-        purge_tombstones_below: int | None = None,
-    ) -> int:
+    def _rewrite_buckets(
+        self, snap: Snapshot, buckets: set, purge_below: int | None, summary: dict
+    ) -> None:
+        """Rewrite ``buckets`` to one resolved base file each and commit;
+        every other bucket's files are kept. With ``purge_below``, tombstones
+        whose event id is below it are dropped from the rewrite."""
+        resolved = self._resolved(snap, [f for f in snap.files if f.bucket in buckets])
+        if purge_below is not None:
+            resolved = resolved.filter(
+                (~F.coalesce(F.col(SYS_DELETED), F.lit(False)))
+                | (F.coalesce(F.col(SYS_EVENT), F.lit(-1)) >= F.lit(int(purge_below)))
+            )
+        kept = [f for f in snap.files if f.bucket not in buckets]
+        self._commit(snap, kept + self._write_files(snap, resolved)[0], None, summary)
+
+    def compact_deltas(self, purge_tombstones_below: int | None = None) -> int:
         """Fold merge-on-read overlays into base files: every bucket with
-        more than ``max_delta_files_per_bucket`` overlay files is rewritten
-        to one resolved base file (Iceberg rewrite_data_files +
-        rewrite_position_delete_files analog). Returns buckets compacted.
+        an overlay file is rewritten to one resolved base file (Iceberg
+        rewrite_data_files + rewrite_position_delete_files analog). Returns
+        buckets compacted.
 
         ``purge_tombstones_below``: additionally drop tombstone rows whose
         event id is below this horizon from the buckets being rewritten
         anyway — zero extra I/O vs a standalone ``compact_tombstones``
         full rewrite. Safe ONLY when the table's LWW order is LSN-monotone
         per key — in particular when ``order_cols[0]`` is the ``_event_id``
-        lineage column itself (the engine's ``gc_tombstones`` checks this
+        lineage column itself (the engine's ``_gc_safe`` checks this
         before passing a horizon). With a business order column, a future
         above-horizon event can carry an older/NULL order value and LOSE
         the LWW race to a below-horizon tombstone; purging that tombstone
@@ -590,23 +601,13 @@ class LakeTable:
         receiving deletes keep getting folded, which bounds growth exactly
         where growth happens."""
         snap = self.snapshot
-        per_bucket: dict[int, int] = {}
-        for f in snap.files:
-            if f.kind == "delta":
-                per_bucket[f.bucket] = per_bucket.get(f.bucket, 0) + 1
-        targets = {b for b, n in per_bucket.items() if n > max_delta_files_per_bucket}
+        targets = {f.bucket for f in snap.files if f.kind == "delta"}
         if not targets:
             return 0
-        to_rewrite = [f for f in snap.files if f.bucket in targets]
-        kept = [f for f in snap.files if f.bucket not in targets]
-        resolved = self._resolved(snap, to_rewrite)
-        if purge_tombstones_below is not None:
-            resolved = resolved.filter(
-                (~F.coalesce(F.col(SYS_DELETED), F.lit(False)))
-                | (F.coalesce(F.col(SYS_EVENT), F.lit(-1)) >= F.lit(int(purge_tombstones_below)))
-            )
-        files = kept + self._write_files(snap, resolved)[0]
-        self._commit(snap, files, None, {"operation": "compact_deltas", "buckets": len(targets)})
+        self._rewrite_buckets(
+            snap, targets, purge_tombstones_below,
+            {"operation": "compact_deltas", "buckets": len(targets)},
+        )
         return len(targets)
 
     # ----------------------------------------------------- schema evolution
@@ -695,10 +696,7 @@ class LakeTable:
         """Purge tombstones whose LSN every feed partition has passed —
         safe once no event with a smaller LSN can still arrive."""
         snap = self.snapshot
-        df = self._resolved(snap, snap.files)
-        kept = df.filter(
-            (~F.coalesce(F.col(SYS_DELETED), F.lit(False)))
-            | (F.coalesce(F.col(SYS_EVENT), F.lit(-1)) >= F.lit(older_than_event_id))
+        self._rewrite_buckets(
+            snap, {f.bucket for f in snap.files}, older_than_event_id,
+            {"operation": "compact_tombstones"},
         )
-        files, _ = self._write_files(snap, kept)
-        self._commit(snap, files, None, {"operation": "compact_tombstones"})

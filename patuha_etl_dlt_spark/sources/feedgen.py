@@ -22,7 +22,16 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from patuha_etl_dlt_spark.cdc.envelope import base_descriptor, event_struct
+from patuha_etl_dlt_spark.cdc.envelope import (
+    HTML,
+    LSN,
+    OP,
+    PARTITION,
+    SCHEMA,
+    TEXT,
+    base_descriptor,
+    event_struct,
+)
 
 EPOCH = dt.datetime(2026, 1, 1)
 
@@ -106,10 +115,7 @@ def generate_pandas(spec: FeedSpec) -> pd.DataFrame:
         rows.append((base + 1, "U", urls[1 % spec.n_urls], EPOCH, _html_for(u, base + 1), None, "e\x00n", 0, desc))  # NUL
         rows.append((base + 2, "U", urls[2 % spec.n_urls], None, _html_for(u, base + 2), None, "en", 0, desc))  # null ts
 
-    pdf = pd.DataFrame(
-        rows,
-        columns=["lsn", "op", "url", "warc_ts", "html", "text", "lang", "partition_id", "schema_json"],
-    )
+    pdf = pd.DataFrame(rows, columns=event_struct().fieldNames())
 
     if spec.dup_rate > 0 and len(pdf) > 10:
         k = int(len(pdf) * spec.dup_rate)
@@ -177,18 +183,16 @@ def generate_events_distributed(
         F.lit("</title><script>var x=1;</script><style>p{margin:0}</style></head><body><h1>Page "),
         url, F.lit("</h1>"), *paras, F.lit("<!-- c --></body></html>"),
     )
-    from patuha_etl_dlt_spark.cdc.envelope import base_descriptor
-
     return df.select(
-        lsn.alias("lsn"),
-        op.alias("op"),
+        lsn.alias(LSN),
+        op.alias(OP),
         url.alias("url"),
         warc_ts.alias("warc_ts"),
-        F.when(op != "D", F.encode(html_str, "UTF-8")).alias("html"),
-        F.lit(None).cast("string").alias("text"),
+        F.when(op != "D", F.encode(html_str, "UTF-8")).alias(HTML),
+        F.lit(None).cast("string").alias(TEXT),
         F.when(op != "D", F.element_at(F.array(F.lit("en"), F.lit("de"), F.lit("fr"), F.lit("id")), (url_idx % 4 + 1).cast("int"))).alias("lang"),
-        (lsn % n_partitions).cast("int").alias("partition_id"),
-        F.lit(base_descriptor()).alias("schema_json"),
+        (lsn % n_partitions).cast("int").alias(PARTITION),
+        F.lit(base_descriptor()).alias(SCHEMA),
     )
 
 
@@ -200,8 +204,8 @@ def split_batches(pdf: pd.DataFrame, n_batches: int, seed: int = 7) -> list[pd.D
     (warc_ts) is arbitrarily out of order everywhere — that is what LWW
     dedup absorbs."""
     chunks: list[list[pd.DataFrame]] = [[] for _ in range(n_batches)]
-    for _, grp in pdf.groupby("partition_id", sort=False):
-        g = grp.sort_values("lsn", kind="mergesort")
+    for _, grp in pdf.groupby(PARTITION, sort=False):
+        g = grp.sort_values(LSN, kind="mergesort")
         size = (len(g) + n_batches - 1) // n_batches
         for i in range(n_batches):
             part = g.iloc[i * size : (i + 1) * size]

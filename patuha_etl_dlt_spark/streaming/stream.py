@@ -23,6 +23,35 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from patuha_etl_dlt_spark.cdc.engine import CdcEngine
+from patuha_etl_dlt_spark.cdc.envelope import OP
+
+
+def _foreach_batch(
+    spark: SparkSession,
+    feed_dir: str,
+    schema: T.StructType,
+    checkpoint_dir: str,
+    trigger_once: bool,
+    app_id: str | None,
+    prefix: str,
+    apply,
+) -> StreamingQuery:
+    """Tail ``feed_dir`` and hand each micro-batch to ``apply(df,
+    batch_id=...)`` with batch id ``{prefix}-{app_id}-epoch-{epoch}``;
+    ``app_id`` defaults to a hash of the checkpoint location."""
+    if app_id is None:
+        app_id = hashlib.sha1(checkpoint_dir.encode()).hexdigest()[:12]
+
+    def each(batch_df: DataFrame, epoch_id: int) -> None:
+        apply(batch_df, batch_id=f"{prefix}-{app_id}-epoch-{epoch_id}")
+
+    w = (
+        spark.readStream.schema(schema).parquet(feed_dir)
+        .writeStream.foreachBatch(each)
+        .option("checkpointLocation", checkpoint_dir)
+    )
+    w = w.trigger(availableNow=True) if trigger_once else w.trigger(processingTime="10 seconds")
+    return w.start()
 
 
 def stream_events_into(
@@ -32,7 +61,6 @@ def stream_events_into(
     schema: T.StructType,
     checkpoint_dir: str,
     trigger_once: bool = True,
-    processing_time: str = "10 seconds",
     app_id: str | None = None,
 ) -> StreamingQuery:
     """Tail a directory of event files and apply each micro-batch through
@@ -43,19 +71,10 @@ def stream_events_into(
     checkpoint location; pass a NEW explicit ``app_id`` if you delete and
     recreate the streaming checkpoint (epochs restart at 0 and would
     otherwise be skipped as already-applied)."""
-    if app_id is None:
-        app_id = hashlib.sha1(checkpoint_dir.encode()).hexdigest()[:12]
-    src = spark.readStream.schema(schema).parquet(feed_dir)
-
-    def apply(batch_df: DataFrame, epoch_id: int) -> None:
-        engine.apply_batch(batch_df, batch_id=f"stream-{app_id}-epoch-{epoch_id}")
-
-    w = src.writeStream.foreachBatch(apply).option("checkpointLocation", checkpoint_dir)
-    if trigger_once:
-        w = w.trigger(availableNow=True)
-    else:
-        w = w.trigger(processingTime=processing_time)
-    return w.start()
+    return _foreach_batch(
+        spark, feed_dir, schema, checkpoint_dir, trigger_once, app_id, "stream",
+        engine.apply_batch,
+    )
 
 
 def stream_rollup_into(
@@ -71,16 +90,10 @@ def stream_rollup_into(
     each micro-batch's partial aggregates are folded exactly-once (same
     txnAppId-style batch ids as ``stream_events_into``). The streaming
     analog of a continuously-maintained materialized view."""
-    if app_id is None:
-        app_id = hashlib.sha1(checkpoint_dir.encode()).hexdigest()[:12]
-    src = spark.readStream.schema(schema).parquet(feed_dir)
-
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        rollup.apply_batch(batch_df, batch_id=f"rollup-{app_id}-epoch-{epoch_id}")
-
-    w = src.writeStream.foreachBatch(fold).option("checkpointLocation", checkpoint_dir)
-    w = w.trigger(availableNow=True) if trigger_once else w.trigger(processingTime="10 seconds")
-    return w.start()
+    return _foreach_batch(
+        spark, feed_dir, schema, checkpoint_dir, trigger_once, app_id, "rollup",
+        rollup.apply_batch,
+    )
 
 
 def hourly_rollup_stream(
@@ -96,7 +109,7 @@ def hourly_rollup_stream(
     src = spark.readStream.schema(schema).parquet(feed_dir)
     return (
         src.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window).alias("win"), F.col("op"))
+        .groupBy(F.window(F.col(ts_col), window).alias("win"), F.col(OP))
         .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.col("win.start").alias("window_start"), "op", "n")
+        .select(F.col("win.start").alias("window_start"), OP, "n")
     )

@@ -633,3 +633,87 @@ def test_tombstone_gc_on_cadence_lsn_ordered_and_replay_converges(spark, tmp_pat
         if r.op != "D"
     }
     assert table_state(t) == want
+
+
+@pytest.mark.xfail(
+    strict=True,
+    reason="known defect: the tombstone-GC horizon assumes a fixed feed "
+    "partition set; a partition that never committed can deliver below it",
+)
+def test_tombstone_gc_late_partition_resurrects_key(spark, tmp_path):
+    """On an LSN-ordered table the compaction cadence purges tombstones
+    below min(checkpointed offsets). That horizon only covers partitions
+    that have committed: here partition 0 deletes ``a`` at lsn 20, the
+    second cadence purges the tombstone at horizon 40, and then partition
+    1 — never committed before — delivers an older update ``a@15``. With
+    the tombstone kept, LWW by LSN keeps ``a`` deleted (20 > 15); purged,
+    the stale update resurrects it."""
+    t = LakeTable.create(
+        spark, str(tmp_path / "late"), [("k", "string"), ("v", "string")],
+        key_cols="k", order_col=None, num_buckets=1,
+    )
+    eng = CdcEngine(
+        t, CheckpointStore(str(tmp_path / "late_cp")), EngineConfig(compact_every=2)
+    )
+
+    def events(rows):
+        return spark.createDataFrame(
+            rows, "lsn long, op string, k string, v string, partition_id int"
+        )
+
+    feed = [
+        (10, "I", "a", "A1", 0),
+        (20, "D", "a", None, 0),  # cadence 1: horizon 20 keeps the tombstone
+        (30, "I", "b", "B1", 0),
+        (40, "I", "c", "C1", 0),  # cadence 2: horizon 40 purges it
+        (50, "I", "d", "D1", 0),
+    ]
+    for row in feed:
+        eng.apply_batch(events([row]), batch_id=f"p0-{row[0]}")
+    tombs = t.read(include_deleted=True, include_system=True).filter("_deleted")
+    assert tombs.count() == 0, "tombstone not purged: the scenario is vacuous"
+    eng.apply_batch(events([(15, "U", "a", "STALE", 1)]), batch_id="p1-15")
+    state = {r["k"]: r["v"] for r in t.read().collect()}
+    assert state == {"b": "B1", "c": "C1", "d": "D1"}
+
+
+def test_push_batches_without_op_and_schema_columns(spark, tmp_path):
+    """A push batch may carry only ``lsn``, ``partition_id`` and payload
+    columns: no ``op`` means every event is an upsert and no
+    ``schema_json`` means no evolution. Both the discovery path and the
+    known-offsets path must count zero deletes, apply no evolution op and
+    converge to the LWW state."""
+    cols = [("k", "string"), ("ts", "long"), ("v", "string")]
+    rows = [
+        (lsn, f"k{lsn * 7 % 5}", lsn * 3 % 11, f"v{lsn}", lsn % 2) for lsn in range(40)
+    ]
+    batches = [[r for r in rows if r[0] < 20], [r for r in rows if r[0] >= 20]]
+    want: dict = {}
+    for lsn, k, ts, v, _ in rows:
+        if k not in want or (ts, lsn) > want[k][0]:
+            want[k] = ((ts, lsn), v)
+    want = {k: v for k, (_, v) in want.items()}
+
+    def df(batch):
+        return spark.createDataFrame(
+            batch, "lsn long, k string, ts long, v string, partition_id int"
+        )
+
+    for path in ("discovery", "known_offsets"):
+        t = LakeTable.create(
+            spark, str(tmp_path / path), cols, key_cols="k", order_col="ts", num_buckets=2
+        )
+        eng = CdcEngine(t, CheckpointStore(str(tmp_path / f"{path}_cp")))
+        for i, batch in enumerate(batches):
+            if path == "discovery":
+                m = eng.apply_batch(df(batch), batch_id=f"b{i}")
+            else:
+                offsets = {p: max(r[0] for r in batch if r[4] == p) for p in (0, 1)}
+                m = eng.apply_batch(
+                    df(batch), batch_id=f"b{i}", offsets=offsets, descriptors=[]
+                )
+            assert m["events_applied"] == len(batch), path
+            assert m["delete_events"] == 0, path
+            assert m["evolution_ops"] == [], path
+        assert {r["k"]: r["v"] for r in t.read().collect()} == want, path
+        assert eng.cp.offsets() == {0: 38, 1: 39}, path

@@ -634,7 +634,7 @@ def test_diff_shuffle_partitions_sized_from_table_bytes(spark, tmp_path):
         key_cols="k", order_col=None, num_buckets=4,
     )
     t.merge(spark.createDataFrame([(i, "x" * 50) for i in range(2000)], "k long, v string"),
-            batch_id="b0", op_col=None)
+            batch_id="b0")
     total = sum(
         __import__("os").path.getsize(__import__("os").path.join(t.root, f.path))
         for f in t.snapshot.files
