@@ -9,9 +9,11 @@ Spark-first design:
   (``pmod(hash(key), num_buckets)``, Spark's Murmur3 hash) and written
   one file per touched bucket per commit. A MERGE appends its
   batch-reduced delta as overlay files (merge-on-read: write cost
-  O(delta)); reads resolve only the buckets they touch, and
-  ``compact_deltas`` folds a bucket's overlays back into one base file —
-  the analog of the reference's PK-index pre-creation
+  O(delta)); a bucket-pruned read (``read_buckets``) resolves only the
+  buckets it touches, a point ``lookup`` reads only its keys' buckets on
+  the driver with pyarrow (the bucket hash computed in Python, no Spark
+  job), and ``compact_deltas`` folds a bucket's overlays back into one
+  base file — the analog of the reference's PK-index pre-creation
   (``index_management.py:177-231``), done with layout instead of indexes.
 - **MERGE semantics**: last-writer-wins registers. The winner per key is
   ``max_by(payload, (order_col, _event_id))`` over (base ∪ delta).
@@ -38,15 +40,25 @@ Spark-first design:
 from __future__ import annotations
 
 import dataclasses
+import datetime as dt
+import decimal
+import functools
 import glob
 import json
 import os
 import shutil
+import struct
+from decimal import ROUND_HALF_UP, Decimal
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_type
 
 from patuha_etl_dlt_spark.lake import metadata as M
+from patuha_etl_dlt_spark.lake import murmur3
 from patuha_etl_dlt_spark.lake.metadata import DataFile, Field, Schema, Snapshot
 
 # system columns every lake table carries (reference analog: dlt lineage
@@ -58,38 +70,92 @@ SYS_COLS = (SYS_DELETED, SYS_BATCH, SYS_EVENT)
 # change-event operation column a merge delta may carry: 'I' | 'U' | 'D'
 OP = "op"
 
-_ORDER_NULL_TS = "1970-01-01 00:00:00"
+# NULL order-column values sort before everything: one sentinel per
+# orderable lake type, shared by the Spark LWW order (``_order_expr``) and
+# the driver-side resolution of ``lookup``
+_ORDER_NULL = {
+    "timestamp": dt.datetime(1970, 1, 1, tzinfo=dt.timezone.utc),
+    "date": dt.date(1970, 1, 1),
+    "long": -(1 << 63),
+    "int": -(1 << 31),
+    "double": float("-inf"),
+    "float": float("-inf"),
+    "string": "",
+}
 
 
-def _order_null_literal(typ: str):
-    """A sorts-before-everything fallback for NULL order-column values,
+def _order_null_value(typ: str):
+    """The sorts-before-everything fallback for NULL order-column values,
     chosen from the column's declared lake type. (A hardcoded timestamp
     fallback used to make every merge on a long/date/decimal order column
     fail with DATATYPE_MISMATCH.)"""
-    t = typ.lower()
-    if t == "timestamp":
-        return F.lit(_ORDER_NULL_TS).cast("timestamp")
-    if t == "date":
-        return F.lit("1970-01-01").cast("date")
-    if t in ("long", "bigint"):
-        return F.lit(-(1 << 63)).cast("long")
-    if t in ("int", "integer"):
-        return F.lit(-(1 << 31)).cast("int")
-    if t in ("short", "smallint"):
-        return F.lit(-(1 << 15)).cast("short")
-    if t in ("byte", "tinyint"):
-        return F.lit(-(1 << 7)).cast("byte")
-    if t == "double":
-        return F.lit(float("-inf")).cast("double")
-    if t == "float":
-        return F.lit(float("-inf")).cast("float")
-    if t == "string":
-        return F.lit("")
-    if t.startswith("decimal"):
-        p, s = (int(x) for x in t[t.index("(") + 1 : t.index(")")].split(","))
-        digits = "9" * (p - s) + ("." + "9" * s if s else "")
-        return F.lit(f"-{digits}").cast(typ)
-    raise ValueError(f"unsupported order-column type: {typ!r}")
+    if typ.startswith("decimal("):
+        p, s = (int(x) for x in typ[8:-1].split(","))
+        return Decimal("-" + "9" * (p - s) + ("." + "9" * s if s else ""))
+    try:
+        return _ORDER_NULL[typ]
+    except KeyError:
+        raise ValueError(f"unsupported order-column type: {typ!r}") from None
+
+
+def _source(f: Field, columns, from_schema: Schema | None) -> str | None:
+    """The column of ``columns`` that feeds target field ``f``: matched by
+    field id when the data is of ``from_schema``'s epoch, else by name;
+    None when the data has no such column."""
+    if from_schema is None:
+        return f.name if f.name in columns else None
+    old = from_schema.field_by_id(f.id)
+    return old.name if old is not None and old.name in columns else None
+
+
+def _arrow_type(typ: str) -> pa.DataType:
+    """Arrow type of a lake type, as Spark exchanges it (timestamps are
+    UTC instants)."""
+    return to_arrow_type(M.spark_type(typ))
+
+
+def _align_arrow(tbl: pa.Table, schema: Schema, from_schema: Schema) -> pa.Table:
+    """``_align`` for rows a data file of ``from_schema``'s epoch holds:
+    names id-mapped, widened types cast (unchecked, as Spark's cast),
+    missing columns NULL."""
+    cols = []
+    for f in schema.fields:
+        src = _source(f, tbl.column_names, from_schema)
+        typ = _arrow_type(f.type)
+        cols.append(pa.nulls(tbl.num_rows, typ) if src is None else tbl[src].cast(typ, safe=False))
+    return pa.table(cols, names=schema.names)
+
+
+# every NaN key value maps to this one object, so tuple and set equality
+# (identity first) match NaN keys as Spark's join-key normalization does
+_NAN = float("nan")
+
+
+def _key_value(typ: str, v):
+    """A looked-up key value as Spark holds it: the value ``F.hash``
+    hashes and key equality compares (timestamps in microseconds, dates
+    in days, floats rounded to 32 bits, decimals at the column's scale)."""
+    if v is None:
+        return None
+    if typ == "float":
+        v = struct.unpack("<f", struct.pack("<f", v))[0]
+    elif typ.startswith("decimal("):
+        p, s = (int(x) for x in typ[8:-1].split(","))
+        v = Decimal(v).quantize(Decimal(1).scaleb(-s), ROUND_HALF_UP, decimal.Context(prec=p))
+    else:
+        v = M.spark_type(typ).toInternal(v)
+    return _NAN if v != v else v
+
+
+def _stored_keys(tbl: pa.Table, fields: list[Field]) -> list[tuple]:
+    """Key tuples of aligned rows, in ``_key_value``'s representation."""
+    cols = []
+    for f in fields:
+        a = tbl[f.name]
+        if f.type in ("timestamp", "date"):
+            a = a.cast(pa.int64() if f.type == "timestamp" else pa.int32())
+        cols.append([_NAN if v != v else v for v in a.to_pylist()])
+    return list(zip(*cols))
 
 
 class LakeTable:
@@ -140,7 +206,7 @@ class LakeTable:
         elif order_col not in names:
             raise ValueError(f"order column {order_col!r} not in columns")
         else:
-            _order_null_literal(dict(columns)[order_col])  # fail fast on unorderable types
+            _order_null_value(dict(columns)[order_col])  # fail fast on unorderable types
         fields = [Field(i + 1, n, t) for i, (n, t) in enumerate(columns)]
         # system columns get reserved NEGATIVE ids so they can never collide
         # with payload field ids from event-envelope schema descriptors
@@ -230,17 +296,9 @@ class LakeTable:
         given), cast widened types, fill missing columns with NULL."""
         cols = []
         for f in schema.fields:
-            src = None
-            if from_schema is not None:
-                old = from_schema.field_by_id(f.id)
-                if old is not None and old.name in df.columns:
-                    src = old.name
-            elif f.name in df.columns:
-                src = f.name
-            if src is None:
-                cols.append(F.lit(None).cast(M.spark_type(f.type)).alias(f.name))
-            else:
-                cols.append(F.col(src).cast(M.spark_type(f.type)).alias(f.name))
+            src = _source(f, df.columns, from_schema)
+            col = F.lit(None) if src is None else F.col(src)
+            cols.append(col.cast(M.spark_type(f.type)).alias(f.name))
         return df.select(*cols)
 
     def _read_files(self, snap: Snapshot, files: list[DataFile]) -> DataFrame:
@@ -263,9 +321,9 @@ class LakeTable:
 
     def _order_expr(self, snap: Snapshot):
         order_col = snap.order_cols[0]
-        fld = next(f for f in snap.schema.fields if f.name == order_col)
+        typ = snap.schema.field_by_name(order_col).type
         return F.struct(
-            F.coalesce(F.col(order_col), _order_null_literal(fld.type)).alias("o1"),
+            F.coalesce(F.col(order_col), F.lit(_order_null_value(typ)).cast(typ)).alias("o1"),
             F.coalesce(F.col(SYS_EVENT), F.lit(-1)).alias("o2"),
         )
 
@@ -332,36 +390,108 @@ class LakeTable:
         include_system: bool = False,
     ) -> DataFrame:
         """Bucket-pruned read: resolve and return ONLY the given buckets'
-        files (file-level pruning — the scan never opens untouched buckets,
-        checkable via ``DataFrame.inputFiles()``). The bucket of a key is
-        ``pmod(hash(keys), num_buckets)`` (see ``_bucket_expr``); callers
-        that know which keys they need (e.g. the incremental-rollup fold)
-        compute the touched buckets from those keys and skip the rest of
-        the table entirely — O(touched state), not O(state)."""
+        files, as a Spark plan (file-level pruning — the scan never opens
+        untouched buckets, checkable via ``DataFrame.inputFiles()``). The
+        bucket of a key is ``pmod(hash(keys), num_buckets)`` (see
+        ``_bucket_expr``; ``murmur3.spark_hash`` computes it on the
+        driver); callers that fold whole buckets of state (e.g. the
+        incremental-rollup fold) compute the touched buckets from their
+        keys and skip the rest of the table entirely — O(touched state),
+        not O(state). A read of a few keys is ``lookup``, which needs no
+        Spark job."""
         snap = self.snapshot
         wanted = set(buckets)
         df = self._resolved(snap, [f for f in snap.files if f.bucket in wanted])
         return self._view(df, include_deleted, include_system)
 
     def lookup(self, keys, include_system: bool = False) -> DataFrame:
-        """Point lookup: current rows for the given key values, reading
-        ONLY the buckets those keys hash into — the CDC operator's "did
-        url X land?" read, O(keys/num_buckets · state) instead of a full
-        scan. ``keys``: list of key values (tuples for composite keys).
-        Buckets are computed with the same `_bucket_expr` the writer used
-        (one driver-local job over the tiny key list — never a table
-        scan), then the pruned read is semi-joined back to the keys."""
+        """Point lookup: current rows for the given key values — the CDC
+        operator's "did url X land?" read. ``keys``: list of key values
+        (tuples for composite keys); missing keys return no row.
+
+        Runs no Spark job. The keys' buckets are computed on the driver
+        with Spark's own hash (``murmur3.spark_hash``, the placement
+        ``_bucket_expr`` describes), and only those buckets' files are
+        opened, with pyarrow (``_read_matches``): driver memory is the
+        matched row groups plus the key columns, never the table. The
+        rows are resolved as ``read`` resolves them — last writer wins in
+        ``_order_expr``'s order wherever a bucket has overlays — and come
+        back as a local DataFrame, so collecting it runs on the driver."""
         snap = self.snapshot
-        rows = [k if isinstance(k, tuple) else (k,) for k in keys]
-        kfields = [next(f for f in snap.schema.fields if f.name == kc) for kc in snap.key_cols]
-        kdf = self.spark.createDataFrame(
-            rows, ", ".join(f"{f.name} {f.type}" for f in kfields)
-        )
-        buckets = {
-            r[0] for r in kdf.select(self._bucket_expr(snap).alias("b")).distinct().collect()
+        kfields = [snap.schema.field_by_name(k) for k in snap.key_cols]
+        ktypes = [f.type for f in kfields]
+        wanted = {
+            tuple(_key_value(t, v) for t, v in zip(ktypes, k if isinstance(k, tuple) else (k,)))
+            for k in keys
         }
-        df = self.read_buckets(buckets, include_system=include_system)
-        return df.join(F.broadcast(kdf), snap.key_cols, "semi")
+        wanted = {k for k in wanted if None not in k}  # a NULL key is never stored
+        buckets = {murmur3.spark_hash(k, ktypes) % snap.num_buckets for k in wanted}
+        # Arrow's is_in tells -0.0 from 0.0 and Spark's key equality does
+        # not: floating value sets hold both zeros (_pick filters exactly)
+        value_sets = {
+            f.name: pa.array(
+                [k[i] for k in wanted] + ([0.0, -0.0] if f.type in ("float", "double") else []),
+                _arrow_type(f.type),
+            )
+            for i, f in enumerate(kfields)
+        }
+        files = [f for f in snap.files if f.bucket in buckets]
+        dirty = {f.bucket for f in files if f.kind == "delta"}
+        # as in _resolved: rows of buckets with overlays are LWW-reduced,
+        # a clean bucket's base rows are taken as stored
+        empty = pa.schema([(f.name, _arrow_type(f.type)) for f in snap.schema.fields]).empty_table()
+        rows = {False: [empty], True: [empty]}
+        for f in files:
+            rows[f.bucket in dirty] += self._read_matches(snap, f, value_sets)
+        resolved = pa.concat_tables(
+            self._pick(snap, pa.concat_tables(parts), kfields, wanted, reduce)
+            for reduce, parts in rows.items()
+        )
+        df = self.spark.createDataFrame(resolved, snap.schema.to_struct())
+        return self._view(df, False, include_system)
+
+    def _read_matches(self, snap: Snapshot, f: DataFile, value_sets: dict) -> list[pa.Table]:
+        """The rows of data file ``f`` whose key columns hold looked-up
+        values, aligned to the current schema. Key columns are read first;
+        a row group is read in full only where one of its keys matches."""
+        src = snap.schemas[f.schema_id]
+        kschema = Schema.of([snap.schema.field_by_name(k) for k in snap.key_cols])
+        out = []
+        path = os.path.join(self.root, f.path)
+        with pq.ParquetFile(path, coerce_int96_timestamp_unit="us") as pf:
+            present = pf.schema_arrow.names
+            kcols = [c for c in (_source(k, present, src) for k in kschema.fields) if c]
+            for rg in range(pf.num_row_groups):
+                keys = _align_arrow(pf.read_row_group(rg, columns=kcols), kschema, src)
+                mask = functools.reduce(
+                    pc.and_, (pc.is_in(keys[c], value_set=v) for c, v in value_sets.items())
+                )
+                if pc.any(mask).as_py():
+                    rows = pf.read_row_group(rg, columns=present).filter(mask)
+                    out.append(_align_arrow(rows, snap.schema, src))
+        return out
+
+    @staticmethod
+    def _pick(
+        snap: Snapshot, tbl: pa.Table, kfields: list[Field], wanted: set, reduce: bool
+    ) -> pa.Table:
+        """The rows of ``tbl`` whose key is looked up; with ``reduce``, only
+        each key's last writer in ``_order_expr``'s order (NULL order value
+        -> the type's sentinel, NULL event id -> -1)."""
+        keys = _stored_keys(tbl, kfields)
+        if not reduce:
+            return tbl.take(pa.array([i for i, k in enumerate(keys) if k in wanted], pa.int64()))
+        order_col = snap.order_cols[0]
+        typ = snap.schema.field_by_name(order_col).type
+        order = pa.table({
+            "o1": pc.fill_null(tbl[order_col], pa.scalar(_order_null_value(typ), _arrow_type(typ))),
+            "o2": pc.fill_null(tbl[SYS_EVENT], -1),
+        })
+        last = {}
+        for i in pc.sort_indices(order, [("o1", "ascending"), ("o2", "ascending")]).to_pylist():
+            if keys[i] in wanted:
+                last[keys[i]] = i
+        return tbl.take(pa.array(sorted(last.values()), pa.int64()))
 
     # -------------------------------------------------------------- writes
 

@@ -7,6 +7,7 @@ SURVEY.md §5 — so this suite implements its TRD's intended scenarios)."""
 from __future__ import annotations
 
 import datetime as dt
+from decimal import Decimal
 
 import pytest
 from pyspark.sql import functions as F
@@ -355,9 +356,10 @@ def test_checkpoint_retention_bounds_state(tmp_path):
     assert cp.offsets() == {0: 299}
 
 
-def test_point_lookup_prunes_buckets(spark, tmp_path):
-    """lookup(keys) reads only the buckets the keys hash into (checked
-    via inputFiles) and returns exactly the live rows for those keys."""
+def test_point_lookup_prunes_buckets(spark, tmp_path, monkeypatch):
+    """lookup(keys) opens only the files of the buckets the keys hash
+    into (checked by recording every file the driver reader opens) and
+    returns exactly the live rows for those keys."""
     t = LakeTable.create(
         spark, str(tmp_path / "pl"),
         [("k", "string"), ("v", "string"), ("seq", "long")],
@@ -367,16 +369,22 @@ def test_point_lookup_prunes_buckets(spark, tmp_path):
     t.merge(spark.createDataFrame(rows, "k string, v string, seq long"), batch_id="b")
     assert len({f.bucket for f in t.snapshot.files}) == 8
 
+    opened = []
+    read_matches = LakeTable._read_matches
+
+    def spy(self, snap, f, value_sets):
+        opened.append(f)
+        return read_matches(self, snap, f, value_sets)
+
+    monkeypatch.setattr(LakeTable, "_read_matches", spy)
     df = t.lookup(["url-7", "url-123", "url-nope"])
     got = {r["k"]: r["v"] for r in df.collect()}
     assert got == {"url-7": "v7", "url-123": "v123"}
 
-    # file-level pruning: the scan must touch at most 2 of the 8 buckets
-    read = df.inputFiles()
-    touched = {
-        f.bucket for f in t.snapshot.files if any(rf.endswith(f.path) for rf in read)
-    }
-    assert len(touched) <= 2 < 8, touched
+    # file-level pruning: the reader must open at most 2 of the 8 buckets
+    touched = {f.bucket for f in opened}
+    assert 1 <= len(touched) <= 2 < 8, touched
+    assert len(opened) == len(touched)
 
 
 def test_delta_reduced_merge_matches_plain(spark, tmp_path):
@@ -434,29 +442,105 @@ def test_range_fed_merge_writes_one_file_per_bucket(spark, tmp_path):
     assert t.read().count() == 400
 
 
-@pytest.mark.parametrize(
-    "columns,keys,rows",
-    [
-        ([("k", "string"), ("v", "long")], ["k"], [(f"key-{i}", i) for i in range(2000)]),
-        ([("k", "int"), ("v", "long")], ["k"], [(i * 7919 - 5000, i) for i in range(2000)]),
-        ([("k", "long"), ("v", "long")], ["k"], [(i * (1 << 33) + i, i) for i in range(2000)]),
-        (
-            [("k", "date"), ("v", "long")],
-            ["k"],
-            [(dt.date(2000, 1, 1) + dt.timedelta(days=i), i) for i in range(2000)],
-        ),
-        (
-            [("a", "string"), ("b", "int"), ("v", "long")],
-            ["a", "b"],
-            [(f"s{i % 37}", i % 53, i) for i in range(2000)],
-        ),
-    ],
-    ids=["string", "int", "long", "date", "composite"],
-)
+def _text(i: int) -> str:
+    """Strings of every UTF-8 byte-length tail (0-3 bytes past a 4-byte
+    word), with 1- to 4-byte code points."""
+    return "aé日😀"[i % 4] * (i % 5) + f"-{i}"
+
+
+def _steps(step: float, start: float) -> list[float]:
+    return [j * step + start for j in range(1996)]
+
+
+def _numbered(keys: list) -> list[tuple]:
+    return [(k, i) for i, k in enumerate(keys)]
+
+
+KEY_CASES = [
+    ([("k", "string"), ("v", "long")], ["k"], [(f"key-{i}", i) for i in range(2000)]),
+    ([("k", "int"), ("v", "long")], ["k"], [(i * 7919 - 5000, i) for i in range(2000)]),
+    ([("k", "long"), ("v", "long")], ["k"], [(i * (1 << 33) + i, i) for i in range(2000)]),
+    (
+        [("k", "date"), ("v", "long")],
+        ["k"],
+        [(dt.date(2000, 1, 1) + dt.timedelta(days=i), i) for i in range(2000)],
+    ),
+    (
+        [("a", "string"), ("b", "int"), ("v", "long")],
+        ["a", "b"],
+        [(f"s{i % 37}", i % 53, i) for i in range(2000)],
+    ),
+    (
+        [("k", "string"), ("v", "long")],
+        ["k"],
+        [("", 0)] + [(_text(i), i) for i in range(1, 2000)],
+    ),
+    (
+        [("k", "binary"), ("v", "long")],
+        ["k"],
+        [
+            (bytes((i * 37 + j) % 256 for j in range(i % 9)) + i.to_bytes(2, "big"), i)
+            for i in range(2000)
+        ],
+    ),
+    ([("k", "long"), ("v", "long")], ["k"], [(-(i * (1 << 33)) - i, i) for i in range(2000)]),
+    (
+        [("k", "timestamp"), ("v", "long")],
+        ["k"],
+        [
+            (dt.datetime(1969, 12, 31, 23) + dt.timedelta(seconds=i * 977, microseconds=i), i)
+            for i in range(2000)
+        ],
+    ),
+    (
+        [("k", "float"), ("v", "long")],
+        ["k"],
+        _numbered([-0.0, 0.0, float("nan"), float("inf")] + _steps(0.37, -300)),
+    ),
+    (
+        [("k", "double"), ("v", "long")],
+        ["k"],
+        _numbered([-0.0, 0.0, float("nan"), float("-inf")] + _steps(1e-3, -1.5)),
+    ),
+    (
+        [("k", "decimal(10,2)"), ("v", "long")],
+        ["k"],
+        [(Decimal(i * 7919 - 5_000_000).scaleb(-2), i) for i in range(2000)],
+    ),
+    (
+        [("k", "decimal(38,6)"), ("v", "long")],
+        ["k"],
+        [(Decimal((i - 1000) * 10**29 + i).scaleb(-6), i) for i in range(2000)],
+    ),
+    (
+        [("a", "boolean"), ("b", "string"), ("c", "int"), ("v", "long")],
+        ["a", "b", "c"],
+        [
+            (
+                None if i % 5 == 0 else i % 2 == 0,
+                None if i % 7 == 0 else f"s{i % 37}",
+                None if i % 3 == 0 else i,
+                i,
+            )
+            for i in range(2000)
+        ],
+    ),
+]
+KEY_CASE_IDS = [
+    "string", "int", "long", "date", "composite", "string_utf8", "binary", "long_negative",
+    "timestamp", "float", "double", "decimal_long", "decimal_wide", "composite_nulls",
+]
+
+
+@pytest.mark.parametrize("columns,keys,rows", KEY_CASES, ids=KEY_CASE_IDS)
 def test_partition_id_equals_bucket_expr(spark, tmp_path, columns, keys, rows):
     """The write path's premise: after bucket placement, a row's Spark
     partition id IS its bucket (hash partitioning uses the same Murmur3
-    hash, seed 42, as ``_bucket_expr``)."""
+    hash, seed 42, as ``_bucket_expr``). The driver-side hash lookups use
+    equals ``F.hash`` on every row, NULL key components included."""
+    from patuha_etl_dlt_spark.lake import murmur3
+    from patuha_etl_dlt_spark.lake.table import _key_value
+
     t = LakeTable.create(
         spark, str(tmp_path / "pid"), columns, key_cols=keys, order_col=None, num_buckets=7
     )
@@ -467,6 +551,31 @@ def test_partition_id_equals_bucket_expr(spark, tmp_path, columns, keys, rows):
     )
     assert placed.filter(F.col("p") != F.col("b")).count() == 0
     assert placed.select("b").distinct().count() == 7
+
+    types = [dict(columns)[k] for k in keys]
+    hashed = df.select(*keys, F.hash(*keys), t._bucket_expr(snap)).collect()
+    assert len(hashed) == len(rows)
+    for r in hashed:
+        h = murmur3.spark_hash([_key_value(typ, v) for typ, v in zip(types, r)], types)
+        assert (h, h % 7) == tuple(r[-2:]), r
+
+
+@pytest.mark.parametrize("columns,keys,rows", KEY_CASES, ids=KEY_CASE_IDS)
+def test_lookup_matches_semi_join_for_every_key_type(spark, tmp_path, columns, keys, rows):
+    """For every key type, ``lookup`` returns what a Spark semi-join of
+    ``read()`` with the looked-up keys returns: same bucket, same key
+    equality (NaN equals NaN, -0.0 equals 0.0, decimals at scale)."""
+    t = LakeTable.create(
+        spark, str(tmp_path / "lk"), columns, key_cols=keys, order_col=None, num_buckets=7
+    )
+    ddl = ", ".join(f"{n} {typ}" for n, typ in columns)
+    t.merge(spark.createDataFrame(rows, ddl), batch_id="b0")
+    probe = [tuple(r[: len(keys)]) for r in rows[:40:3] + rows[-4:]] + [tuple(rows[0][: len(keys)])]
+    kdf = spark.createDataFrame(probe, ", ".join(f"{k} {dict(columns)[k]}" for k in keys))
+    want = t.read().join(kdf, keys, "semi").collect()
+    got = t.lookup(probe if len(keys) > 1 else [p[0] for p in probe]).collect()
+    assert sorted(map(repr, got)) == sorted(map(repr, want))
+    assert len(got) > 1
 
 
 def test_write_rejects_more_than_one_file_per_bucket(spark, tmp_path, monkeypatch):

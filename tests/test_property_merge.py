@@ -127,3 +127,91 @@ def test_snapshot_diff_converges_to_new(spark, tmp_path_factory, old, new):
     assert n_changes == len(expected)
     # convergence: a second diff is empty
     assert diff_snapshots(df(new), t.read(), "k").count() == 0
+
+
+# ---------------------------------------------------------------------------
+# Point-lookup property: for ANY history of merges (overlays at several
+# depths, with or without compaction, tombstones, NULL order values) and
+# schema evolution (add, rename of payload or key column, widen),
+# lookup(keys) returns exactly read() filtered to the keys: same rows,
+# same values, same Spark schema, for missing and duplicated keys and
+# with or without the system columns.
+# ---------------------------------------------------------------------------
+
+EVOLUTIONS = ("none", "add", "rename_payload", "rename_key", "widen")
+
+
+def lookup_histories():
+    ev = st.tuples(
+        st.integers(0, 3),  # key
+        st.integers(0, 1),  # second key component (composite tables)
+        st.one_of(st.none(), st.integers(0, 2)),  # ts offset; None = NULL order value
+        st.sampled_from(["I", "U", "U", "D"]),  # op (weighted)
+    )
+    step = st.tuples(
+        st.lists(ev, min_size=1, max_size=8),  # one merge
+        st.booleans(),  # compact_deltas after it
+        st.sampled_from(EVOLUTIONS),  # evolution after it
+    )
+    return st.lists(step, min_size=2, max_size=4)
+
+
+# every stored key (u0-u3) and one never stored (u4) is looked up in every
+# example; the drawn extras repeat some of them
+ALL_KEYS = [(k, j) for k in range(5) for j in range(2)]
+
+
+@settings(
+    max_examples=20,
+    deadline=None,
+    derandomize=True,
+    suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
+)
+@given(
+    composite=st.booleans(),
+    history=lookup_histories(),
+    extra=st.lists(st.sampled_from(ALL_KEYS), max_size=4),
+    include_system=st.booleans(),
+)
+def test_lookup_equals_filtered_read(
+    spark, tmp_path_factory, composite, history, extra, include_system
+):
+    from collections import Counter
+
+    names = {"k": "k", "j": "j", "v": "v", "n": "n"}
+    cols = [("k", "string"), ("j", "int"), ("ts", "timestamp"), ("v", "string"), ("n", "int")]
+    keys = ["k", "j"] if composite else ["k"]
+    t = LakeTable.create(
+        spark, str(tmp_path_factory.mktemp("lk") / "t"), cols, keys, "ts", num_buckets=4
+    )
+    lsn = 0
+    for i, (events, compact, evolution) in enumerate(history):
+        rows = []
+        for k, j, tsi, op in events:
+            ts = None if tsi is None else dt.datetime(2026, 1, 1) + dt.timedelta(seconds=tsi)
+            rows.append((lsn, op, f"u{k}", j, ts, f"v{lsn}", lsn))
+            lsn += 1
+        ddl = (
+            f"_event_id long, op string, {names['k']} string, {names['j']} int, "
+            f"ts timestamp, {names['v']} string, {names['n']} int"
+        )
+        t.merge(spark.createDataFrame(rows, ddl), batch_id=f"b{i}")
+        if compact:
+            t.compact_deltas()
+        if evolution == "add" and "x" not in t.user_columns():
+            t.add_column("x", "double")
+        elif evolution in ("rename_payload", "rename_key"):
+            c = "v" if evolution == "rename_payload" else "k"
+            t.rename_column(names[c], names[c] + "_")
+            names[c] += "_"
+        elif evolution == "widen" and t.schema.field_by_name(names["n"]).type == "int":
+            t.widen_column(names["n"], "long")
+
+    kname = names["k"]
+    wanted = [(f"u{k}", j) if composite else f"u{k}" for k, j in ALL_KEYS + extra]
+    got = t.lookup(wanted, include_system=include_system)
+    full = t.read(include_system=include_system)
+    key_of = (lambda r: (r[kname], r["j"])) if composite else (lambda r: r[kname])
+    want = [r for r in full.collect() if key_of(r) in set(wanted)]
+    assert got.schema == full.schema
+    assert Counter(map(tuple, got.collect())) == Counter(map(tuple, want))
