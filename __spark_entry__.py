@@ -155,7 +155,7 @@ def cdc_pull_cycle(spark, sf_dir):
     over a deterministic polling source (the events table as it would look
     at T1 = first half of the event-id space, then at T2 = all of it).
     Exercises the reference's actual entry loop end-to-end
-    (``db_pipeline.py:75-94``): checkpointed-cursor read → incremental
+    (``db_pipeline.py:75-94``): committed-cursor read → incremental
     scan filtered by it → exactly-once MERGE → cursor advance. Cycle 2
     MUST only see rows above cycle 1's cursor; the final state equals the
     one-shot LWW SQL over all events."""
@@ -180,11 +180,11 @@ def cdc_pull_cycle(spark, sf_dir):
     orch = SyncOrchestrator(spark, root, [cfg], sources={"pull": source})
     (r1,) = orch.pull_cycle("t1")
     assert r1.status == "perfect", r1.metrics
-    assert orch.engine("pull").cp.cursor() == cut  # cursor advanced to T1's edge
+    assert orch.engine("pull").table.snapshot.cursor == cut  # cursor advanced to T1's edge
     phase["n"] = 2
     (r2,) = orch.pull_cycle("t2")
     assert r2.status == "perfect", r2.metrics
-    assert r2.metrics["last_value"] == cut  # cycle 2 scanned FROM the checkpoint
+    assert r2.metrics["last_value"] == cut  # cycle 2 scanned FROM the committed cursor
     t = orch.engine("pull").table
     return t.read().select(
         "user_id",

@@ -10,7 +10,8 @@ A brand-new engine with the capabilities of the reference
   replay from any checkpoint converges (CRDT-style LWW register),
 - schema evolution (add / rename / type-widen) detected from event
   envelopes and applied as metadata-only ops before apply,
-- per-partition offset checkpoints + lineage + metrics,
+- per-partition offsets and the pull cursor committed in the same
+  snapshot as the data, plus batch lineage and a metrics log,
 - vectorized pandas/Arrow UDFs for all Python-side transforms (no
   per-row Python UDFs anywhere in the hot path),
 - skew handling: salted two-phase reduction and partial-aggregate LWW.

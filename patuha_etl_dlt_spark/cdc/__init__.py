@@ -1,4 +1,4 @@
-"""CDC engine: change-event feed → lake-table MERGE with checkpoints.
+"""CDC engine: change-event feed → lake-table MERGE, exactly once.
 
 Spark-first re-expression of the reference's incremental sync pipeline
 (``/root/reference/source/pipeline_management.py:605-1223``)."""

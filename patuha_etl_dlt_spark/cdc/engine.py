@@ -6,15 +6,18 @@ one declarative plan):
 
     events ──filter(lsn > offsets[partition])──► sanitize (native cols)
           ──extract text (Arrow pandas UDF)──► evolve schema (metadata ops)
-          ──LWW MERGE into LakeTable (batch_id-idempotent)
-          ──commit per-partition offsets + metrics to CheckpointStore
+          ──LWW MERGE into LakeTable, one snapshot carrying the batch id
+            and the per-partition offsets (batch_id-idempotent)
+          ──append the batch's metrics line to CheckpointStore
 
-Exactly-once across the two writes (MERGE, then offsets — "two writes, one
-logical commit", SURVEY.md §7): the MERGE snapshot records the batch id;
-on restart, an already-merged batch skips the MERGE and just re-commits
-offsets, so any crash point converges. That sequence lives in one place,
-``CdcEngine.commit_once``; the push apply, the snapshot seed and the
-orchestrator's pulls each supply only their write step.
+Exactly-once in one atomic commit: the snapshot that publishes the batch's
+data files also records its batch id, its offsets and (for a pull) its
+cursor, so there is no window in which the data is committed and the feed
+state is not. On restart an already-committed batch is skipped, and the
+offsets and cursor the next batch reads are exactly the committed ones.
+That sequence lives in one place, ``CdcEngine.commit_once``; the push
+apply, the snapshot seed and the orchestrator's pulls each supply only
+their write step.
 
 Scale shape of one batch: two exchanges. The LWW pre-reduce
 (map-side-combined ``max_by``, at the session's shuffle width) runs
@@ -41,6 +44,7 @@ from patuha_etl_dlt_spark.cdc.dedup import lww_agg
 from patuha_etl_dlt_spark.cdc.envelope import HTML, LSN, OP, PARTITION, SCHEMA, TEXT
 from patuha_etl_dlt_spark.functions.html import with_extracted_text
 from patuha_etl_dlt_spark.functions.sanitize import sanitize_columns
+from patuha_etl_dlt_spark.lake.metadata import cursor_json
 from patuha_etl_dlt_spark.lake.table import SYS_EVENT, LakeTable
 
 
@@ -78,12 +82,11 @@ class CdcEngine:
         self.table = table
         self.cp = checkpoints
         self.cfg = config or EngineConfig()
-        self._n_batches: int | None = None  # compaction cadence counter
 
     # ------------------------------------------------------------ plumbing
 
     def _filter_new(self, events: DataFrame) -> DataFrame:
-        """Drop events at or below the checkpointed per-partition offset —
+        """Drop events at or below the committed per-partition offset —
         the reference's cursor predicate ``WHERE modifier > :ts``
         (pipeline_management.py:149) generalized to per-partition LSNs.
 
@@ -95,7 +98,7 @@ class CdcEngine:
         batches). Beyond ``_MAX_LITERAL_OFFSETS`` entries it falls back to
         the broadcast join (a giant literal expression would bloat the
         plan instead)."""
-        offsets = self.cp.offsets()
+        offsets = self.table.snapshot.offsets
         if not offsets:
             return events
         if len(offsets) <= _MAX_LITERAL_OFFSETS:
@@ -214,29 +217,24 @@ class CdcEngine:
 
     # ------------------------------------------------------------- apply
 
-    def commit_once(self, batch_id: str, write, heal_offsets=None) -> dict:
+    def commit_once(self, batch_id: str, write) -> dict:
         """The exactly-once commit step every table write goes through
         (push apply, snapshot seed, and the orchestrator's pulls).
 
-        ``write()`` performs the table write with ``batch_id`` stamped into
-        the lake snapshot and returns ``(metrics, offsets, cursor)``; then
-        the compaction cadence advances and the checkpoint commits. Two
-        writes, one logical commit: a crash between the lake snapshot and
-        the checkpoint is healed here on replay — the batch is already in
-        the table, so nothing is rewritten and only the checkpoint is
-        re-committed, with the offsets ``heal_offsets()`` recomputes (none
-        when it is not given). A healed pull leaves its cursor unchanged:
-        the next cycle re-pulls the gap and the LWW merge converges."""
+        A batch already in the table is skipped. Otherwise ``write()``
+        performs the table write — one snapshot carrying the data, the
+        batch id, and the batch's offsets and cursor — and returns its
+        metrics; then the compaction cadence advances and the metrics line
+        is appended to the log. A crash before the snapshot swap leaves
+        nothing committed (the replay re-applies the batch); a crash after
+        it loses at most the metrics line (the replay is skipped)."""
         t0 = time.time()
         if self.table.has_batch(batch_id):
-            if not self.cp.has_batch(batch_id):
-                offsets = heal_offsets() if heal_offsets is not None else {}
-                self.cp.commit(batch_id, offsets, {"skipped_merge": True})
             return {"skipped": True, "batch_id": batch_id}
-        metrics, offsets, cursor = write()
+        metrics = write()
         self.maybe_compact(metrics)
         metrics["seconds"] = round(time.time() - t0, 3)
-        self.cp.commit(batch_id, offsets, metrics, cursor=cursor)
+        self.cp.commit(batch_id, metrics)
         return metrics
 
     def apply_batch(
@@ -256,22 +254,14 @@ class CdcEngine:
         N→4N scaling on small batches). When either is absent the engine
         falls back to the column-pruned discovery pre-pass."""
         batch_id = batch_id or uuid.uuid4().hex
-
-        def heal_offsets():
-            # the batch already merged: recompute its offsets from it
-            if offsets is not None:
-                return offsets
-            return self._offsets_and_counts(self._filter_new(events))[0]
-
         return self.commit_once(
-            batch_id,
-            lambda: self._apply_write(events, batch_id, offsets, descriptors),
-            heal_offsets,
+            batch_id, lambda: self._apply_write(events, batch_id, offsets, descriptors)
         )
 
-    def _apply_write(self, events, batch_id, offsets, descriptors):
+    def _apply_write(self, events, batch_id, offsets, descriptors) -> dict:
         """``apply_batch``'s write step: filter, evolve, prepare and MERGE
-        the batch; returns ``(metrics, offsets, None)`` for the commit."""
+        the batch, committing its offsets with the data; returns the
+        metrics."""
         # one column-pruned pre-pass (offsets + counts + schema descriptors
         # — partition_id/lsn/op/schema_json only) unless the source already
         # told us; the heavy payload columns are read exactly once, inside
@@ -280,8 +270,8 @@ class CdcEngine:
         obs_in: Observation | None = None
         if offsets is not None and descriptors is not None:
             # no discovery job — but batch counts must still reach the
-            # checkpoint metrics (status()'s recent_events_per_sec reports
-            # on exactly this path). Piggyback an Observation on the batch
+            # metrics log (status()'s recent_events_per_sec reports on
+            # exactly this path). Piggyback an Observation on the batch
             # plan: the counts fall out of the MERGE job itself, zero extra
             # jobs, measured BEFORE the LWW pre-reduce collapses duplicates.
             new_off, counts = offsets, {}
@@ -302,6 +292,7 @@ class CdcEngine:
             # the pre-reduce already left one winner per key — the merge
             # skips its in-batch reduction (one agg pass over the batch)
             delta_reduced=True,
+            txn=lambda: (new_off, None),
         )
         if obs_in is not None:
             # already resolved: the merge write ran the plan. Spark keeps no
@@ -319,12 +310,13 @@ class CdcEngine:
             )
         metrics.update(counts)
         metrics["evolution_ops"] = evolution.ops_json(renames)
-        return metrics, new_off, None
+        return metrics
 
     def _gc_safe(self) -> bool:
         """Whether the compaction cadence may purge tombstones below the
-        min-offset horizon (event id < min of the checkpointed offsets) from
-        the buckets it rewrites anyway — opportunistic, no extra I/O.
+        min-offset horizon (event id < min of the committed offsets in the
+        head snapshot) from the buckets it rewrites anyway — opportunistic,
+        no extra I/O.
 
         Only when the table's LWW order IS the LSN (``order_col=None`` at
         create time, so ``order_cols[0] == _event_id``). Under any other
@@ -342,30 +334,28 @@ class CdcEngine:
         an offset. Replays are then safe — the offset filter drops any
         event at or below a partition's offset, and every future event
         outranks the purged tombstone by LSN. A partition that has never
-        committed is not in the checkpoint, so its events are not bounded
-        by the horizon: one carrying an LSN below it can still arrive and
-        win against a key whose tombstone was purged
+        committed has no offset in the snapshot, so its events are not
+        bounded by the horizon: one carrying an LSN below it can still
+        arrive and win against a key whose tombstone was purged
         (``test_tombstone_gc_late_partition_resurrects_key``)."""
         return self.table.snapshot.order_cols[0] == SYS_EVENT
 
     def maybe_compact(self, metrics: dict | None = None) -> dict | None:
-        """Advance the compaction cadence by one committed write and fold
-        when it fires — called by ``commit_once``, so every write path
+        """Fold when the compaction cadence fires — called by
+        ``commit_once`` after each committed write, so every write path
         (push, pull, snapshot seed) rides it and a long-running
         ``run_pull_loop`` cannot accrete one overlay file-set per cycle
         forever.
 
-        The in-memory counter is seeded from the checkpoint once:
-        re-parsing the whole state document every batch is a per-batch
-        fixed cost that grows with history. On the cadence the fold also
-        purges passed tombstones when ``_gc_safe`` allows it."""
+        The cadence is the head snapshot's ``n_batches`` (committed with
+        the batch itself, so a restart resumes it exactly). On the cadence
+        the fold also purges passed tombstones when ``_gc_safe`` allows
+        it."""
         if not self.cfg.compact_every:
             return metrics
-        if self._n_batches is None:
-            self._n_batches = self.cp.read()["n_batches_total"]
-        self._n_batches += 1
-        if self._n_batches % self.cfg.compact_every == 0:
-            offs = self.cp.offsets() if self._gc_safe() else {}
+        snap = self.table.snapshot
+        if snap.n_batches % self.cfg.compact_every == 0:
+            offs = snap.offsets if self._gc_safe() else {}
             n = self.table.compact_deltas(
                 purge_tombstones_below=min(offs.values()) if offs else None
             )
@@ -377,6 +367,30 @@ class CdcEngine:
         """Initial full load — the reference's full-refresh/replace path
         (pipeline_management.py:1225-1506) as one overwrite commit."""
         return self.commit_once(
-            batch_id,
-            lambda: (self.table.overwrite(snapshot_df, batch_id=batch_id), {}, None),
+            batch_id, lambda: self.table.overwrite(snapshot_df, batch_id=batch_id)
         )
+
+    def status(self) -> dict:
+        """Queryable health/status summary (R8 — the reference's
+        ``monitoring.py:16-152`` health endpoint payload, minus the
+        DB-connectivity probes that have no Spark analog): batch count,
+        last batch, cursor, offsets and last commit age from the head
+        snapshot, and recent throughput from the metrics log."""
+        snap = self.table.snapshot
+        committed_at = snap.ts if snap.n_batches else None
+        out = {
+            "n_batches": snap.n_batches,
+            "last_batch_id": snap.batch_ids[-1] if snap.batch_ids else None,
+            "cursor": cursor_json(snap.cursor),
+            "committed_at": committed_at,
+            "last_commit_age_s": round(time.time() - committed_at, 3) if committed_at else None,
+            "offsets": snap.offsets,
+        }
+        recent = self.cp.metrics_tail(10)
+        # every commit records its seconds; only event applies count events
+        applied = sum(m.get("events_applied", 0) for m in recent)
+        secs = sum(m.get("seconds", 0.0) for m in recent if "events_applied" in m)
+        out["recent_events_applied"] = applied
+        out["recent_events_per_sec"] = round(applied / secs, 1) if secs else None
+        out["last_batch_metrics"] = recent[-1] if recent else None
+        return out

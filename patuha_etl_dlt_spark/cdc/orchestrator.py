@@ -32,23 +32,24 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from patuha_etl_dlt_spark.cdc import evolution
-from patuha_etl_dlt_spark.cdc.checkpoint import _NUMERIC, CheckpointStore
+from patuha_etl_dlt_spark.cdc.checkpoint import CheckpointStore
 from patuha_etl_dlt_spark.cdc.engine import CdcEngine, EngineConfig
 from patuha_etl_dlt_spark.cdc.retry import RetryPolicy, RetryQueue, with_retry
 from patuha_etl_dlt_spark.config import TableConfig
 from patuha_etl_dlt_spark.lake import LakeTable
+from patuha_etl_dlt_spark.lake.metadata import _NUMERIC
 from patuha_etl_dlt_spark.lake.table import OP
 
 
 def _check_cursor_type(prev, dtype) -> None:
-    """Pre-merge guard matching ``checkpoint._max_cursor``'s type rules:
+    """Pre-merge guard matching ``metadata._max_cursor``'s type rules:
     a committed int/float/Decimal cursor is only advanceable by a NUMERIC
     source column; a committed string cursor (timestamps/dates serialize
     to str, see ``_json_cursor``) by a string/timestamp/date column. Any
-    other combination would raise inside the post-merge checkpoint commit
-    — permanently wedging the cycle — so it raises HERE, before the merge
-    runs, where the failure is clean and the cycle retryable after an
-    explicit cursor migration."""
+    other combination would raise inside the snapshot commit's cursor fold
+    — after the scan and the data-file write — so it raises HERE, before
+    any data file is written, where the failure costs nothing and the
+    cycle is retryable after an explicit cursor migration."""
     from pyspark.sql import types as T
 
     if prev is None:
@@ -63,21 +64,21 @@ def _check_cursor_type(prev, dtype) -> None:
         ok = False
     if not ok:
         raise TypeError(
-            f"cursor type changed: checkpoint holds {type(prev).__name__}"
+            f"cursor type changed: the table holds {type(prev).__name__}"
             f"({prev!r}) but the source cursor column is now {dtype.simpleString()}; "
             "a type flip would bypass the monotone guard. Migrate the cursor "
-            "explicitly (reset the checkpoint or normalize the source type)."
+            "explicitly (a new table, or normalize the source type)."
         )
 
 
 def _json_cursor(v):
-    """Canonical checkpoint cursor value. Timestamps/dates become
+    """Canonical committed cursor value. Timestamps/dates become
     Python's ``str()`` form (``YYYY-MM-DD HH:MM:SS[.ffffff]`` — fractions
     are absent or exactly 6 digits, so lexicographic order equals time
-    order, keeping the checkpoint's monotone-max guard correct); ints,
+    order, keeping the snapshot's monotone-max cursor fold correct); ints,
     floats, Decimals and strings pass through unchanged (a Decimal stays
-    exact and compares numerically — the checkpoint stores it tagged,
-    see ``checkpoint._encode_cursor``)."""
+    exact and compares numerically — the snapshot stores it tagged, see
+    ``metadata.cursor_json``)."""
     if v is None or isinstance(v, (*_NUMERIC, str)):
         return v
     return str(v)
@@ -109,7 +110,7 @@ class SyncOrchestrator:
         scheduler pool.
 
         ``sources``: per-table pull sources for ``pull_cycle`` — either a
-        ``JdbcSourceConfig`` (the checkpointed cursor is substituted into
+        ``JdbcSourceConfig`` (the committed cursor is substituted into
         ``last_value`` each cycle, pushing ``WHERE cursor > :last`` into
         the remote DB) or a callable ``(spark, last_value) -> DataFrame``
         (file feeds, test doubles). Tables without a source are
@@ -244,12 +245,13 @@ class SyncOrchestrator:
         return src(self.spark, last_value), f"callable(last_value={last_value!r})"
 
     def _derive_cursor_from_target(self, eng: CdcEngine, cursor_col: str):
-        """Cold-checkpoint fallback: re-derive the cursor from the TARGET
+        """No-cursor fallback: re-derive the cursor from the TARGET
         table, the reference's ``get_max_timestamp``
         (``pipeline_management.py:39-56`` — it does this EVERY cycle
-        because it distrusts dlt state; we only do it when the checkpoint
-        has no cursor, e.g. a fresh checkpoint dir pointed at an existing
-        table). O(target state) scan, hence not the steady-state path."""
+        because it distrusts dlt state; we only do it when the table has
+        no committed cursor, e.g. a table loaded by a push or seed before
+        its first pull). O(target state) scan, hence not the steady-state
+        path."""
         if not eng.table.snapshot.files:
             return None
         row = eng.table.read().agg(F.max(F.col(cursor_col)).alias("m")).first()
@@ -257,7 +259,7 @@ class SyncOrchestrator:
 
     def _pull_one(self, name: str, eng: CdcEngine, bid: str) -> dict:
         """One table's pull through the engine's exactly-once commit step,
-        which heals a replayed cycle id before any source scan runs."""
+        which skips a replayed cycle id before any source scan runs."""
         write = {
             "snapshot": self._snapshot_write,
             "snapshot_diff": self._diff_write,
@@ -267,22 +269,20 @@ class SyncOrchestrator:
     def _snapshot_write(self, name: str, eng: CdcEngine, bid: str):
         """Full-refresh pull: the scanned source replaces the table."""
         df, desc = self._build_scan(name, None)
-        return {**eng.table.overwrite(df, batch_id=bid), "source_query": desc}, {}, None
+        return {**eng.table.overwrite(df, batch_id=bid), "source_query": desc}
 
     def _cursor_write(self, name: str, eng: CdcEngine, bid: str):
-        """Cursor pull: scan above the checkpointed cursor, merge, and hand
-        the advanced cursor to the commit."""
+        """Cursor pull: scan above the committed cursor and merge; the
+        advanced cursor commits in the merge's own snapshot."""
         cfg = self.configs[name]
-        last = eng.cp.cursor()
+        last = eng.table.snapshot.cursor
         if last is None:
             last = self._derive_cursor_from_target(eng, cfg.cursor)
         df, desc = self._build_scan(name, last)
-        # fail a cursor TYPE FLIP before any state lands: the checkpoint's
-        # monotone guard would raise inside commit — after the MERGE —
-        # wedging the cycle on the heal path (every retry skips the merge
-        # and re-raises on re-commit). The source column's type is known
-        # from the introspected scan schema, so the mismatch is detectable
-        # up front, where failing is clean and retryable.
+        # fail a cursor TYPE FLIP before any data file is written: the
+        # snapshot's monotone cursor fold would raise only after the merge
+        # wrote its files. The source column's type is known from the
+        # introspected scan schema, so the mismatch is detectable up front.
         _check_cursor_type(last, df.schema[cfg.cursor].dataType)
         # source-introspection evolution BEFORE apply: a column
         # added/widened upstream evolves the lake table as metadata-only
@@ -290,6 +290,14 @@ class SyncOrchestrator:
         # merges cleanly
         ops = evolution.evolve_from_source(eng.table, df.schema)
         obs = Observation()
+
+        def pulled_cursor():
+            # resolved once the write has run. An empty pull still commits
+            # the (derived) cursor, so a table without one warms up and
+            # never re-derives again.
+            new_cursor = _json_cursor(obs.get["cursor_max"])
+            return new_cursor if new_cursor is not None else last
+
         m = eng.table.merge(
             df,
             batch_id=bid,
@@ -298,20 +306,16 @@ class SyncOrchestrator:
                 F.max(F.col(cfg.cursor)).alias("cursor_max"),
                 F.count(F.lit(1)).alias("rows_pulled"),
             ),
+            txn=lambda: ({}, pulled_cursor()),
         )
-        got = obs.get
-        new_cursor = _json_cursor(got["cursor_max"])
-        # an empty pull still commits the (derived) cursor, so a cold
-        # checkpoint warms up and never re-derives again
-        cursor = new_cursor if new_cursor is not None else last
         m.update(
-            rows_pulled=int(got["rows_pulled"] or 0),
+            rows_pulled=int(obs.get["rows_pulled"] or 0),
             last_value=last,
-            cursor=cursor,
+            cursor=pulled_cursor(),
             source_query=desc,
             evolution_ops=evolution.ops_json(ops),
         )
-        return m, {}, cursor
+        return m
 
     def _diff_write(self, name: str, eng: CdcEngine, bid: str):
         """Snapshot-diff pull: full pull, but MERGE only the derived
@@ -364,13 +368,13 @@ class SyncOrchestrator:
             source_query=desc,
             evolution_ops=evolution.ops_json(ops),
         )
-        return m, {}, None
+        return m
 
     def pull_cycle(self, batch_id: str, tables: list[str] | None = None) -> list[SyncResult]:
         """One closed-loop sync cycle — the reference's actual entry point
         (``db_pipeline.py:75-94``: derive cursor → build incremental
         extract → load → repeat): for each table with a registered source,
-        read the checkpointed cursor, build the pushed-down incremental
+        read the committed cursor, build the pushed-down incremental
         scan (``WHERE cursor > :last`` runs IN the source DB against its
         own index), auto-evolve the lake schema from the introspected
         source schema, LWW-MERGE the batch exactly-once, and advance the
@@ -381,8 +385,8 @@ class SyncOrchestrator:
         updates only — upstream DELETEs don't bump a cursor column, so
         they need the event-envelope path (``run_cycle``/``apply_batch``
         with op='D') or ``snapshot_diff`` mode. Failures queue for retry;
-        re-running a cycle id is idempotent end-to-end (merge batch-id +
-        checkpoint heal, ``CdcEngine.commit_once``)."""
+        re-running a cycle id is idempotent end-to-end (the batch id and
+        the cursor commit in one snapshot, ``CdcEngine.commit_once``)."""
         names = [n for n in (tables if tables is not None else self.configs) if n in self.sources]
         return self._fan_out(names, batch_id, self._pull_one)
 
@@ -404,8 +408,7 @@ class SyncOrchestrator:
         for name in tables if tables is not None else self.configs:
             if name not in self.sources:
                 continue
-            st = self.engine(name).cp.read()
-            for bid in st["batches"]:
+            for bid in self.engine(name).table.snapshot.batch_ids:
                 head = bid.split(":", 1)[0]
                 if head.startswith(f"{cycle_prefix}-"):
                     try:
@@ -436,7 +439,7 @@ class SyncOrchestrator:
         any_commits, any_missing = False, False
         for name in self.configs:
             if name in self._engines:
-                s = self._engines[name].cp.status()
+                s = self._engines[name].status()
                 tables[name] = s
                 if s["n_batches"]:
                     any_commits = True

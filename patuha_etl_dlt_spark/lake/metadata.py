@@ -17,6 +17,7 @@ import tempfile
 import time
 import uuid
 from dataclasses import dataclass, field
+from decimal import Decimal
 
 from pyspark.sql import types as T
 
@@ -167,6 +168,45 @@ class DataFile:
         return DataFile(d["path"], d["bucket"], d["schema_id"], d.get("kind", "base"))
 
 
+_NUMERIC = (int, float, Decimal)
+
+
+def _max_cursor(prev, new):
+    """Monotone-max for pull cursors that is TYPE-STABLE: int, float and
+    Decimal compare numerically (a source whose cursor round-trips
+    int→float — e.g. a DOUBLE MAX() — can never move the high-water mark
+    backwards); same-type values compare natively; any other type change
+    is an explicit error, not a silent reset (a replayed older batch must
+    not regress the cursor and re-pull a whole window)."""
+    if prev is None:
+        return new
+    if new is None:
+        return prev
+    if (
+        isinstance(prev, _NUMERIC)
+        and isinstance(new, _NUMERIC)
+        and not isinstance(prev, bool)
+        and not isinstance(new, bool)
+    ):
+        # keep the winner's own type (int stays int unless a float wins)
+        return prev if prev >= new else new
+    if type(prev) is type(new):
+        return max(prev, new)
+    raise TypeError(
+        f"cursor type changed: {type(prev).__name__}({prev!r}) -> "
+        f"{type(new).__name__}({new!r}); a type flip would bypass the "
+        "monotone guard. Migrate the cursor column explicitly (a new table, "
+        "or normalize the source cursor type)."
+    )
+
+
+def cursor_json(v):
+    """JSON form of a pull cursor: a Decimal (a DECIMAL cursor column) is
+    stored tagged with its exact digits, so it reads back as a Decimal
+    that compares numerically; every other cursor is stored as is."""
+    return {"decimal": str(v)} if isinstance(v, Decimal) else v
+
+
 @dataclass
 class Snapshot:
     version: int
@@ -180,10 +220,16 @@ class Snapshot:
     # batch ids for idempotent re-apply. With batch_retention=None the list
     # is cumulative; with retention=K only the K most recent are kept (the
     # Delta txn-retention pattern) — exactly-once then holds for any replay
-    # within a K-batch horizon, which the engine's checkpoint offsets
-    # guarantee (older events are filtered before they reach the merge).
+    # within a K-batch horizon, which ``offsets`` guarantees for an engine
+    # feed (older events are filtered before they reach the merge).
     batch_ids: list[str] = field(default_factory=list)
     batch_retention: int | None = None
+    # the feed's transaction state, committed in the same swap as the data
+    # it describes (Delta's txn action): per-partition LSN high-water marks,
+    # the pull cursor, and the count of batches ever committed
+    offsets: dict[int, int] = field(default_factory=dict)
+    cursor: object = None
+    n_batches: int = 0
     summary: dict = field(default_factory=dict)
     ts: float = 0.0
 
@@ -203,12 +249,16 @@ class Snapshot:
             "files": [f.to_json() for f in self.files],
             "batch_ids": self.batch_ids,
             "batch_retention": self.batch_retention,
+            "offsets": {str(k): v for k, v in sorted(self.offsets.items())},
+            "cursor": cursor_json(self.cursor),
+            "n_batches": self.n_batches,
             "summary": self.summary,
             "ts": self.ts,
         }
 
     @staticmethod
     def from_json(d: dict) -> "Snapshot":
+        cursor = d.get("cursor")
         return Snapshot(
             version=d["version"],
             parent=d["parent"],
@@ -220,6 +270,9 @@ class Snapshot:
             files=[DataFile.from_json(f) for f in d["files"]],
             batch_ids=d.get("batch_ids", []),
             batch_retention=d.get("batch_retention"),
+            offsets={int(k): int(v) for k, v in d.get("offsets", {}).items()},
+            cursor=Decimal(cursor["decimal"]) if isinstance(cursor, dict) else cursor,
+            n_batches=d.get("n_batches", 0),
             summary=d.get("summary", {}),
             ts=d.get("ts", 0.0),
         )

@@ -32,7 +32,9 @@ Spark-first design:
 - **Atomic commits + exactly-once**: a snapshot manifest lists data files;
   committing is an atomic pointer swap. Each snapshot records the batch
   ids it contains; re-applying a committed ``batch_id`` is a no-op
-  (the Iceberg snapshot-summary idempotence protocol).
+  (the Iceberg snapshot-summary idempotence protocol). The same swap
+  records the feed's offsets and pull cursor (Delta's ``txn`` action),
+  so there is no second state store to keep in step.
 - **Schema evolution**: metadata-only add / rename / type-widen with
   column IDs; old files are id-mapped + cast at scan time.
 """
@@ -191,10 +193,10 @@ class LakeTable:
         snapshot manifest (None = unbounded). At a 10^10-event feed the
         cumulative id list would make every commit O(history); with
         retention the manifest stays O(live files + K) forever. Safe when
-        replays can only come from the last K batches — the engine's
-        checkpoint offsets guarantee exactly that (older events are
-        filtered out before the merge). Leave None for rollup tables fed
-        outside an offset-guarded path.
+        replays can only come from the last K batches — the offsets each
+        engine commit records in the same snapshot guarantee exactly that
+        (older events are filtered out before the merge). Leave None for
+        rollup tables fed outside an offset-guarded path.
         """
         key_cols = [key_cols] if isinstance(key_cols, str) else list(key_cols)
         names = [c for c, _ in columns]
@@ -536,16 +538,32 @@ class LakeTable:
             )
         return new_files, (obs.get if obs is not None else {})
 
-    def _commit(self, snap: Snapshot, files: list[DataFile], batch_id: str | None, summary: dict) -> Snapshot:
+    def _commit(
+        self, snap: Snapshot, files: list[DataFile], batch_id: str | None, summary: dict, txn=None
+    ) -> Snapshot:
+        """Publish the successor of ``snap`` with ``files``. ``txn``: the
+        batch's transaction record, a zero-arg callable returning
+        ``(offsets, cursor)`` — called here, after the data files are
+        written (a pull learns its cursor from the write's own
+        Observation), and folded in: offsets by per-partition max, the
+        cursor by ``_max_cursor``. Without ``txn`` both carry forward.
+        Data, batch id, offsets and cursor land in one snapshot swap."""
         ids = snap.batch_ids + ([batch_id] if batch_id else [])
         if snap.batch_retention is not None:
             ids = ids[-snap.batch_retention:]
+        offsets, cursor = txn() if txn is not None else ({}, None)
+        merged = dict(snap.offsets)
+        for p, lsn in offsets.items():
+            merged[int(p)] = max(merged.get(int(p), -1), int(lsn))
         new = dataclasses.replace(
             snap,
             version=snap.version + 1,
             parent=snap.version,
             files=files,
             batch_ids=ids,
+            offsets=merged,
+            cursor=M._max_cursor(snap.cursor, cursor),
+            n_batches=snap.n_batches + (1 if batch_id else 0),
             summary=summary,
         )
         M.write_snapshot(self.meta_dir, new)
@@ -563,10 +581,11 @@ class LakeTable:
             df = df.withColumn(SYS_EVENT, F.lit(None).cast("long"))
         return self._align(df, snap.schema)
 
-    def overwrite(self, df: DataFrame, batch_id: str | None = None) -> dict:
+    def overwrite(self, df: DataFrame, batch_id: str | None = None, txn=None) -> dict:
         """Full refresh (the reference's ``write_disposition="replace"`` path,
         ``pipeline_management.py:1225-1506``): target := source, as a new
-        snapshot — O(metadata) "truncate", no row deletes."""
+        snapshot — O(metadata) "truncate", no row deletes. ``txn``: see
+        ``_commit``."""
         snap = self.snapshot
         if batch_id and batch_id in snap.batch_ids:
             return {"skipped": True, "batch_id": batch_id}
@@ -576,7 +595,7 @@ class LakeTable:
             metrics=(F.count(F.lit(1)).alias("rows_written"),),
         )
         self._commit(
-            snap, files, batch_id, {"operation": "overwrite", "batch_id": batch_id}
+            snap, files, batch_id, {"operation": "overwrite", "batch_id": batch_id}, txn
         )
         return {"skipped": False, "batch_id": batch_id, **observed}
 
@@ -586,6 +605,7 @@ class LakeTable:
         batch_id: str | None = None,
         delta_reduced: bool = False,
         observe: tuple = (),
+        txn=None,
     ) -> dict:
         """Key-partitioned MERGE of a change-event delta into the table.
 
@@ -617,6 +637,9 @@ class LakeTable:
         max). The delta is bucket-placed first, so the observation runs in
         the write's own stage: observed upstream of a shuffle it would be
         lost whenever adaptive execution replaces an empty shuffle stage.
+
+        ``txn``: the batch's ``(offsets, cursor)`` record, committed with
+        the data (see ``_commit``).
 
         Returns a metrics dict (``files_written`` always equals
         ``buckets_touched``; ``rows_written``/``tombstones`` are observed
@@ -660,7 +683,7 @@ class LakeTable:
             ),
             **observed,
         }
-        self._commit(snap, snap.files + new_files, batch_id, {"operation": "merge", **metrics})
+        self._commit(snap, snap.files + new_files, batch_id, {"operation": "merge", **metrics}, txn)
         return metrics
 
     def replace_buckets(self, df: DataFrame, buckets, batch_id: str | None = None) -> dict:

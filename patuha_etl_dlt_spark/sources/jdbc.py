@@ -99,7 +99,7 @@ class JdbcSourceConfig:
     url: str  # jdbc:mysql://host:3306/db
     table: str
     cursor_col: str | None = None  # reference 'modifier'
-    last_value: object | None = None  # checkpointed cursor (str | int | float | Decimal)
+    last_value: object | None = None  # committed cursor (str | int | float | Decimal)
     partition_col: str | None = None  # numeric/date col for parallel pull
     lower_bound: str | None = None
     upper_bound: str | None = None

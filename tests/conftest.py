@@ -10,3 +10,50 @@ def spark():
     s = get_spark(app_name="tests", master="local[4]", shuffle_partitions=8)
     yield s
     s.stop()
+
+
+class Crash(BaseException):
+    """A simulated process death at a durable write. Not an ``Exception``,
+    so neither the retry policy nor a cycle's per-table failure handler
+    catches it: it ends the call the way a killed process would."""
+
+
+@pytest.fixture()
+def crash_at(monkeypatch):
+    """``crash_at(point)`` makes the next table commit die at ``point``:
+
+    - ``"a"``: inside ``write_snapshot``, after ``snap-*.json`` is written
+      and before ``CURRENT`` is swapped — nothing is committed;
+    - ``"b"``: after ``CURRENT`` is swapped, before the metrics line is
+      appended — the snapshot (data, batch id, offsets, cursor) is
+      committed and only the log line is lost.
+
+    One shot: the write after the crash runs normally. ``crash_at.Crash``
+    is the exception raised."""
+    from patuha_etl_dlt_spark.cdc.checkpoint import CheckpointStore
+    from patuha_etl_dlt_spark.lake import metadata
+
+    def arm(point: str) -> None:
+        if point == "a":
+            real_write = metadata.atomic_write
+
+            def atomic_write(path, data):
+                if path.endswith("CURRENT"):
+                    monkeypatch.setattr(metadata, "atomic_write", real_write)
+                    raise Crash(f"before swapping {path}")
+                real_write(path, data)
+
+            monkeypatch.setattr(metadata, "atomic_write", atomic_write)
+        elif point == "b":
+            real_commit = CheckpointStore.commit
+
+            def commit(self, batch_id, metrics):
+                monkeypatch.setattr(CheckpointStore, "commit", real_commit)
+                raise Crash(f"before the metrics line of {batch_id}")
+
+            monkeypatch.setattr(CheckpointStore, "commit", commit)
+        else:
+            raise ValueError(point)
+
+    arm.Crash = Crash
+    return arm

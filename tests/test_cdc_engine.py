@@ -73,8 +73,8 @@ def test_single_batch_apply_matches_oracle(spark, tmp_path, feed):
     m = eng.apply_batch(to_df(spark, feed), batch_id="all")
     assert m["events_applied"] > 0
     assert table_state(eng.table) == oracle_state(feed)
-    # checkpoint advanced for every partition
-    assert set(eng.cp.offsets()) == set(feed["partition_id"].unique().astype(int))
+    # offsets advanced for every partition, in the same snapshot
+    assert set(eng.table.snapshot.offsets) == set(feed["partition_id"].unique().astype(int))
 
 
 def test_batched_apply_matches_oracle_and_replay_converges(spark, tmp_path, feed):
@@ -106,28 +106,148 @@ def test_restart_from_mid_checkpoint(spark, tmp_path, feed):
     assert table_state(eng2.table) == oracle_state(feed)
 
 
-def test_crash_between_merge_and_checkpoint_heals(spark, tmp_path, feed):
+def restart(spark, eng: CdcEngine) -> CdcEngine:
+    """A fresh engine over the same table and checkpoint directories."""
+    return CdcEngine(LakeTable.load(spark, eng.table.root), CheckpointStore(eng.cp.root), eng.cfg)
+
+
+def lsn_max(pdf: pd.DataFrame) -> dict[int, int]:
+    return {int(p): int(v) for p, v in pdf.groupby("partition_id")["lsn"].max().items()}
+
+
+def test_crash_between_merge_and_checkpoint_heals(spark, tmp_path, feed, crash_at):
+    """A commit can die at two points, on every push write path (the
+    discovery path, the known-offsets path and the snapshot seed):
+    (a) inside ``write_snapshot``, after ``snap-*.json`` and before
+    ``CURRENT`` — nothing is committed, so the replay re-applies the batch;
+    (b) after ``CURRENT``, before the metrics line — data, batch id and
+    offsets are committed together, so the replay is skipped and the
+    offsets stay the crashed commit's. A fresh engine over the same
+    directories converges to the oracle either way; only the lost metrics
+    line is missing from the log."""
     batches = split_batches(feed, 3)
-    eng = make_engine(spark, tmp_path)
-    eng.apply_batch(to_df(spark, batches[0]), batch_id="b0")
 
-    # simulate crash: MERGE commits but the checkpoint write never happens
-    fresh = eng._filter_new(to_df(spark, batches[1]))
-    delta = eng._prepare_delta(fresh, [])
-    eng.table.merge(delta, batch_id="b1")
-    assert eng.table.has_batch("b1") and not eng.cp.has_batch("b1")
+    def apply(eng, path, i):
+        df = to_df(spark, batches[i])
+        if path == "discovery":
+            return eng.apply_batch(df, batch_id=f"b{i}")
+        return eng.apply_batch(df, batch_id=f"b{i}", offsets=lsn_max(batches[i]), descriptors=[])
 
-    # restart: same batch re-delivered → merge skipped, checkpoint healed
-    m = CdcEngine(eng.table, eng.cp).apply_batch(to_df(spark, batches[1]), batch_id="b1")
-    assert m["skipped"] is True
-    assert eng.cp.has_batch("b1")
+    for path in ("discovery", "known_offsets"):
+        for point in ("a", "b"):
+            eng = make_engine(spark, tmp_path, f"{path}_{point}")
+            apply(eng, path, 0)
+            v0 = eng.table.snapshot.version
+            crash_at(point)
+            with pytest.raises(crash_at.Crash):
+                apply(eng, path, 1)
 
-    CdcEngine(eng.table, eng.cp).apply_batch(to_df(spark, batches[2]), batch_id="b2")
-    assert table_state(eng.table) == oracle_state(feed)
+            eng = restart(spark, eng)
+            snap = eng.table.snapshot
+            if point == "a":
+                assert snap.version == v0 and not eng.table.has_batch("b1")
+                assert snap.offsets == lsn_max(batches[0])
+                assert apply(eng, path, 1)["skipped"] is False
+            else:
+                assert snap.version == v0 + 1 and eng.table.has_batch("b1")
+                crashed = snap.offsets
+                assert crashed == lsn_max(pd.concat(batches[:2]))
+                assert apply(eng, path, 1)["skipped"] is True
+                assert eng.table.snapshot.offsets == crashed
+                s = eng.status()
+                assert (s["n_batches"], s["last_batch_id"]) == (2, "b1")
+            apply(eng, path, 2)
+            assert table_state(eng.table) == oracle_state(feed), (path, point)
+            assert eng.table.snapshot.offsets == lsn_max(feed)
+            logged = ["b0", "b1", "b2"] if point == "a" else ["b0", "b2"]
+            assert [m["batch_id"] for m in eng.cp.metrics()] == logged, (path, point)
+
+    # the snapshot seed, then a push batch on top of it
+    seed_rows = [(k, f"s{k}") for k in range(5)]
+    for point in ("a", "b"):
+        t = LakeTable.create(
+            spark, str(tmp_path / f"seed_{point}"), [("k", "long"), ("v", "string")],
+            key_cols="k", order_col=None, num_buckets=2,
+        )
+        eng = CdcEngine(t, CheckpointStore(str(tmp_path / f"seed_{point}_cp")))
+        seed = spark.createDataFrame(seed_rows, "k long, v string")
+        crash_at(point)
+        with pytest.raises(crash_at.Crash):
+            eng.seed_snapshot(seed, "seed")
+
+        eng = restart(spark, eng)
+        assert eng.table.has_batch("seed") is (point == "b")
+        assert eng.seed_snapshot(seed, "seed")["skipped"] is (point == "b")
+        assert (eng.table.snapshot.offsets, eng.table.snapshot.cursor) == ({}, None)
+        eng.apply_batch(
+            spark.createDataFrame([(7, 0, 3, "new")], "lsn long, partition_id int, k long, v string"),
+            batch_id="p1",
+        )
+        assert {r["k"]: r["v"] for r in eng.table.read().collect()} == {**dict(seed_rows), 3: "new"}
+        assert eng.table.snapshot.offsets == {0: 7}
+        assert (eng.status()["n_batches"], eng.status()["last_batch_id"]) == (2, "p1")
+
+
+def test_one_durable_state_write_per_commit(spark, tmp_path, monkeypatch):
+    """A non-compacting commit makes exactly two durable metadata writes —
+    the snapshot manifest and the ``CURRENT`` swap — on the push discovery
+    path, the push known-offsets path and a cursor pull; the checkpoint
+    directory holds only the metrics log."""
+    import os
+
+    from patuha_etl_dlt_spark.cdc.orchestrator import SyncOrchestrator
+    from patuha_etl_dlt_spark.config import TableConfig
+    from patuha_etl_dlt_spark.lake import metadata
+
+    writes: list[str] = []
+    real_write = metadata.atomic_write
+
+    def counting_write(path, data):
+        writes.append(os.path.basename(path))
+        real_write(path, data)
+
+    cols = [("k", "string"), ("ts", "long"), ("v", "string")]
+    rows = [(lsn, f"k{lsn % 3}", lsn, f"v{lsn}", lsn % 2) for lsn in range(10)]
+    events = spark.createDataFrame(rows, "lsn long, k string, ts long, v string, partition_id int")
+    for path in ("discovery", "known_offsets"):
+        t = LakeTable.create(
+            spark, str(tmp_path / path), cols, key_cols="k", order_col="ts", num_buckets=2
+        )
+        eng = CdcEngine(t, CheckpointStore(str(tmp_path / f"{path}_cp")))
+        writes.clear()
+        monkeypatch.setattr(metadata, "atomic_write", counting_write)
+        if path == "discovery":
+            m = eng.apply_batch(events, batch_id="b0")
+        else:
+            m = eng.apply_batch(events, batch_id="b0", offsets={0: 8, 1: 9}, descriptors=[])
+        monkeypatch.setattr(metadata, "atomic_write", real_write)
+        assert m["events_applied"] == 10 and "compacted_buckets" not in m, path
+        assert writes == ["snap-00000001.json", "CURRENT"], path
+        assert t.snapshot.offsets == {0: 8, 1: 9}, path
+        assert os.listdir(eng.cp.root) == ["metrics.jsonl"], path
+
+    cfg = TableConfig(
+        table="p", merge_key=("k",), cursor="c",
+        columns=(("k", "long"), ("c", "long"), ("v", "string")), num_buckets=2,
+    )
+
+    def source(spark_, last):
+        return spark_.createDataFrame([(i, i, f"v{i}") for i in range(5)], "k long, c long, v string")
+
+    orch = SyncOrchestrator(spark, str(tmp_path / "sync"), [cfg], sources={"p": source})
+    eng = orch.engine("p")
+    writes.clear()
+    monkeypatch.setattr(metadata, "atomic_write", counting_write)
+    (r,) = orch.pull_cycle("c1")
+    monkeypatch.setattr(metadata, "atomic_write", real_write)
+    assert r.status == "perfect" and r.metrics["rows_pulled"] == 5
+    assert writes == ["snap-00000001.json", "CURRENT"]
+    assert eng.table.snapshot.cursor == 4
+    assert os.listdir(eng.cp.root) == ["metrics.jsonl"]
 
 
 def test_offset_filter_broadcast_fallback_matches_literal_map(spark, tmp_path, monkeypatch):
-    """Above ``_MAX_LITERAL_OFFSETS`` checkpointed partitions the offset
+    """Above ``_MAX_LITERAL_OFFSETS`` committed partitions the offset
     filter joins a broadcast offsets table instead of inlining a literal
     map; both keep exactly the events above their partition's offset
     (every event of a partition with no offset)."""
@@ -136,7 +256,12 @@ def test_offset_filter_broadcast_fallback_matches_literal_map(spark, tmp_path, m
     n_parts = 1100
     assert n_parts > engine_mod._MAX_LITERAL_OFFSETS
     eng = make_engine(spark, tmp_path)
-    eng.cp.commit("offsets", {p: p % 7 for p in range(n_parts)}, {})
+    # plant the offsets through one table commit, as an engine write does
+    snap = eng.table.snapshot
+    eng.table._commit(
+        snap, snap.files, "offsets", {"operation": "merge"},
+        lambda: ({p: p % 7 for p in range(n_parts)}, None),
+    )
     events = spark.range(0, 3300).select(
         (F.col("id") % (n_parts + 50)).cast("int").alias("partition_id"),
         (F.col("id") % 11).alias("lsn"),
@@ -338,12 +463,12 @@ def test_known_offsets_fast_path_matches_discovery(spark, tmp_path, feed):
     m = e2.apply_batch(half, batch_id="a", offsets={p: 1499 for p in range(nparts)}, descriptors=[])
     assert m["skipped"] is True
     # checkpointed high-water marks cover everything applied
-    assert all(v >= 1499 for v in e2.cp.offsets().values())
+    assert all(v >= 1499 for v in e2.table.snapshot.offsets.values())
 
 
 def test_known_offsets_path_reports_throughput(spark, tmp_path, feed):
     """The known-offsets fast path must still carry events_applied /
-    delete_events into the checkpoint metrics (via the merge job's
+    delete_events into the metrics log (via the merge job's
     Observation — no extra discovery job), so status() reports real
     throughput on exactly the path high-volume sources use."""
     eng = make_engine(spark, tmp_path, "thr")
@@ -357,7 +482,7 @@ def test_known_offsets_path_reports_throughput(spark, tmp_path, feed):
     )
     assert m["events_applied"] == n_events > 0
     assert m["delete_events"] == n_deletes > 0
-    s = eng.cp.status()
+    s = eng.status()
     assert s["recent_events_applied"] == n_events
     assert s["recent_events_per_sec"] is not None and s["recent_events_per_sec"] > 0
     # a re-delivered window under a new batch id is all below the offsets:
@@ -477,32 +602,45 @@ def test_metrics_tail_is_bounded_and_exact(tmp_path):
     # well-formed log: exact agreement with the full parse
     cp2 = CheckpointStore(str(tmp_path / "cp_tail2"))
     for i in range(57):
-        cp2.commit(f"b{i}", {0: i}, {"events_applied": i})
+        cp2.commit(f"b{i}", {"events_applied": i})
     assert cp2.metrics_tail(10) == cp2.metrics()[-10:]
     assert cp2.metrics_tail(500) == cp2.metrics()  # n > len: whole log
     assert cp2.metrics_tail(0) == []
 
 
-def test_cursor_monotone_type_stable(tmp_path):
+def test_cursor_monotone_type_stable(spark, tmp_path):
     """A cursor that round-trips to a different numeric type can never move
     the high-water mark backwards (the old guard reset on ANY type change);
     a genuinely incomparable type flip is an explicit error, not a silent
-    regression."""
-    cp = CheckpointStore(str(tmp_path / "cur_cp"))
-    cp.commit("b1", {}, {}, cursor=5)
-    cp.commit("b2", {}, {}, cursor=3.5)  # replayed older batch as float
-    assert cp.cursor() == 5
-    cp.commit("b3", {}, {}, cursor=7.5)
-    assert cp.cursor() == 7.5
-    cp.commit("b4", {}, {}, cursor=6)
-    assert cp.cursor() == 7.5
-    with pytest.raises(TypeError, match="cursor type changed"):
-        cp.commit("b5", {}, {}, cursor="2026-01-01")
+    regression — and the failed commit publishes nothing."""
 
-    cp2 = CheckpointStore(str(tmp_path / "cur_cp2"))
-    cp2.commit("b1", {}, {}, cursor="2026-01-02 00:00:00")
-    cp2.commit("b2", {}, {}, cursor="2026-01-01 00:00:00")  # replay
-    assert cp2.cursor() == "2026-01-02 00:00:00"
+    def table(name):
+        return LakeTable.create(
+            spark, str(tmp_path / name), [("k", "long"), ("c", "string")],
+            key_cols="k", order_col=None, num_buckets=1,
+        )
+
+    def commit(t, batch_id, cursor):
+        snap = t.snapshot
+        t._commit(snap, snap.files, batch_id, {"operation": "merge"}, lambda: ({}, cursor))
+
+    t = table("cur")
+    commit(t, "b1", 5)
+    commit(t, "b2", 3.5)  # replayed older batch as float
+    assert t.snapshot.cursor == 5
+    commit(t, "b3", 7.5)
+    assert t.snapshot.cursor == 7.5
+    commit(t, "b4", 6)
+    assert t.snapshot.cursor == 7.5
+    v = t.snapshot.version
+    with pytest.raises(TypeError, match="cursor type changed"):
+        commit(t, "b5", "2026-01-01")
+    assert t.snapshot.version == v and not t.has_batch("b5")
+
+    t2 = table("cur2")
+    commit(t2, "b1", "2026-01-02 00:00:00")
+    commit(t2, "b2", "2026-01-01 00:00:00")  # replay
+    assert t2.snapshot.cursor == "2026-01-02 00:00:00"
 
 
 def test_widen_key_column_refused(spark, tmp_path):
@@ -544,7 +682,7 @@ def test_tombstone_gc_skipped_for_business_order_col(spark, tmp_path, feed):
     eng.apply_batch(to_df(spark, batches[0]), batch_id="t0")
     eng.apply_batch(to_df(spark, batches[1]), batch_id="t1")  # cadence #1
     eng.apply_batch(to_df(spark, batches[2]), batch_id="t2")
-    h = min(eng.cp.offsets().values())
+    h = min(eng.table.snapshot.offsets.values())
     tombs_before = {
         r["url"]: r["_event_id"]
         for r in t.read(include_deleted=True, include_system=True)
@@ -603,7 +741,7 @@ def test_tombstone_gc_on_cadence_lsn_ordered_and_replay_converges(spark, tmp_pat
     eng.apply_batch(to_df(spark, batches[0]), batch_id="t0")
     eng.apply_batch(to_df(spark, batches[1]), batch_id="t1")  # cadence #1
     eng.apply_batch(to_df(spark, batches[2]), batch_id="t2")
-    h = min(eng.cp.offsets().values())
+    h = min(eng.table.snapshot.offsets.values())
     tombs_before = {
         r["url"]: r["_event_id"]
         for r in t.read(include_deleted=True, include_system=True)
@@ -716,4 +854,41 @@ def test_push_batches_without_op_and_schema_columns(spark, tmp_path):
             assert m["delete_events"] == 0, path
             assert m["evolution_ops"] == [], path
         assert {r["k"]: r["v"] for r in t.read().collect()} == want, path
-        assert eng.cp.offsets() == {0: 38, 1: 39}, path
+        assert eng.table.snapshot.offsets == {0: 38, 1: 39}, path
+
+
+@pytest.mark.xfail(
+    strict=True,
+    reason="known defect: a late event still carrying the pre-rename "
+    "descriptor renames the column back",
+)
+def test_late_pre_rename_event_keeps_renamed_column(spark, tmp_path):
+    """Field 3 is renamed ``lang`` → ``language`` by batch ``b1``
+    (partition 0). A late batch ``b2`` on partition 1 still carries the old
+    descriptor, so by field id it reads as ``language`` → ``lang``. The
+    rename must stick: the column stays ``language`` and ``b2``'s value
+    lands there."""
+    t = LakeTable.create(
+        spark, str(tmp_path / "rn"), [("url", "string"), ("ts", "long"), ("lang", "string")],
+        key_cols="url", order_col="ts", num_buckets=2,
+    )
+    eng = CdcEngine(t, CheckpointStore(str(tmp_path / "rn_cp")))
+    old = schema_descriptor([(1, "url", "string"), (2, "ts", "long"), (3, "lang", "string")])
+    new = schema_descriptor([(1, "url", "string"), (2, "ts", "long"), (3, "language", "string")])
+    eng.apply_batch(
+        spark.createDataFrame(
+            [(1, 0, new, "u1", 1, "en")],
+            "lsn long, partition_id int, schema_json string, url string, ts long, language string",
+        ),
+        batch_id="b1",
+    )
+    assert t.user_columns() == ["url", "ts", "language"]
+    eng.apply_batch(
+        spark.createDataFrame(
+            [(1, 1, old, "u2", 2, "de")],
+            "lsn long, partition_id int, schema_json string, url string, ts long, lang string",
+        ),
+        batch_id="b2",
+    )
+    assert t.user_columns() == ["url", "ts", "language"]
+    assert {r["url"]: r["language"] for r in t.read().collect()} == {"u1": "en", "u2": "de"}

@@ -304,7 +304,9 @@ def test_orderless_table_lww_by_event_id(spark, tmp_path):
 def test_batch_retention_bounds_manifest(spark, tmp_path):
     """With batch_retention=K the snapshot manifest stays O(live files + K)
     after 500 commits (Delta txn-retention pattern), and exactly-once
-    still holds for every batch inside the K-batch horizon."""
+    still holds for every batch inside the K-batch horizon. The offsets
+    fold by per-partition max and ``n_batches`` keeps counting every
+    commit past the retained ids."""
     import os
 
     t = LakeTable.create(
@@ -321,12 +323,13 @@ def test_batch_retention_bounds_manifest(spark, tmp_path):
     sizes = []
     for i in range(1, 500):
         snap = t.snapshot
-        t._commit(snap, snap.files, f"b{i}", {"operation": "merge"})
+        t._commit(snap, snap.files, f"b{i}", {"operation": "merge"}, lambda: ({0: i}, None))
         if i in (100, 499):
             sizes.append(os.path.getsize(t.meta_dir + f"/snap-{t.snapshot.version:08d}.json"))
     snap = t.snapshot
     assert len(snap.batch_ids) == 50
     assert snap.batch_ids[-1] == "b499" and "b0" not in snap.batch_ids
+    assert snap.n_batches == 500 and snap.offsets == {0: 499}
     # manifest size is flat between commit 100 and commit 499
     assert abs(sizes[1] - sizes[0]) < 64, sizes
     # exactly-once inside the horizon
@@ -336,24 +339,14 @@ def test_batch_retention_bounds_manifest(spark, tmp_path):
         batch_id="b499",
     )
     assert m["skipped"] is True
-    # retention survives schema evolution commits
+    # retention and the transaction state survive schema evolution commits
     t.add_column("extra", "string")
     assert t.snapshot.batch_retention == 50 and len(t.snapshot.batch_ids) == 50
-
-
-def test_checkpoint_retention_bounds_state(tmp_path):
-    """CheckpointStore with batch_retention keeps the state document
-    O(partitions + K) while n_batches_total keeps counting."""
-    from patuha_etl_dlt_spark.cdc.checkpoint import CheckpointStore
-
-    cp = CheckpointStore(str(tmp_path / "cp"), batch_retention=20)
-    for i in range(300):
-        cp.commit(f"b{i}", {0: i}, {"events_applied": 1, "seconds": 0.01})
-    st = cp.read()
-    assert len(st["batches"]) == 20 and st["n_batches_total"] == 300
-    assert cp.has_batch("b299") and not cp.has_batch("b0")
-    assert cp.status()["n_batches"] == 300
-    assert cp.offsets() == {0: 299}
+    assert (t.snapshot.offsets, t.snapshot.n_batches) == ({0: 499}, 500)
+    # a lower offset never moves a partition back
+    snap = t.snapshot
+    t._commit(snap, snap.files, "late", {"operation": "merge"}, lambda: ({0: 3, 1: 5}, None))
+    assert t.snapshot.offsets == {0: 499, 1: 5}
 
 
 def test_point_lookup_prunes_buckets(spark, tmp_path, monkeypatch):

@@ -1,4 +1,4 @@
-"""Closed-loop pull cycle: checkpointed cursor → pushed-down incremental
+"""Closed-loop pull cycle: committed cursor → pushed-down incremental
 source scan → source-introspection schema evolution → exactly-once MERGE →
 cursor advance. This is the reference's actual entry point
 (``db_pipeline.py:75-94`` + ``get_max_timestamp``
@@ -63,7 +63,7 @@ def test_pull_cycle_derby_end_to_end(spark, tmp_path, derby):
     assert "WHERE" not in r1.metrics["source_query"]
     t = orch.engine("items").table
     assert t.read().count() == 100
-    assert orch.engine("items").cp.cursor() == 99
+    assert orch.engine("items").table.snapshot.cursor == 99
 
     # upstream inserts + an update with a higher cursor
     for i in range(100, 150):
@@ -81,7 +81,7 @@ def test_pull_cycle_derby_end_to_end(spark, tmp_path, derby):
     # cycle 3: nothing new → no-op, cursor parked
     (r3,) = orch.pull_cycle("c3")
     assert r3.metrics["rows_pulled"] == 0
-    assert orch.engine("items").cp.cursor() == 150
+    assert orch.engine("items").table.snapshot.cursor == 150
     assert t.read().count() == 150
 
     # replaying a whole cycle id is exactly-once end-to-end
@@ -111,8 +111,8 @@ def test_pull_cycle_source_schema_evolution(spark, tmp_path, derby):
 def test_pull_cycle_callable_source_widen_and_cold_restart(spark, tmp_path):
     """(a) a source whose cursor/value column WIDENS upstream (int→long)
     evolves the lake column before apply; (b) a fresh checkpoint dir
-    against an existing target re-derives the cursor from the target (the
-    reference's get_max_timestamp fallback) instead of re-pulling history."""
+    against an existing target resumes from the cursor the target's
+    snapshot committed instead of re-pulling history."""
     import shutil
 
     pulls = []
@@ -136,11 +136,11 @@ def test_pull_cycle_callable_source_widen_and_cold_restart(spark, tmp_path):
     (r1,) = orch.pull_cycle("c1")
     assert r1.metrics["rows_pulled"] == 5 and pulls[-1] is None
 
-    # cold restart: wipe ONLY the checkpoint state; target survives
+    # cold restart: wipe ONLY the checkpoint (the metrics log); target survives
     shutil.rmtree(str(tmp_path / "sync" / "checkpoints" / "w"))
     orch2 = SyncOrchestrator(spark, str(tmp_path / "sync"), [cfg], sources={"w": source})
     (r2,) = orch2.pull_cycle("c2")
-    # cursor re-derived from the target (max c == 4): nothing re-pulled
+    # the cursor rides the table snapshot (max c == 4): nothing re-pulled
     assert pulls[-1] == 4 and r2.metrics["rows_pulled"] == 0
 
     (r3,) = orch2.pull_cycle("c3")
@@ -151,45 +151,97 @@ def test_pull_cycle_callable_source_widen_and_cold_restart(spark, tmp_path):
     assert vals[0] == 0 and vals[7] == 70_000_000_000 and len(vals) == 8
 
 
-def test_pull_cycle_crash_between_merge_and_checkpoint_heals(spark, tmp_path):
-    """If the MERGE commits but the checkpoint doesn't (crash window),
-    re-running the same cycle id heals: merge skips (batch-id), checkpoint
-    is re-committed, and the NEXT cycle converges by re-pulling the gap
-    (LWW re-application is idempotent)."""
-    import os
+def _restart(spark, orch: SyncOrchestrator) -> SyncOrchestrator:
+    """A fresh orchestrator over the same directories and sources."""
+    return SyncOrchestrator(spark, orch.root, list(orch.configs.values()), sources=orch.sources)
+
+
+def test_pull_cycle_crash_between_merge_and_checkpoint_heals(spark, tmp_path, crash_at, monkeypatch):
+    """A cursor pull that dies (a) inside ``write_snapshot``, before
+    ``CURRENT`` is swapped, committed nothing: the replayed cycle pulls
+    again from the old cursor. One that dies (b) after ``CURRENT``, before
+    the metrics line, committed its rows and its cursor together: the
+    replay is skipped, and the next cycle scans from the crashed commit's
+    cursor without re-deriving it from the target."""
+    rows = {"n": 10}
 
     def source(spark_, last):
         return spark_.createDataFrame(
-            [(i, i, f"n{i}") for i in range(10)], "k long, c long, n string"
+            [(i, i, f"n{i}") for i in range(rows["n"])], "k long, c long, n string"
         ).filter(f"c > {-1 if last is None else last}")
 
     cfg = TableConfig(
         table="h", merge_key=("k",), cursor="c",
         columns=(("k", "long"), ("c", "long"), ("n", "string")), num_buckets=4,
     )
-    orch = SyncOrchestrator(spark, str(tmp_path / "sync"), [cfg], sources={"h": source})
-    orch.pull_cycle("c1")
-    eng = orch.engine("h")
-    assert eng.cp.cursor() == 9
+    for point in ("a", "b"):
+        rows["n"] = 10
+        orch = SyncOrchestrator(spark, str(tmp_path / point), [cfg], sources={"h": source})
+        orch.pull_cycle("c1")
+        assert orch.engine("h").table.snapshot.cursor == 9
 
-    # simulate the crash: the checkpoint write never happened
-    os.unlink(eng.cp.state_path)
-    assert eng.cp.cursor() is None
+        rows["n"] = 15
+        crash_at(point)
+        with pytest.raises(crash_at.Crash):
+            orch.pull_cycle("c2")
 
-    (r,) = orch.pull_cycle("c1")  # same cycle id replayed after "restart"
-    assert r.status == "skipped" and eng.cp.has_batch("c1:h")
+        orch = _restart(spark, orch)
+        eng = orch.engine("h")
+        # a table that has a committed cursor never scans the target for one
+        monkeypatch.setattr(
+            SyncOrchestrator, "_derive_cursor_from_target",
+            lambda *a: pytest.fail("cursor re-derived from the target"),
+        )
+        (r,) = orch.pull_cycle("c2")  # same cycle id replayed after "restart"
+        if point == "a":
+            assert r.status == "perfect" and r.metrics["last_value"] == 9
+            assert r.metrics["rows_pulled"] == 5
+        else:
+            assert r.status == "skipped" and eng.table.has_batch("c2:h")
+            assert "source_query" not in r.metrics  # no scan ran
+        assert eng.table.snapshot.cursor == 14
+        assert orch.status()["status"] == "healthy"
 
-    # next cycle: cursor re-derived from target, gap re-pull converges
-    (r2,) = orch.pull_cycle("c2")
-    assert r2.metrics["rows_pulled"] == 0
-    assert eng.table.read().count() == 10 and eng.cp.cursor() == 9
+        (r3,) = orch.pull_cycle("c3")
+        assert r3.metrics["last_value"] == 14 and r3.metrics["rows_pulled"] == 0
+        assert eng.table.read().count() == 15 and eng.table.snapshot.cursor == 14
+        monkeypatch.undo()
 
 
-def test_snapshot_mode_pull_crash_heals(spark, tmp_path):
-    """A full-refresh (snapshot mode) pull heals a lost checkpoint like
-    every other write: replaying the cycle id skips the overwrite, puts
-    the batch back into the checkpoint, and the table reports healthy."""
-    import os
+def test_cursor_pull_without_committed_cursor_derives_from_target(spark, tmp_path):
+    """A table whose snapshot holds no cursor — loaded by a snapshot seed
+    before its first pull — falls back to the target's MAX(cursor) (the
+    reference's get_max_timestamp) once, then commits it."""
+    pulls = []
+
+    def source(spark_, last):
+        pulls.append(last)
+        return spark_.createDataFrame(
+            [(i, i, f"n{i}") for i in range(6)], "k long, c long, n string"
+        ).filter(f"c > {-1 if last is None else last}")
+
+    cfg = TableConfig(
+        table="d", merge_key=("k",), cursor="c",
+        columns=(("k", "long"), ("c", "long"), ("n", "string")), num_buckets=4,
+    )
+    orch = SyncOrchestrator(spark, str(tmp_path / "sync"), [cfg], sources={"d": source})
+    eng = orch.engine("d")
+    eng.seed_snapshot(
+        spark.createDataFrame([(i, i, f"n{i}") for i in range(4)], "k long, c long, n string")
+    )
+    assert eng.table.snapshot.cursor is None
+    (r,) = orch.pull_cycle("c1")
+    assert pulls == [3] and r.metrics["rows_pulled"] == 2
+    assert eng.table.snapshot.cursor == 5
+    orch.pull_cycle("c2")
+    assert pulls == [3, 5]
+
+
+def test_snapshot_mode_pull_crash_heals(spark, tmp_path, crash_at):
+    """A full-refresh (snapshot mode) pull that dies before ``CURRENT`` is
+    swapped (a) re-runs the overwrite on replay; one that dies after it
+    (b) is skipped. Either way the table holds the source and reports
+    healthy."""
 
     def source(spark_, last):
         return spark_.createDataFrame([(i, f"n{i}") for i in range(5)], "k long, n string")
@@ -198,25 +250,29 @@ def test_snapshot_mode_pull_crash_heals(spark, tmp_path):
         table="s", merge_key=("k",), cursor="", mode="snapshot",
         columns=(("k", "long"), ("n", "string")), num_buckets=4,
     )
-    orch = SyncOrchestrator(spark, str(tmp_path / "sync"), [cfg], sources={"s": source})
-    (r1,) = orch.pull_cycle("c1")
-    assert r1.status == "perfect"
-    eng = orch.engine("s")
+    for point in ("a", "b"):
+        orch = SyncOrchestrator(spark, str(tmp_path / point), [cfg], sources={"s": source})
+        orch.engine("s")  # create the table before arming the crash
+        crash_at(point)
+        with pytest.raises(crash_at.Crash):
+            orch.pull_cycle("c1")
 
-    os.unlink(eng.cp.state_path)  # the checkpoint write never happened
-    (r,) = orch.pull_cycle("c1")
-    assert r.status == "skipped"
-    assert eng.cp.has_batch("c1:s")
-    assert orch.status()["status"] == "healthy"
-    assert eng.table.read().count() == 5
+        orch = _restart(spark, orch)
+        eng = orch.engine("s")
+        assert eng.table.has_batch("c1:s") is (point == "b")
+        (r,) = orch.pull_cycle("c1")
+        assert r.status == ("skipped" if point == "b" else "perfect")
+        assert eng.table.has_batch("c1:s")
+        assert orch.status()["status"] == "healthy"
+        assert eng.table.read().count() == 5
+        assert (eng.table.snapshot.offsets, eng.table.snapshot.cursor) == ({}, None)
 
 
-def test_snapshot_diff_pull_crash_heals(spark, tmp_path):
-    """A snapshot-diff pull whose checkpoint was lost heals on replay, and
-    the next cycle still lands an upstream delete as a tombstone."""
-    import os
-
-    state = {"rows": [(i, f"n{i}") for i in range(6)]}
+def test_snapshot_diff_pull_crash_heals(spark, tmp_path, crash_at):
+    """A snapshot-diff pull that dies before ``CURRENT`` (a) re-diffs on
+    replay; one that dies after it (b) is skipped. Either way the next
+    cycle still lands an upstream delete as a tombstone."""
+    state = {}
 
     def source(spark_, last):
         return spark_.createDataFrame(state["rows"], "k long, n string")
@@ -225,21 +281,29 @@ def test_snapshot_diff_pull_crash_heals(spark, tmp_path):
         table="sd", merge_key=("k",), cursor="", mode="snapshot_diff",
         columns=(("k", "long"), ("n", "string")), num_buckets=4,
     )
-    orch = SyncOrchestrator(spark, str(tmp_path / "sync"), [cfg], sources={"sd": source})
-    (r1,) = orch.pull_cycle("c1")
-    assert r1.status == "perfect" and r1.metrics["changes"] == 6
-    eng = orch.engine("sd")
+    for point in ("a", "b"):
+        state["rows"] = [(i, f"n{i}") for i in range(6)]
+        orch = SyncOrchestrator(spark, str(tmp_path / point), [cfg], sources={"sd": source})
+        orch.engine("sd")  # create the table before arming the crash
+        crash_at(point)
+        with pytest.raises(crash_at.Crash):
+            orch.pull_cycle("c1")
 
-    os.unlink(eng.cp.state_path)
-    (r,) = orch.pull_cycle("c1")
-    assert r.status == "skipped" and eng.cp.has_batch("c1:sd")
+        orch = _restart(spark, orch)
+        eng = orch.engine("sd")
+        (r,) = orch.pull_cycle("c1")
+        if point == "a":
+            assert r.status == "perfect" and r.metrics["changes"] == 6
+        else:
+            assert r.status == "skipped" and eng.table.has_batch("c1:sd")
+        assert orch.status()["status"] == "healthy"
 
-    state["rows"] = [row for row in state["rows"] if row[0] != 2]  # upstream DELETE
-    (r2,) = orch.pull_cycle("c2")
-    assert r2.status == "perfect" and r2.metrics["delete_events"] == 1
-    assert {row["k"] for row in eng.table.read().collect()} == {0, 1, 3, 4, 5}
-    tombstones = eng.table.read(include_deleted=True, include_system=True).filter("_deleted")
-    assert [row["k"] for row in tombstones.collect()] == [2]
+        state["rows"] = [row for row in state["rows"] if row[0] != 2]  # upstream DELETE
+        (r2,) = orch.pull_cycle("c2")
+        assert r2.status == "perfect" and r2.metrics["delete_events"] == 1
+        assert {row["k"] for row in eng.table.read().collect()} == {0, 1, 3, 4, 5}
+        tombstones = eng.table.read(include_deleted=True, include_system=True).filter("_deleted")
+        assert [row["k"] for row in tombstones.collect()] == [2]
 
 
 def test_pull_cycle_dynamic_partition_bounds(spark, tmp_path, derby):
@@ -312,7 +376,7 @@ def test_run_pull_loop_resumes_numbering_and_heals(spark, tmp_path):
     assert {r.table: r.status for r in rounds[0]} == {"t1": "perfect", "s1": "perfect"}
     assert rounds[1][0].metrics["rows_pulled"] == 0  # cdc: nothing new
     assert rounds[1][1].status == "perfect"  # snapshot: refreshed again
-    assert orch.engine("t1").cp.status()["cursor"] == 5
+    assert orch.engine("t1").status()["cursor"] == 5
 
     # "restart": a new orchestrator resumes numbering — first cycle is the
     # idempotent replay of cycle-1, then cycle-2 picks up the new rows
@@ -538,9 +602,8 @@ def test_snapshot_diff_pull_respects_overlay_and_compacts(spark, tmp_path, monke
 
 def test_cursor_type_flip_fails_before_merge(spark, tmp_path):
     """ADVICE r5: a cursor TYPE FLIP must fail the cycle BEFORE any state
-    lands. The old behavior raised inside the post-merge checkpoint
-    commit, wedging the cycle permanently (every retry hit the
-    skipped-merge heal path and re-raised on re-commit)."""
+    lands — before the merge writes a data file, not inside the commit's
+    cursor fold after it."""
     cfg = TableConfig(
         table="w",
         merge_key=("k",),
@@ -560,7 +623,7 @@ def test_cursor_type_flip_fails_before_merge(spark, tmp_path):
     (r1,) = orch.pull_cycle("c1")
     assert r1.status == "perfect"
     eng = orch.engine("w")
-    assert eng.cp.cursor() == 11
+    assert eng.table.snapshot.cursor == 11
     v_before = eng.table.snapshot.version
 
     orch.sources["w"] = source_str
@@ -570,13 +633,13 @@ def test_cursor_type_flip_fails_before_merge(spark, tmp_path):
     # the guard fired BEFORE the merge: no new snapshot, cursor unchanged,
     # and the cycle id is not committed anywhere (cleanly retryable)
     assert eng.table.snapshot.version == v_before
-    assert eng.cp.cursor() == 11
-    assert not eng.cp.has_batch("c2:w")
+    assert eng.table.snapshot.cursor == 11
+    assert not eng.table.has_batch("c2:w")
 
 
 def test_decimal_cursor_pulls_advance_numerically(spark, tmp_path):
     """A DECIMAL cursor column survives consecutive pull cycles (the
-    checkpoint used to store it as a string, which the next cycle's type
+    cursor used to be stored as a string, which the next cycle's type
     guard rejected), is pushed to the source as a plain numeric literal,
     and advances numerically: 9.50 < 10.50, though "9.50" > "10.50"."""
     from decimal import Decimal
@@ -600,7 +663,7 @@ def test_decimal_cursor_pulls_advance_numerically(spark, tmp_path):
         (r1,) = orch.pull_cycle("c1")
         assert r1.status == "perfect", r1.metrics
         eng = orch.engine("px")
-        assert eng.cp.cursor() == Decimal("9.50")
+        assert eng.table.snapshot.cursor == Decimal("9.50")
 
         st.executeUpdate("INSERT INTO px VALUES (10, 10.50, 'a10')")
         st.executeUpdate("UPDATE px SET c = 11.50, v = 'b3' WHERE id = 3")
@@ -609,11 +672,11 @@ def test_decimal_cursor_pulls_advance_numerically(spark, tmp_path):
         assert r2.metrics["last_value"] == Decimal("9.50")
         assert r2.metrics["rows_pulled"] == 2  # only rows above 9.50
         assert "9.50" in r2.metrics["source_query"]
-        assert eng.cp.cursor() == Decimal("11.50")
+        assert eng.table.snapshot.cursor == Decimal("11.50")
 
         (r3,) = orch.pull_cycle("c3")  # nothing new: cursor holds
         assert r3.status == "perfect" and r3.metrics["rows_pulled"] == 0, r3.metrics
-        assert eng.cp.cursor() == Decimal("11.50")
+        assert eng.table.snapshot.cursor == Decimal("11.50")
         got = {r["ID"]: r["V"] for r in eng.table.read().collect()}
         assert got == {**{i: f"a{i}" for i in range(1, 11)}, 3: "b3"}
     finally:
