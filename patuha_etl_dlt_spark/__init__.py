@@ -9,9 +9,9 @@ A brand-new engine with the capabilities of the reference
 - last-writer-wins dedup per key by ``(warc_ts, lsn)`` — commutative, so
   replay from any checkpoint converges (CRDT-style LWW register),
 - schema evolution (add / rename / type-widen) detected from event
-  envelopes and applied as metadata-only ops before apply,
-- per-partition offsets and the pull cursor committed in the same
-  snapshot as the data, plus batch lineage and a metrics log,
+  envelopes or the pulled source schema, metadata-only,
+- the schema change, per-partition offsets and pull cursor committed in
+  the same snapshot as the data, plus batch lineage and a metrics log,
 - vectorized pandas/Arrow UDFs for all Python-side transforms (no
   per-row Python UDFs anywhere in the hot path),
 - skew handling: salted two-phase reduction and partial-aggregate LWW.

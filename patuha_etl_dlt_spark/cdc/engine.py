@@ -4,20 +4,21 @@ One micro-batch apply (the reference's ``process_incremental_table``,
 ``/root/reference/source/pipeline_management.py:605-1223``, collapsed into
 one declarative plan):
 
-    events ──filter(lsn > offsets[partition])──► sanitize (native cols)
-          ──extract text (Arrow pandas UDF)──► evolve schema (metadata ops)
-          ──LWW MERGE into LakeTable, one snapshot carrying the batch id
-            and the per-partition offsets (batch_id-idempotent)
-          ──append the batch's metrics line to CheckpointStore
+    head snapshot, read once (a committed batch id is skipped)
+    events ──filter(lsn > head.offsets[partition])──► evolve the head's
+          in-memory successor ──► remap old-generation columns by field id
+          ──► sanitize ──► LWW pre-reduce ──► extract text (Arrow pandas UDF)
+          ──► LWW MERGE on the successor: ONE snapshot carries the schema
+            change, data, batch id and per-partition offsets
+          ──► append the batch's metrics line to CheckpointStore
 
 Exactly-once in one atomic commit: the snapshot that publishes the batch's
-data files also records its batch id, its offsets and (for a pull) its
-cursor, so there is no window in which the data is committed and the feed
-state is not. On restart an already-committed batch is skipped, and the
-offsets and cursor the next batch reads are exactly the committed ones.
-That sequence lives in one place, ``CdcEngine.commit_once``; the push
-apply, the snapshot seed and the orchestrator's pulls each supply only
-their write step.
+data files also records its schema change, batch id, offsets and (for a
+pull) cursor, so none is ever committed without the rest. On restart an
+already-committed batch is skipped, and the next batch reads exactly the
+committed offsets and cursor. That sequence lives in one place,
+``CdcEngine.commit_once``; the push apply, the snapshot seed and the
+orchestrator's pulls each supply only their write step on its head.
 
 Scale shape of one batch: two exchanges. The LWW pre-reduce
 (map-side-combined ``max_by``, at the session's shuffle width) runs
@@ -44,7 +45,7 @@ from patuha_etl_dlt_spark.cdc.dedup import lww_agg
 from patuha_etl_dlt_spark.cdc.envelope import HTML, LSN, OP, PARTITION, SCHEMA, TEXT
 from patuha_etl_dlt_spark.functions.html import with_extracted_text
 from patuha_etl_dlt_spark.functions.sanitize import sanitize_columns
-from patuha_etl_dlt_spark.lake.metadata import cursor_json
+from patuha_etl_dlt_spark.lake.metadata import Snapshot, cursor_json
 from patuha_etl_dlt_spark.lake.table import SYS_EVENT, LakeTable
 
 
@@ -62,7 +63,6 @@ def _delete_count(df: DataFrame):
 
 @dataclass
 class EngineConfig:
-    extract_text: bool = True
     # fold merge-on-read overlays into base files every N batches
     # (reference hygiene analog: staging truncation each cycle,
     # pipeline_management.py:1106-1120). 1 = the read-optimized layout
@@ -85,7 +85,7 @@ class CdcEngine:
 
     # ------------------------------------------------------------ plumbing
 
-    def _filter_new(self, events: DataFrame) -> DataFrame:
+    def _filter_new(self, snap: Snapshot, events: DataFrame) -> DataFrame:
         """Drop events at or below the committed per-partition offset —
         the reference's cursor predicate ``WHERE modifier > :ts``
         (pipeline_management.py:149) generalized to per-partition LSNs.
@@ -98,7 +98,7 @@ class CdcEngine:
         batches). Beyond ``_MAX_LITERAL_OFFSETS`` entries it falls back to
         the broadcast join (a giant literal expression would bloat the
         plan instead)."""
-        offsets = self.table.snapshot.offsets
+        offsets = snap.offsets
         if not offsets:
             return events
         if len(offsets) <= _MAX_LITERAL_OFFSETS:
@@ -150,7 +150,9 @@ class CdcEngine:
         descriptors = sorted({d for r in rows for d in r[3 + 1] if d})
         return offsets, counts, descriptors
 
-    def _quarantine(self, df: DataFrame, batch_id: str | None) -> tuple[DataFrame, int]:
+    def _quarantine(
+        self, snap: Snapshot, df: DataFrame, batch_id: str | None
+    ) -> tuple[DataFrame, int]:
         """Split fatally-broken rows into the dead-letter dir; returns the
         clean rows and the quarantined count. Exactly ONE extra job per
         batch — opt-in via ``quarantine_dir``.
@@ -173,8 +175,7 @@ class CdcEngine:
 
         from patuha_etl_dlt_spark.functions.diagnose import split_quarantine
 
-        keys = self.table.snapshot.key_cols
-        clean, bad = split_quarantine(df, keys)
+        clean, bad = split_quarantine(df, snap.key_cols)
         obs = Observation()
         out = bad.observe(obs, F.count(F.lit(1)).alias("n_bad"))
         bdir = os.path.join(self.cfg.quarantine_dir, f"_batch_id={batch_id}")
@@ -184,8 +185,8 @@ class CdcEngine:
             shutil.rmtree(bdir, ignore_errors=True)
         return clean, n_bad
 
-    def _prepare_delta(self, events: DataFrame, renames: list) -> DataFrame:
-        """Renames, sanitize, then the LWW pre-reduce BEFORE text
+    def _prepare_delta(self, snap: Snapshot, events: DataFrame) -> DataFrame:
+        """Old-generation remap, sanitize, then the LWW pre-reduce BEFORE text
         extraction: the pandas UDF then (a) runs post-shuffle, so its
         parallelism is the session's shuffle width instead of the
         input-split count — on a compressed feed a 200 MB batch is ~2
@@ -195,23 +196,23 @@ class CdcEngine:
         extract-then-winner. The reduce is ``lww_agg``: its map-side
         combine is the hot-key skew defence."""
         df = events
-        # events minted before a rename still carry the old column name;
-        # remap (or coalesce when both generations coexist in one batch)
-        for op in renames:
-            if op.kind != "rename":
-                continue
-            if op.name in df.columns and op.new_name in df.columns:
-                df = df.withColumn(op.new_name, F.coalesce(F.col(op.new_name), F.col(op.name))).drop(op.name)
-            elif op.name in df.columns:
-                df = df.withColumnRenamed(op.name, op.new_name)
-        snap = self.table.snapshot
+        # events minted before a rename still carry an old name of the
+        # field: map every name its field id has carried in ``snap.schemas``
+        # to the current one (coalesced when generations meet in a batch),
+        # as ``LakeTable._source`` maps old data files
+        current = set(snap.schema.names)
+        for f in snap.schema.fields:
+            old = sorted(c for c in snap.names_of(f.id) - current if c in df.columns)
+            if old:
+                gens = ([f.name] if f.name in df.columns else []) + old
+                df = df.withColumn(f.name, F.coalesce(*map(F.col, gens))).drop(*old)
         # merge keys are never sanitized (NULL keys are dropped with a
         # metric, not coerced), nor is the extracted text (byte-identity)
         df = sanitize_columns(df, exclude=(*snap.key_cols, TEXT, OP, SCHEMA))
         df = df.withColumnRenamed(LSN, SYS_EVENT)
         df = df.select(*[c for c in df.columns if c not in (PARTITION, SCHEMA)])
         df = lww_agg(df, snap.key_cols, [snap.order_cols[0], SYS_EVENT])
-        if self.cfg.extract_text and HTML in df.columns and TEXT in df.columns:
+        if HTML in df.columns and TEXT in df.columns:
             df = with_extracted_text(df, HTML, TEXT)
         return df
 
@@ -221,18 +222,21 @@ class CdcEngine:
         """The exactly-once commit step every table write goes through
         (push apply, snapshot seed, and the orchestrator's pulls).
 
-        A batch already in the table is skipped. Otherwise ``write()``
-        performs the table write — one snapshot carrying the data, the
-        batch id, and the batch's offsets and cursor — and returns its
-        metrics; then the compaction cadence advances and the metrics line
-        is appended to the log. A crash before the snapshot swap leaves
-        nothing committed (the replay re-applies the batch); a crash after
-        it loses at most the metrics line (the replay is skipped)."""
+        It reads the head once and skips a batch already in it. Otherwise
+        ``write(snap)`` writes on that head one successor snapshot carrying
+        the batch's schema change, data, batch id, offsets and cursor, and
+        returns its metrics; then the compaction cadence advances and the
+        metrics line is appended to the log. A crash before the snapshot
+        swap leaves nothing committed (the replay re-applies the batch); a
+        crash after it loses at most the metrics line (the replay is
+        skipped)."""
         t0 = time.time()
-        if self.table.has_batch(batch_id):
+        snap = self.table.snapshot
+        if batch_id in snap.batch_ids:
             return {"skipped": True, "batch_id": batch_id}
-        metrics = write()
-        self.maybe_compact(metrics)
+        metrics = write(snap)
+        # the write committed exactly one batch on top of ``snap``
+        self.maybe_compact(snap.n_batches + 1, metrics)
         metrics["seconds"] = round(time.time() - t0, 3)
         self.cp.commit(batch_id, metrics)
         return metrics
@@ -255,18 +259,18 @@ class CdcEngine:
         falls back to the column-pruned discovery pre-pass."""
         batch_id = batch_id or uuid.uuid4().hex
         return self.commit_once(
-            batch_id, lambda: self._apply_write(events, batch_id, offsets, descriptors)
+            batch_id, lambda snap: self._apply_write(snap, events, batch_id, offsets, descriptors)
         )
 
-    def _apply_write(self, events, batch_id, offsets, descriptors) -> dict:
-        """``apply_batch``'s write step: filter, evolve, prepare and MERGE
-        the batch, committing its offsets with the data; returns the
-        metrics."""
+    def _apply_write(self, snap, events, batch_id, offsets, descriptors) -> dict:
+        """``apply_batch``'s write step on head ``snap``: filter, evolve,
+        prepare and MERGE the batch, committing its schema change and
+        offsets with the data; returns the metrics."""
         # one column-pruned pre-pass (offsets + counts + schema descriptors
         # — partition_id/lsn/op/schema_json only) unless the source already
         # told us; the heavy payload columns are read exactly once, inside
         # the MERGE job itself.
-        fresh = self._filter_new(events)
+        fresh = self._filter_new(snap, events)
         obs_in: Observation | None = None
         if offsets is not None and descriptors is not None:
             # no discovery job — but batch counts must still reach the
@@ -283,16 +287,17 @@ class CdcEngine:
             )
         else:
             new_off, counts, descriptors = self._offsets_and_counts(fresh)
-        renames = evolution.evolve_table(self.table, descriptors)
+        snap, ops = evolution.evolve_table(snap, descriptors)
         if self.cfg.quarantine_dir:
-            fresh, counts["quarantined"] = self._quarantine(fresh, batch_id)
+            fresh, counts["quarantined"] = self._quarantine(snap, fresh, batch_id)
         metrics = self.table.merge(
-            self._prepare_delta(fresh, renames),
+            self._prepare_delta(snap, fresh),
             batch_id=batch_id,
             # the pre-reduce already left one winner per key — the merge
             # skips its in-batch reduction (one agg pass over the batch)
             delta_reduced=True,
             txn=lambda: (new_off, None),
+            snap=snap,
         )
         if obs_in is not None:
             # already resolved: the merge write ran the plan. Spark keeps no
@@ -309,65 +314,37 @@ class CdcEngine:
                 delete_events=int(got.get("delete_events") or 0),
             )
         metrics.update(counts)
-        metrics["evolution_ops"] = evolution.ops_json(renames)
+        metrics["evolution_ops"] = evolution.ops_json(ops)
         return metrics
 
-    def _gc_safe(self) -> bool:
-        """Whether the compaction cadence may purge tombstones below the
-        min-offset horizon (event id < min of the committed offsets in the
-        head snapshot) from the buckets it rewrites anyway — opportunistic,
-        no extra I/O.
+    def maybe_compact(self, n_batches: int, metrics: dict) -> None:
+        """Fold the overlays when the compaction cadence fires.
+        ``commit_once`` calls it after every committed write (push, pull,
+        snapshot seed) with ``n_batches``, the committed batch count, so a
+        restart resumes the cadence exactly. Only a fold reads the head.
 
-        Only when the table's LWW order IS the LSN (``order_col=None`` at
-        create time, so ``order_cols[0] == _event_id``). Under any other
-        order column the horizon is NOT sufficient: a future event with an
-        LSN above the horizon but an older/NULL order value would have LOST
-        the LWW race to the purged tombstone (the key stays deleted), and
-        purging would silently resurrect it — the engine does not require
-        the order column to be monotone in LSN, so it cannot assume it.
-        Tables ordered by a business column keep their tombstones until the
-        operator calls ``compact_tombstones()`` with a horizon they can
-        vouch for.
-
-        On an LSN-ordered table the horizon assumes a FIXED partition set:
-        every feed partition that will ever deliver has already committed
-        an offset. Replays are then safe — the offset filter drops any
-        event at or below a partition's offset, and every future event
-        outranks the purged tombstone by LSN. A partition that has never
-        committed has no offset in the snapshot, so its events are not
-        bounded by the horizon: one carrying an LSN below it can still
-        arrive and win against a key whose tombstone was purged
+        The fold also purges tombstones below the min-offset horizon, but
+        only when the LWW order IS the LSN (``order_col=None`` at create):
+        under a business order column a future event above the horizon can
+        carry an older/NULL order value, lose to the purged tombstone and
+        resurrect the key, so such tables keep their tombstones until the
+        operator calls ``compact_tombstones()`` with a horizon they vouch
+        for. The horizon also assumes a fixed partition set: a partition
+        that has never committed an offset can still deliver below it
         (``test_tombstone_gc_late_partition_resurrects_key``)."""
-        return self.table.snapshot.order_cols[0] == SYS_EVENT
-
-    def maybe_compact(self, metrics: dict | None = None) -> dict | None:
-        """Fold when the compaction cadence fires — called by
-        ``commit_once`` after each committed write, so every write path
-        (push, pull, snapshot seed) rides it and a long-running
-        ``run_pull_loop`` cannot accrete one overlay file-set per cycle
-        forever.
-
-        The cadence is the head snapshot's ``n_batches`` (committed with
-        the batch itself, so a restart resumes it exactly). On the cadence
-        the fold also purges passed tombstones when ``_gc_safe`` allows
-        it."""
-        if not self.cfg.compact_every:
-            return metrics
+        if not self.cfg.compact_every or n_batches % self.cfg.compact_every:
+            return
         snap = self.table.snapshot
-        if snap.n_batches % self.cfg.compact_every == 0:
-            offs = snap.offsets if self._gc_safe() else {}
-            n = self.table.compact_deltas(
-                purge_tombstones_below=min(offs.values()) if offs else None
-            )
-            if metrics is not None:
-                metrics["compacted_buckets"] = n
-        return metrics
+        offs = snap.offsets if snap.order_cols[0] == SYS_EVENT else {}
+        metrics["compacted_buckets"] = self.table.compact_deltas(
+            purge_tombstones_below=min(offs.values()) if offs else None, snap=snap
+        )
 
     def seed_snapshot(self, snapshot_df: DataFrame, batch_id: str = "seed") -> dict:
         """Initial full load — the reference's full-refresh/replace path
         (pipeline_management.py:1225-1506) as one overwrite commit."""
         return self.commit_once(
-            batch_id, lambda: self.table.overwrite(snapshot_df, batch_id=batch_id)
+            batch_id, lambda snap: self.table.overwrite(snapshot_df, batch_id=batch_id, snap=snap)
         )
 
     def status(self) -> dict:

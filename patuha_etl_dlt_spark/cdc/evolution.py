@@ -1,24 +1,23 @@
-"""Schema evolution: envelope descriptor → lake-table metadata ops.
+"""Schema evolution: a snapshot → its evolved in-memory successor + ops.
 
-The engine diffs each distinct ``schema_json`` in a batch against the
-target table schema **by field id** and applies, in order: type widenings,
-renames, then added columns. Reference analog: source-vs-target
-INFORMATION_SCHEMA diff + ``ALTER TABLE ADD COLUMN``
+Pure functions: the batch's write commits the successor together with
+its data, batch id, offsets and cursor, in one swap. Envelope descriptors
+are diffed **by field id** (add, rename, widen), a pulled source schema
+**by name** (add, widen). Reference analog: an INFORMATION_SCHEMA diff +
+``ALTER TABLE ADD COLUMN`` run as separate DDL ahead of each load
 (``/root/reference/source/schema_management.py:11-57``) — add-only and
 name-based; columns are never dropped (``README.MD:395``), a rule we keep.
-
-Scale note: the engine collects the distinct ``schema_json`` descriptors
-inside its offsets pass (a handful per batch at worst); the resulting DDL
-is metadata-only, so evolution costs no data rewrite at any scale.
+Evolution is metadata-only: no data rewrite at any scale.
 """
 
 from __future__ import annotations
 
+import functools
 from dataclasses import asdict, dataclass
 
 from patuha_etl_dlt_spark.cdc.envelope import parse_descriptor
-from patuha_etl_dlt_spark.lake.metadata import WIDENINGS, Schema, type_name
-from patuha_etl_dlt_spark.lake.table import SYS_COLS, LakeTable
+from patuha_etl_dlt_spark.lake.metadata import WIDENINGS, Schema, Snapshot, type_name
+from patuha_etl_dlt_spark.lake.table import SYS_COLS
 
 
 @dataclass(frozen=True)
@@ -28,47 +27,56 @@ class EvolutionOp:
     new_name: str | None = None
     typ: str | None = None
 
+    def apply(self, schema: Schema) -> Schema:
+        if self.kind == "add":
+            return schema.add_column(self.name, self.typ)
+        if self.kind == "widen":
+            return schema.widen_column(self.name, self.typ)
+        return schema.rename_column(self.name, self.new_name)
 
-def diff_schemas(current: Schema, incoming: Schema) -> list[EvolutionOp]:
-    """Ops to evolve ``current`` so it can hold ``incoming`` payloads."""
+
+def _successor(snap: Snapshot, ops: list[EvolutionOp]) -> Snapshot:
+    return snap.with_schema(functools.reduce(lambda s, op: op.apply(s), ops, snap.schema))
+
+
+def diff_schemas(snap: Snapshot, incoming: Schema) -> list[EvolutionOp]:
+    """Ops to evolve ``snap``'s schema so it can hold ``incoming`` payloads.
+
+    An incoming field that is an OLDER generation of a current one emits
+    no op: a name its field id has carried in any schema epoch (a late
+    event minted before a rename — the engine remaps its column to the
+    current name), or a type the current one widens (its values are cast
+    up on write). So a late descriptor never renames a column back or
+    narrows it, whatever order the descriptors come in."""
+    current = snap.schema
     ops: list[EvolutionOp] = []
     for f in incoming.fields:
         cur = current.field_by_id(f.id)
         if cur is None:
             ops.append(EvolutionOp("add", f.name, typ=f.type))
             continue
-        if cur.type != f.type:
-            if f.type in WIDENINGS.get(cur.type, set()):
-                ops.append(EvolutionOp("widen", cur.name, typ=f.type))
-            else:
-                raise ValueError(
-                    f"incompatible type change for field id {f.id} "
-                    f"({cur.name}): {cur.type} -> {f.type}"
-                )
-        if cur.name != f.name:
+        if f.type in WIDENINGS.get(cur.type, set()):
+            ops.append(EvolutionOp("widen", cur.name, typ=f.type))
+        elif cur.type != f.type and cur.type not in WIDENINGS.get(f.type, set()):
+            raise ValueError(
+                f"incompatible type change for field id {f.id} "
+                f"({cur.name}): {cur.type} -> {f.type}"
+            )
+        if f.name not in snap.names_of(f.id):
             ops.append(EvolutionOp("rename", cur.name, new_name=f.name))
     return ops
 
 
 def diff_source_schema(current: Schema, spark_schema) -> list[EvolutionOp]:
     """NAME-based diff of an introspected SOURCE schema (a pulled
-    DataFrame's ``df.schema``) against the lake schema — the reference's
-    INFORMATION_SCHEMA source-vs-target diff
-    (``/root/reference/source/schema_management.py:11-57,79-104``), which
-    is add-only and never drops (``README.MD:395``). We keep add + widen:
-
-    - source column absent from the lake table → ``add``;
-    - source type strictly wider (per ``WIDENINGS``) → ``widen``;
-    - source type narrower or equal → no-op (the merge's ``_align`` casts
-      rows up to the lake type);
-    - lake column absent from the source → no-op (rows get NULLs; columns
-      are never dropped).
-
-    Plain pulled rows carry no field ids, hence by-name matching here vs
-    the by-id matching of envelope-descriptor evolution (``diff_schemas``)
-    — renames are indistinguishable from drop+add without ids, so a
-    renamed source column becomes an added lake column, exactly the
-    reference's behavior."""
+    DataFrame's ``df.schema``) against the lake schema, as the reference's
+    INFORMATION_SCHEMA diff (``schema_management.py:79-104``): a source
+    column the lake lacks → ``add``; a strictly wider source type (per
+    ``WIDENINGS``) → ``widen``; a narrower or equal type, or a lake column
+    the source lacks → no-op (rows are cast up / NULL-filled; columns are
+    never dropped). Pulled rows carry no field ids, so a renamed source
+    column becomes an added lake column, exactly the reference's
+    behavior."""
     ops: list[EvolutionOp] = []
     by_name = {f.name: f for f in current.fields}
     for f in spark_schema.fields:
@@ -88,18 +96,13 @@ def diff_source_schema(current: Schema, spark_schema) -> list[EvolutionOp]:
     return ops
 
 
-def evolve_from_source(table: LakeTable, spark_schema) -> list[EvolutionOp]:
-    """Apply ``diff_source_schema`` ops to ``table`` (metadata-only) and
-    return them — the pull loop calls this on every cycle so a source
-    table that grows or widens a column upstream auto-evolves before the
-    batch is applied."""
-    ops = diff_source_schema(table.schema, spark_schema)
-    for op in ops:
-        if op.kind == "add":
-            table.add_column(op.name, op.typ)
-        elif op.kind == "widen":
-            table.widen_column(op.name, op.typ)
-    return ops
+def evolve_from_source(snap: Snapshot, spark_schema) -> tuple[Snapshot, list[EvolutionOp]]:
+    """``snap``'s successor evolved by the ``diff_source_schema`` ops, and
+    the ops — every pull computes it, so a source table that grows or
+    widens a column upstream evolves the lake table in the pull's own
+    commit."""
+    ops = diff_source_schema(snap.schema, spark_schema)
+    return _successor(snap, ops), ops
 
 
 def ops_json(ops: list[EvolutionOp]) -> list[dict]:
@@ -108,22 +111,16 @@ def ops_json(ops: list[EvolutionOp]) -> list[dict]:
     return [{k: v for k, v in asdict(o).items() if v is not None} for o in ops]
 
 
-def evolve_table(table: LakeTable, descriptors: list[str]) -> list[EvolutionOp]:
-    """Evolve ``table`` to hold every envelope schema in ``descriptors``
-    (the engine collects them in its offsets pass). Returns the ops
-    applied (renames are applied with their pre-rename names, so callers
-    can remap delta columns that still carry old names)."""
-    descriptors = [d for d in descriptors if d is not None]
-    applied: list[EvolutionOp] = []
+def evolve_table(snap: Snapshot, descriptors: list[str]) -> tuple[Snapshot, list[EvolutionOp]]:
+    """``snap``'s successor evolved to hold every envelope schema in
+    ``descriptors`` (the engine collects them in its offsets pass), and
+    the ops. Each descriptor that changes the schema adds one schema
+    epoch, so every name a field has carried stays in ``snap.schemas``,
+    where the engine maps delta columns by field id."""
+    ops: list[EvolutionOp] = []
     # deterministic order: ascending max field id ⇒ older descriptors first
-    for d in sorted(set(descriptors), key=lambda s: (parse_descriptor(s).max_id, s)):
-        incoming = parse_descriptor(d)
-        for op in diff_schemas(table.schema, incoming):
-            if op.kind == "add":
-                table.add_column(op.name, op.typ)
-            elif op.kind == "widen":
-                table.widen_column(op.name, op.typ)
-            elif op.kind == "rename":
-                table.rename_column(op.name, op.new_name)
-            applied.append(op)
-    return applied
+    for d in sorted({d for d in descriptors if d}, key=lambda s: (parse_descriptor(s).max_id, s)):
+        step = diff_schemas(snap, parse_descriptor(d))
+        snap = _successor(snap, step)
+        ops += step
+    return snap, ops

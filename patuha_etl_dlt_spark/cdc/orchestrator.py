@@ -37,51 +37,8 @@ from patuha_etl_dlt_spark.cdc.engine import CdcEngine, EngineConfig
 from patuha_etl_dlt_spark.cdc.retry import RetryPolicy, RetryQueue, with_retry
 from patuha_etl_dlt_spark.config import TableConfig
 from patuha_etl_dlt_spark.lake import LakeTable
-from patuha_etl_dlt_spark.lake.metadata import _NUMERIC
+from patuha_etl_dlt_spark.lake.metadata import Snapshot, canonical_cursor, check_cursor_type
 from patuha_etl_dlt_spark.lake.table import OP
-
-
-def _check_cursor_type(prev, dtype) -> None:
-    """Pre-merge guard matching ``metadata._max_cursor``'s type rules:
-    a committed int/float/Decimal cursor is only advanceable by a NUMERIC
-    source column; a committed string cursor (timestamps/dates serialize
-    to str, see ``_json_cursor``) by a string/timestamp/date column. Any
-    other combination would raise inside the snapshot commit's cursor fold
-    — after the scan and the data-file write — so it raises HERE, before
-    any data file is written, where the failure costs nothing and the
-    cycle is retryable after an explicit cursor migration."""
-    from pyspark.sql import types as T
-
-    if prev is None:
-        return
-    if isinstance(prev, _NUMERIC) and not isinstance(prev, bool):
-        ok = isinstance(dtype, T.NumericType)
-    elif isinstance(prev, str):
-        ok = isinstance(
-            dtype, (T.StringType, T.TimestampType, T.TimestampNTZType, T.DateType)
-        )
-    else:
-        ok = False
-    if not ok:
-        raise TypeError(
-            f"cursor type changed: the table holds {type(prev).__name__}"
-            f"({prev!r}) but the source cursor column is now {dtype.simpleString()}; "
-            "a type flip would bypass the monotone guard. Migrate the cursor "
-            "explicitly (a new table, or normalize the source type)."
-        )
-
-
-def _json_cursor(v):
-    """Canonical committed cursor value. Timestamps/dates become
-    Python's ``str()`` form (``YYYY-MM-DD HH:MM:SS[.ffffff]`` — fractions
-    are absent or exactly 6 digits, so lexicographic order equals time
-    order, keeping the snapshot's monotone-max cursor fold correct); ints,
-    floats, Decimals and strings pass through unchanged (a Decimal stays
-    exact and compares numerically — the snapshot stores it tagged, see
-    ``metadata.cursor_json``)."""
-    if v is None or isinstance(v, (*_NUMERIC, str)):
-        return v
-    return str(v)
 
 
 @dataclass
@@ -244,7 +201,7 @@ class SyncOrchestrator:
             return read_jdbc(self.spark, cfg), desc
         return src(self.spark, last_value), f"callable(last_value={last_value!r})"
 
-    def _derive_cursor_from_target(self, eng: CdcEngine, cursor_col: str):
+    def _derive_cursor_from_target(self, eng: CdcEngine, snap: Snapshot, cursor_col: str):
         """No-cursor fallback: re-derive the cursor from the TARGET
         table, the reference's ``get_max_timestamp``
         (``pipeline_management.py:39-56`` — it does this EVERY cycle
@@ -252,50 +209,55 @@ class SyncOrchestrator:
         no committed cursor, e.g. a table loaded by a push or seed before
         its first pull). O(target state) scan, hence not the steady-state
         path."""
-        if not eng.table.snapshot.files:
+        if not snap.files:
             return None
-        row = eng.table.read().agg(F.max(F.col(cursor_col)).alias("m")).first()
-        return _json_cursor(row["m"])
+        state = eng.table.read(snapshot_version=snap.version)
+        return canonical_cursor(state.agg(F.max(F.col(cursor_col)).alias("m")).first()["m"])
 
     def _pull_one(self, name: str, eng: CdcEngine, bid: str) -> dict:
         """One table's pull through the engine's exactly-once commit step,
-        which skips a replayed cycle id before any source scan runs."""
+        which reads the head once and skips a replayed cycle id before any
+        source scan runs. Every mode evolves the table from the scanned
+        source schema (``evolution.evolve_from_source``): a column
+        added/widened upstream lands in the pull's own commit (old rows
+        NULL-filled, narrow rows cast up)."""
         write = {
             "snapshot": self._snapshot_write,
             "snapshot_diff": self._diff_write,
         }.get(self.configs[name].mode, self._cursor_write)
-        return eng.commit_once(bid, lambda: write(name, eng, bid))
+        return eng.commit_once(bid, lambda snap: write(name, eng, snap, bid))
 
-    def _snapshot_write(self, name: str, eng: CdcEngine, bid: str):
+    def _snapshot_write(self, name: str, eng: CdcEngine, snap: Snapshot, bid: str):
         """Full-refresh pull: the scanned source replaces the table."""
         df, desc = self._build_scan(name, None)
-        return {**eng.table.overwrite(df, batch_id=bid), "source_query": desc}
+        snap, ops = evolution.evolve_from_source(snap, df.schema)
+        return {
+            **eng.table.overwrite(df, batch_id=bid, snap=snap),
+            "source_query": desc,
+            "evolution_ops": evolution.ops_json(ops),
+        }
 
-    def _cursor_write(self, name: str, eng: CdcEngine, bid: str):
+    def _cursor_write(self, name: str, eng: CdcEngine, snap: Snapshot, bid: str):
         """Cursor pull: scan above the committed cursor and merge; the
         advanced cursor commits in the merge's own snapshot."""
         cfg = self.configs[name]
-        last = eng.table.snapshot.cursor
+        last = snap.cursor
         if last is None:
-            last = self._derive_cursor_from_target(eng, cfg.cursor)
+            last = self._derive_cursor_from_target(eng, snap, cfg.cursor)
         df, desc = self._build_scan(name, last)
         # fail a cursor TYPE FLIP before any data file is written: the
         # snapshot's monotone cursor fold would raise only after the merge
         # wrote its files. The source column's type is known from the
         # introspected scan schema, so the mismatch is detectable up front.
-        _check_cursor_type(last, df.schema[cfg.cursor].dataType)
-        # source-introspection evolution BEFORE apply: a column
-        # added/widened upstream evolves the lake table as metadata-only
-        # ops, then the batch (old rows NULL-filled, narrow rows cast up)
-        # merges cleanly
-        ops = evolution.evolve_from_source(eng.table, df.schema)
+        check_cursor_type(last, df.schema[cfg.cursor].dataType)
+        snap, ops = evolution.evolve_from_source(snap, df.schema)
         obs = Observation()
 
         def pulled_cursor():
             # resolved once the write has run. An empty pull still commits
             # the (derived) cursor, so a table without one warms up and
             # never re-derives again.
-            new_cursor = _json_cursor(obs.get["cursor_max"])
+            new_cursor = canonical_cursor(obs.get["cursor_max"])
             return new_cursor if new_cursor is not None else last
 
         m = eng.table.merge(
@@ -307,6 +269,7 @@ class SyncOrchestrator:
                 F.count(F.lit(1)).alias("rows_pulled"),
             ),
             txn=lambda: ({}, pulled_cursor()),
+            snap=snap,
         )
         m.update(
             rows_pulled=int(obs.get["rows_pulled"] or 0),
@@ -317,7 +280,7 @@ class SyncOrchestrator:
         )
         return m
 
-    def _diff_write(self, name: str, eng: CdcEngine, bid: str):
+    def _diff_write(self, name: str, eng: CdcEngine, snap: Snapshot, bid: str):
         """Snapshot-diff pull: full pull, but MERGE only the derived
         I/U/D changes — the mode that propagates upstream DELETEs (a
         cursor can never see them) at O(changes) write cost vs the full
@@ -328,8 +291,7 @@ class SyncOrchestrator:
         )
 
         df, desc = self._build_scan(name, None)
-        ops = evolution.evolve_from_source(eng.table, df.schema)
-        snap_v = eng.table.snapshot.version
+        evolved, ops = evolution.evolve_from_source(snap, df.schema)
         # size the diff's full-outer-join shuffle from the TABLE's bytes,
         # not the session constant (the round-5 32 M-row spill cliff): both
         # inputs are hash-placed on the keys at that width, so the join
@@ -341,9 +303,9 @@ class SyncOrchestrator:
         keys = list(self.configs[name].merge_key)
         delta = diff_snapshots(
             df.repartition(diff_width, *keys),
-            eng.table.read().repartition(diff_width, *keys),
+            eng.table.read(snapshot_version=snap.version).repartition(diff_width, *keys),
             keys,
-        ).withColumn("_event_id", F.lit(snap_v + 1).cast("long"))
+        ).withColumn("_event_id", F.lit(snap.version + 1).cast("long"))
         obs = Observation()
         opc = F.upper(F.col(OP))
         m = eng.table.merge(
@@ -359,6 +321,7 @@ class SyncOrchestrator:
                 F.sum((opc == "D").cast("long")).alias("delete_events"),
                 F.sum((opc == "I").cast("long")).alias("insert_events"),
             ),
+            snap=evolved,
         )
         got = obs.get
         m.update(

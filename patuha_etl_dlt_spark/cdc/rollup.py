@@ -111,9 +111,9 @@ class IncrementalRollup:
         pass through the combine unchanged, so the rewrite needs no second
         base read). Two jobs per fold: the touched-bucket discovery over
         the batch partials (key columns only) and the combined write."""
-        if self.table.has_batch(batch_id):
-            return {"skipped": True, "batch_id": batch_id}
         snap = self.table.snapshot
+        if batch_id in snap.batch_ids:
+            return {"skipped": True, "batch_id": batch_id}
         # partials are used twice (bucket discovery + the fold itself):
         # persist the tiny aggregated frame so the batch is scanned once.
         # Group columns are cast to the LAKE schema types first: the write
@@ -137,7 +137,7 @@ class IncrementalRollup:
             nxt = self._combine(current.unionByName(partials)).withColumn(
                 "_event_id", F.lit(snap.version + 1).cast("long")
             )
-            metrics = self.table.replace_buckets(nxt, touched, batch_id=batch_id)
+            metrics = self.table.replace_buckets(nxt, touched, batch_id=batch_id, snap=snap)
         finally:
             partials.unpersist()
         metrics["state_files_read"] = len(state_files)

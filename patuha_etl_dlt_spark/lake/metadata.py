@@ -11,6 +11,7 @@ type-widen (north-rule requirement).
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import os
 import tempfile
@@ -171,6 +172,10 @@ class DataFile:
 _NUMERIC = (int, float, Decimal)
 
 
+def _numeric(v) -> bool:
+    return isinstance(v, _NUMERIC) and not isinstance(v, bool)
+
+
 def _max_cursor(prev, new):
     """Monotone-max for pull cursors that is TYPE-STABLE: int, float and
     Decimal compare numerically (a source whose cursor round-trips
@@ -182,12 +187,7 @@ def _max_cursor(prev, new):
         return new
     if new is None:
         return prev
-    if (
-        isinstance(prev, _NUMERIC)
-        and isinstance(new, _NUMERIC)
-        and not isinstance(prev, bool)
-        and not isinstance(new, bool)
-    ):
+    if _numeric(prev) and _numeric(new):
         # keep the winner's own type (int stays int unless a float wins)
         return prev if prev >= new else new
     if type(prev) is type(new):
@@ -198,6 +198,35 @@ def _max_cursor(prev, new):
         "monotone guard. Migrate the cursor column explicitly (a new table, "
         "or normalize the source cursor type)."
     )
+
+
+def check_cursor_type(prev, dtype: T.DataType) -> None:
+    """``_max_cursor``'s rules against a source column's Spark type, for a
+    pull to check before it writes any data file: a numeric cursor
+    advances only by a numeric column, a string one (timestamps and dates
+    canonicalize to str) only by a string, timestamp or date column."""
+    if prev is None:
+        return
+    if _numeric(prev):
+        ok = isinstance(dtype, T.NumericType)
+    else:
+        ok = isinstance(prev, str) and isinstance(
+            dtype, (T.StringType, T.TimestampType, T.TimestampNTZType, T.DateType)
+        )
+    if not ok:
+        raise TypeError(
+            f"cursor type changed: the table holds {type(prev).__name__}"
+            f"({prev!r}) but the source cursor column is now {dtype.simpleString()}; "
+            "a type flip would bypass the monotone guard. Migrate the cursor "
+            "explicitly (a new table, or normalize the source type)."
+        )
+
+
+def canonical_cursor(v):
+    """A pulled cursor value as committed: timestamps and dates become
+    ``str()`` (``YYYY-MM-DD HH:MM:SS[.ffffff]``, whose lexicographic order
+    is time order); numbers and strings pass through."""
+    return v if v is None or isinstance(v, (*_NUMERIC, str)) else str(v)
 
 
 def cursor_json(v):
@@ -236,6 +265,43 @@ class Snapshot:
     @property
     def schema(self) -> Schema:
         return self.schemas[self.schema_id]
+
+    def names_of(self, fid: int) -> set[str]:
+        """Every name field ``fid`` has carried in any schema epoch."""
+        return {f.name for s in self.schemas.values() for f in s.fields if f.id == fid}
+
+    def with_schema(self, schema: Schema) -> "Snapshot":
+        """In-memory successor with ``schema`` as a new schema epoch (self
+        if unchanged); key and order columns follow renames by field id.
+        ``LakeTable._commit`` publishes it with the commit's data.
+        Widening a merge-key column is refused: the bucket hash is
+        type-sensitive (murmur3(int) != murmur3(long)), so it would
+        invalidate every recorded ``DataFile.bucket``."""
+        if schema == self.schema:
+            return self
+        old = self.schema
+
+        def follow(name: str) -> str:
+            return schema.field_by_id(old.field_by_name(name).id).name
+
+        for k in self.key_cols:
+            f = old.field_by_name(k)
+            if schema.field_by_id(f.id).type != f.type:
+                raise ValueError(
+                    f"widen_column: {k!r} is a merge-key column; the bucket "
+                    "hash is type-sensitive, so widening it invalidates all "
+                    "recorded bucket assignments. Run an explicit re-bucketing "
+                    "migration (create a new table with the widened key and "
+                    "overwrite() from read()) instead."
+                )
+        sid = max(self.schemas) + 1
+        return dataclasses.replace(
+            self,
+            schema_id=sid,
+            schemas={**self.schemas, sid: schema},
+            key_cols=[follow(k) for k in self.key_cols],
+            order_cols=[follow(c) for c in self.order_cols],
+        )
 
     def to_json(self) -> dict:
         return {

@@ -35,8 +35,11 @@ Spark-first design:
   (the Iceberg snapshot-summary idempotence protocol). The same swap
   records the feed's offsets and pull cursor (Delta's ``txn`` action),
   so there is no second state store to keep in step.
-- **Schema evolution**: metadata-only add / rename / type-widen with
-  column IDs; old files are id-mapped + cast at scan time.
+- **Schema evolution**: add / rename / type-widen with column IDs; old
+  files are id-mapped + cast at scan time. An evolved schema is an
+  in-memory successor (``Snapshot.with_schema``) that ``merge``,
+  ``overwrite`` and ``replace_buckets`` take as ``snap``: schema change,
+  data, batch id, offsets and cursor land in one swap.
 """
 
 from __future__ import annotations
@@ -581,12 +584,14 @@ class LakeTable:
             df = df.withColumn(SYS_EVENT, F.lit(None).cast("long"))
         return self._align(df, snap.schema)
 
-    def overwrite(self, df: DataFrame, batch_id: str | None = None, txn=None) -> dict:
+    def overwrite(
+        self, df: DataFrame, batch_id: str | None = None, txn=None, snap: Snapshot | None = None
+    ) -> dict:
         """Full refresh (the reference's ``write_disposition="replace"`` path,
         ``pipeline_management.py:1225-1506``): target := source, as a new
         snapshot — O(metadata) "truncate", no row deletes. ``txn``: see
-        ``_commit``."""
-        snap = self.snapshot
+        ``_commit``; ``snap``: see ``merge``."""
+        snap = snap or self.snapshot
         if batch_id and batch_id in snap.batch_ids:
             return {"skipped": True, "batch_id": batch_id}
         files, observed = self._write_files(
@@ -606,6 +611,7 @@ class LakeTable:
         delta_reduced: bool = False,
         observe: tuple = (),
         txn=None,
+        snap: Snapshot | None = None,
     ) -> dict:
         """Key-partitioned MERGE of a change-event delta into the table.
 
@@ -641,12 +647,15 @@ class LakeTable:
         ``txn``: the batch's ``(offsets, cursor)`` record, committed with
         the data (see ``_commit``).
 
+        ``snap``: the snapshot to write on and succeed — the head the
+        caller read or its evolved successor (default: the head).
+
         Returns a metrics dict (``files_written`` always equals
         ``buckets_touched``; ``rows_written``/``tombstones`` are observed
         in the write's own stage, no extra job); a re-applied ``batch_id``
         short-circuits to ``{"skipped": True}`` (exactly-once).
         """
-        snap = self.snapshot
+        snap = snap or self.snapshot
         if batch_id and batch_id in snap.batch_ids:
             return {"skipped": True, "batch_id": batch_id}
         if observe:
@@ -686,16 +695,19 @@ class LakeTable:
         self._commit(snap, snap.files + new_files, batch_id, {"operation": "merge", **metrics}, txn)
         return metrics
 
-    def replace_buckets(self, df: DataFrame, buckets, batch_id: str | None = None) -> dict:
+    def replace_buckets(
+        self, df: DataFrame, buckets, batch_id: str | None = None, snap: Snapshot | None = None
+    ) -> dict:
         """Atomic bucket-granular overwrite: ``df`` must contain ALL
         surviving rows for ``buckets`` (one row per key); those buckets'
         files are replaced with freshly-written base files and every other
-        bucket's files are kept untouched. Batch-id idempotent like merge.
+        bucket's files are kept untouched. Batch-id idempotent like merge;
+        ``snap`` as in ``merge``.
 
         This is the bucket-rewrite primitive the incremental rollup folds
         through: the caller has already read the touched buckets' state and
         recombined it, so the write needs no base read of its own."""
-        snap = self.snapshot
+        snap = snap or self.snapshot
         if batch_id and batch_id in snap.batch_ids:
             return {"skipped": True, "batch_id": batch_id}
         wanted = set(buckets)
@@ -732,7 +744,9 @@ class LakeTable:
         kept = [f for f in snap.files if f.bucket not in buckets]
         self._commit(snap, kept + self._write_files(snap, resolved)[0], None, summary)
 
-    def compact_deltas(self, purge_tombstones_below: int | None = None) -> int:
+    def compact_deltas(
+        self, purge_tombstones_below: int | None = None, snap: Snapshot | None = None
+    ) -> int:
         """Fold merge-on-read overlays into base files: every bucket with
         an overlay file is rewritten to one resolved base file (Iceberg
         rewrite_data_files + rewrite_position_delete_files analog). Returns
@@ -752,8 +766,10 @@ class LakeTable:
         Tombstones in buckets this fold does not touch survive until their
         bucket next compacts — opportunistic GC; buckets that keep
         receiving deletes keep getting folded, which bounds growth exactly
-        where growth happens."""
-        snap = self.snapshot
+        where growth happens.
+
+        ``snap``: the head the caller already read (default: read here)."""
+        snap = snap or self.snapshot
         targets = {f.bucket for f in snap.files if f.kind == "delta"}
         if not targets:
             return 0
@@ -765,55 +781,22 @@ class LakeTable:
 
     # ----------------------------------------------------- schema evolution
 
-    def _evolve(self, fn, op: str, **changes) -> None:
-        """Metadata-only successor snapshot with schema ``fn(schema)`` (no
-        data rewrite); ``changes`` carries other fields that move with it
-        (a rename's key/order columns)."""
+    def _evolve(self, fn, op: str) -> None:
+        """Commit the head's successor with schema ``fn(schema)`` and no
+        data (``Snapshot.with_schema``: key and order columns follow a
+        rename, a merge-key widen is refused)."""
         snap = self.snapshot
-        new_schema = fn(snap.schema)
-        if new_schema is snap.schema:
-            return
-        sid = max(snap.schemas) + 1
-        M.write_snapshot(
-            self.meta_dir,
-            dataclasses.replace(
-                snap,
-                version=snap.version + 1,
-                parent=snap.version,
-                schema_id=sid,
-                schemas={**snap.schemas, sid: new_schema},
-                summary={"operation": op},
-                **changes,
-            ),
-        )
+        new = snap.with_schema(fn(snap.schema))
+        if new is not snap:
+            self._commit(new, new.files, None, {"operation": op})
 
     def add_column(self, name: str, typ: str) -> None:
         self._evolve(lambda s: s.add_column(name, typ), f"add_column:{name}")
 
     def rename_column(self, old: str, new: str) -> None:
-        snap = self.snapshot
-        self._evolve(
-            lambda s: s.rename_column(old, new),
-            f"rename_column:{old}->{new}",
-            # keep key/order metadata consistent through renames
-            key_cols=[new if k == old else k for k in snap.key_cols],
-            order_cols=[new if c == old else c for c in snap.order_cols],
-        )
+        self._evolve(lambda s: s.rename_column(old, new), f"rename_column:{old}->{new}")
 
     def widen_column(self, name: str, new_type: str) -> None:
-        if name in self.snapshot.key_cols:
-            # bucket placement is murmur3-hash-of-key, and murmur3(int) !=
-            # murmur3(long): widening a key column silently invalidates
-            # every recorded DataFile.bucket — bucket-pruned reads would
-            # miss rows and merges would leave the same key live in
-            # two buckets. Refuse; this needs an explicit migration.
-            raise ValueError(
-                f"widen_column: {name!r} is a merge-key column; the bucket "
-                "hash is type-sensitive, so widening it invalidates all "
-                "recorded bucket assignments. Run an explicit re-bucketing "
-                "migration (create a new table with the widened key and "
-                "overwrite() from read()) instead."
-            )
         self._evolve(lambda s: s.widen_column(name, new_type), f"widen_column:{name}:{new_type}")
 
     # ---------------------------------------------------------- maintenance

@@ -57,3 +57,37 @@ def crash_at(monkeypatch):
 
     arm.Crash = Crash
     return arm
+
+
+class ManifestIO:
+    """Counts of snapshot-manifest parses (``metadata.read_snapshot``) and
+    writes (``metadata.write_snapshot``) since the last ``take()``."""
+
+    reads = writes = 0
+
+    def take(self) -> tuple[int, int]:
+        out = (self.reads, self.writes)
+        self.reads = self.writes = 0
+        return out
+
+
+@pytest.fixture()
+def manifest_io(monkeypatch):
+    """A ``ManifestIO`` counting every manifest parse and write the
+    package makes while the test runs."""
+    from patuha_etl_dlt_spark.lake import metadata
+
+    io = ManifestIO()
+    real_read, real_write = metadata.read_snapshot, metadata.write_snapshot
+
+    def read_snapshot(meta_dir, version):
+        io.reads += 1
+        return real_read(meta_dir, version)
+
+    def write_snapshot(meta_dir, snap):
+        io.writes += 1
+        real_write(meta_dir, snap)
+
+    monkeypatch.setattr(metadata, "read_snapshot", read_snapshot)
+    monkeypatch.setattr(metadata, "write_snapshot", write_snapshot)
+    return io

@@ -124,7 +124,9 @@ def test_crash_between_merge_and_checkpoint_heals(spark, tmp_path, feed, crash_a
     offsets are committed together, so the replay is skipped and the
     offsets stay the crashed commit's. A fresh engine over the same
     directories converges to the oracle either way; only the lost metrics
-    line is missing from the log."""
+    line is missing from the log. A batch whose descriptor renames and
+    adds a column commits its schema change in the same swap: after (a)
+    the head version and the columns are unchanged."""
     batches = split_batches(feed, 3)
 
     def apply(eng, path, i):
@@ -187,6 +189,40 @@ def test_crash_between_merge_and_checkpoint_heals(spark, tmp_path, feed, crash_a
         assert eng.table.snapshot.offsets == {0: 7}
         assert (eng.status()["n_batches"], eng.status()["last_batch_id"]) == (2, "p1")
 
+    # a batch whose descriptor renames lang -> language and adds ct
+    old = schema_descriptor([(1, "k", "string"), (2, "ts", "long"), (3, "lang", "string")])
+    new = schema_descriptor(
+        [(1, "k", "string"), (2, "ts", "long"), (3, "language", "string"), (4, "ct", "string")]
+    )
+    env = "lsn long, partition_id int, schema_json string, k string, ts long"
+    e0 = spark.createDataFrame([(0, 0, old, "a", 1, "en"), (1, 0, old, "b", 1, "de")], f"{env}, lang string")
+    e1 = spark.createDataFrame(
+        [(2, 0, new, "a", 2, "sv", "x"), (3, 0, new, "c", 2, "fi", "y")],
+        f"{env}, language string, ct string",
+    )
+    for point in ("a", "b"):
+        t = LakeTable.create(
+            spark, str(tmp_path / f"evolve_{point}"), [("k", "string"), ("ts", "long"), ("lang", "string")],
+            key_cols="k", order_col="ts", num_buckets=2,
+        )
+        eng = CdcEngine(t, CheckpointStore(str(tmp_path / f"evolve_{point}_cp")))
+        eng.apply_batch(e0, batch_id="e0")
+        v0 = t.snapshot.version
+        crash_at(point)
+        with pytest.raises(crash_at.Crash):
+            eng.apply_batch(e1, batch_id="e1")
+
+        eng = restart(spark, eng)
+        if point == "a":
+            assert eng.table.snapshot.version == v0
+            assert eng.table.user_columns() == ["k", "ts", "lang"]
+        else:
+            assert eng.table.snapshot.version == v0 + 1
+        assert eng.apply_batch(e1, batch_id="e1")["skipped"] is (point == "b")
+        assert eng.table.user_columns() == ["k", "ts", "language", "ct"]
+        got = {r["k"]: (r["language"], r["ct"]) for r in eng.table.read().collect()}
+        assert got == {"a": ("sv", "x"), "b": ("de", None), "c": ("fi", "y")}, point
+
 
 def test_one_durable_state_write_per_commit(spark, tmp_path, monkeypatch):
     """A non-compacting commit makes exactly two durable metadata writes —
@@ -246,6 +282,81 @@ def test_one_durable_state_write_per_commit(spark, tmp_path, monkeypatch):
     assert os.listdir(eng.cp.root) == ["metrics.jsonl"]
 
 
+def test_manifest_io_per_commit(spark, tmp_path, manifest_io):
+    """Each commit reads the head manifest once and publishes one
+    snapshot. A non-compacting commit — a push apply on the discovery and
+    the known-offsets path, including one whose descriptor renames and
+    adds a column and a late one on the pre-rename descriptor, and every
+    cursor pull, including one that evolves from the source — parses the
+    head at most twice, writes exactly one snapshot and advances the head
+    version by exactly one. A compacting apply adds at most one parse and
+    one write."""
+    from patuha_etl_dlt_spark.cdc.orchestrator import SyncOrchestrator
+    from patuha_etl_dlt_spark.config import TableConfig
+
+    old = schema_descriptor([(1, "k", "string"), (2, "ts", "long"), (3, "lang", "string")])
+    new = schema_descriptor(
+        [(1, "k", "string"), (2, "ts", "long"), (3, "language", "string"), (4, "ct", "string")]
+    )
+    gens = [(old, ["lang"]), (new, ["language", "ct"]), (old, ["lang"])]
+
+    def counted(table, commit) -> tuple[dict, int, int, int]:
+        v = table.snapshot.version
+        manifest_io.take()
+        m = commit()
+        reads, writes = manifest_io.take()
+        return m, reads, writes, table.snapshot.version - v
+
+    for path in ("discovery", "known_offsets"):
+        t = LakeTable.create(
+            spark, str(tmp_path / path), [("k", "string"), ("ts", "long"), ("lang", "string")],
+            key_cols="k", order_col="ts", num_buckets=2,
+        )
+        eng = CdcEngine(t, CheckpointStore(str(tmp_path / f"{path}_cp")), EngineConfig(compact_every=3))
+        for i, (desc, payload) in enumerate(gens):
+            lsns = range(10 * i, 10 * i + 10)
+            df = spark.createDataFrame(
+                [(lsn, lsn % 2, desc, f"k{lsn % 4}", lsn, *[f"v{lsn}"] * len(payload)) for lsn in lsns],
+                "lsn long, partition_id int, schema_json string, k string, ts long, "
+                + ", ".join(f"{c} string" for c in payload),
+            )
+            kw = {}
+            if path == "known_offsets":
+                kw = {"offsets": {0: lsns[-2], 1: lsns[-1]}, "descriptors": [desc]}
+            m, reads, writes, versions = counted(
+                t, lambda: eng.apply_batch(df, batch_id=f"b{i}", **kw)
+            )
+            compacting = i == 2
+            assert ("compacted_buckets" in m) is compacting, (path, i)
+            assert reads <= 2 + compacting, (path, i, reads)
+            assert writes == versions == 1 + compacting, (path, i, writes, versions)
+        assert t.user_columns() == ["k", "ts", "language", "ct"], path
+        got = {r["k"]: r["language"] for r in t.read().collect()}
+        assert got == {"k0": "v28", "k1": "v29", "k2": "v26", "k3": "v27"}, path
+
+    state = {"n": 5, "cols": ["k", "c", "v"]}
+
+    def source(spark_, last):
+        rows = [(i, i, *[f"{c}{i}" for c in state["cols"][2:]]) for i in range(state["n"])]
+        ddl = "k long, c long, " + ", ".join(f"{c} string" for c in state["cols"][2:])
+        return spark_.createDataFrame(rows, ddl).filter(f"c > {-1 if last is None else last}")
+
+    cfg = TableConfig(
+        table="p", merge_key=("k",), cursor="c",
+        columns=(("k", "long"), ("c", "long"), ("v", "string")), num_buckets=2,
+    )
+    orch = SyncOrchestrator(spark, str(tmp_path / "sync"), [cfg], sources={"p": source})
+    t = orch.engine("p").table
+    for cycle in range(3):
+        if cycle == 2:
+            state["cols"].append("x")  # the source grows a column upstream
+        (r,), reads, writes, versions = counted(t, lambda: orch.pull_cycle(f"c{cycle}"))
+        assert r.status == "perfect" and r.metrics["rows_pulled"] == 5 - 2 * (cycle > 0), r
+        assert reads <= 2 and writes == versions == 1, (cycle, reads, writes, versions)
+        state["n"] += 3
+    assert t.user_columns() == ["k", "c", "v", "x"]
+
+
 def test_offset_filter_broadcast_fallback_matches_literal_map(spark, tmp_path, monkeypatch):
     """Above ``_MAX_LITERAL_OFFSETS`` committed partitions the offset
     filter joins a broadcast offsets table instead of inlining a literal
@@ -271,11 +382,11 @@ def test_offset_filter_broadcast_fallback_matches_literal_map(spark, tmp_path, m
     def kept(df):
         return {(r["partition_id"], r["lsn"], r["eid"]) for r in df.collect()}
 
-    fallback_df = eng._filter_new(events)
+    fallback_df = eng._filter_new(eng.table.snapshot, events)
     assert "Broadcast" in fallback_df._jdf.queryExecution().executedPlan().toString()
     fallback = kept(fallback_df)
     monkeypatch.setattr(engine_mod, "_MAX_LITERAL_OFFSETS", n_parts)
-    literal = kept(eng._filter_new(events))
+    literal = kept(eng._filter_new(eng.table.snapshot, events))
     want = {
         (e % (n_parts + 50), e % 11, e)
         for e in range(3300)
@@ -342,7 +453,7 @@ def test_schema_evolution_from_envelope(spark, tmp_path):
 def test_type_widen_from_envelope(spark, tmp_path):
     cols = [("url", "string"), ("warc_ts", "timestamp"), ("hits", "int")]
     t = LakeTable.create(spark, str(tmp_path / "t"), cols, "url", "warc_ts", num_buckets=2)
-    eng = CdcEngine(t, CheckpointStore(str(tmp_path / "cp")), EngineConfig(extract_text=False))
+    eng = CdcEngine(t, CheckpointStore(str(tmp_path / "cp")))
     d1 = schema_descriptor([(1, "url", "string"), (2, "warc_ts", "timestamp"), (3, "hits", "int")])
     df1 = spark.createDataFrame(
         [(0, "I", "a", dt.datetime(2026, 1, 1), 5, 0, d1)],
@@ -355,8 +466,15 @@ def test_type_widen_from_envelope(spark, tmp_path):
         "lsn long, op string, url string, warc_ts timestamp, hits long, partition_id int, schema_json string",
     )
     eng.apply_batch(df2, batch_id="b1")
+    # a late event on the pre-widen descriptor is an older generation:
+    # no op, its value is cast up
+    df3 = spark.createDataFrame(
+        [(2, "I", "c", dt.datetime(2026, 1, 3), 7, 1, d1)],
+        "lsn long, op string, url string, warc_ts timestamp, hits int, partition_id int, schema_json string",
+    )
+    assert eng.apply_batch(df3, batch_id="b2")["evolution_ops"] == []
     got = {r["url"]: r["hits"] for r in t.read().collect()}
-    assert got == {"a": 5, "b": 2**40}
+    assert got == {"a": 5, "b": 2**40, "c": 7}
     assert dict(t.read().dtypes)["hits"] == "bigint"
 
 
@@ -376,43 +494,48 @@ def test_seed_snapshot_then_incremental(spark, tmp_path, feed):
 
 
 def test_mixed_generation_batch_rename_coalesce(spark, tmp_path):
-    """One batch carrying BOTH pre-rename ('lang') and post-rename
-    ('language') events: the engine coalesces the two generations into the
-    current column (engine._prepare_delta rename remap)."""
-    eng = make_engine(spark, tmp_path)
+    """One batch carrying BOTH pre-rename ('lang') and post-rename events:
+    the rename is applied once and the engine coalesces the two
+    generations into the current column (``_prepare_delta`` maps columns
+    by field id). The new name sorts after the old one's descriptor
+    ('language') or before it ('alang'): the descriptor order does not
+    decide the result."""
     base = generate_pandas(FeedSpec(n_urls=20, n_events=60, p_delete=0.0, edge_cases=False))
-    eng.apply_batch(to_df(spark, base), batch_id="b0")
+    for new_name in ("language", "alang"):
+        eng = make_engine(spark, tmp_path, name=new_name)
+        eng.apply_batch(to_df(spark, base), batch_id="b0")
 
-    desc2 = schema_descriptor(
-        [(1, "url", "string"), (2, "warc_ts", "timestamp"), (3, "html", "binary"),
-         (4, "text", "string"), (5, "language", "string")]
-    )
-    uniq = base.drop_duplicates("url")  # disjoint url sets per generation
-    old_gen = uniq.iloc[:5].copy()
-    old_gen["lsn"] = old_gen["lsn"] + 1000
-    old_gen["warc_ts"] = old_gen["warc_ts"] + pd.Timedelta(days=1)
-    old_gen["language"] = None
-    new_gen = uniq.iloc[5:10].copy()
-    new_gen["lsn"] = new_gen["lsn"] + 2000
-    new_gen["warc_ts"] = new_gen["warc_ts"] + pd.Timedelta(days=1)
-    new_gen["schema_json"] = desc2
-    new_gen["language"] = "sv"
-    new_gen["lang"] = None
-    mixed = pd.concat([old_gen, new_gen], ignore_index=True)
-    cols = ["lsn", "op", "url", "warc_ts", "html", "text", "lang", "language",
-            "partition_id", "schema_json"]
-    df = spark.createDataFrame(
-        mixed[cols],
-        "lsn long, op string, url string, warc_ts timestamp, html binary, text string, "
-        "lang string, language string, partition_id int, schema_json string",
-    )
-    m = eng.apply_batch(df, batch_id="b1")
-    assert any(o["kind"] == "rename" for o in m["evolution_ops"])
-    rows = {r["url"]: r["language"] for r in eng.table.read().collect()}
-    for u in old_gen["url"]:
-        assert rows[u] in ("en", "de", "fr", "id")  # old-gen value carried over
-    for u in new_gen["url"]:
-        assert rows[u] == "sv"
+        desc2 = schema_descriptor(
+            [(1, "url", "string"), (2, "warc_ts", "timestamp"), (3, "html", "binary"),
+             (4, "text", "string"), (5, new_name, "string")]
+        )
+        uniq = base.drop_duplicates("url")  # disjoint url sets per generation
+        old_gen = uniq.iloc[:5].copy()
+        old_gen["lsn"] = old_gen["lsn"] + 1000
+        old_gen["warc_ts"] = old_gen["warc_ts"] + pd.Timedelta(days=1)
+        old_gen[new_name] = None
+        new_gen = uniq.iloc[5:10].copy()
+        new_gen["lsn"] = new_gen["lsn"] + 2000
+        new_gen["warc_ts"] = new_gen["warc_ts"] + pd.Timedelta(days=1)
+        new_gen["schema_json"] = desc2
+        new_gen[new_name] = "sv"
+        new_gen["lang"] = None
+        mixed = pd.concat([old_gen, new_gen], ignore_index=True)
+        cols = ["lsn", "op", "url", "warc_ts", "html", "text", "lang", new_name,
+                "partition_id", "schema_json"]
+        df = spark.createDataFrame(
+            mixed[cols],
+            "lsn long, op string, url string, warc_ts timestamp, html binary, text string, "
+            f"lang string, {new_name} string, partition_id int, schema_json string",
+        )
+        m = eng.apply_batch(df, batch_id="b1")
+        assert m["evolution_ops"] == [{"kind": "rename", "name": "lang", "new_name": new_name}]
+        assert eng.table.user_columns() == ["url", "warc_ts", "html", "text", new_name]
+        rows = {r["url"]: r[new_name] for r in eng.table.read().collect()}
+        for u in old_gen["url"]:
+            assert rows[u] in ("en", "de", "fr", "id"), new_name  # old-gen value carried over
+        for u in new_gen["url"]:
+            assert rows[u] == "sv", new_name
 
 
 def test_extreme_hot_key_skew(spark, tmp_path):
@@ -510,7 +633,7 @@ def test_quarantine_replay_does_not_duplicate(spark, tmp_path, feed):
     n_bad = int((pdf.lsn % 10 == 0).sum())
     # simulate the crash window: quarantine runs, merge never commits, retry
     for _ in range(3):
-        _, n = eng._quarantine(to_df(spark, pdf), "q0")
+        _, n = eng._quarantine(t.snapshot, to_df(spark, pdf), "q0")
         assert n == n_bad
     dead = spark.read.parquet(qdir)
     assert dead.count() == n_bad  # not 3 * n_bad
@@ -658,7 +781,7 @@ def test_widen_key_column_refused(spark, tmp_path):
         t.widen_column("k", "long")
     wide = spark.createDataFrame([(1, 1, 1)], "k long, c long, v int")
     with pytest.raises(ValueError, match="merge-key"):
-        evolution.evolve_from_source(t, wide.schema)
+        evolution.evolve_from_source(t.snapshot, wide.schema)
     t.widen_column("v", "long")  # non-key columns still widen fine
 
 
@@ -857,11 +980,6 @@ def test_push_batches_without_op_and_schema_columns(spark, tmp_path):
         assert eng.table.snapshot.offsets == {0: 38, 1: 39}, path
 
 
-@pytest.mark.xfail(
-    strict=True,
-    reason="known defect: a late event still carrying the pre-rename "
-    "descriptor renames the column back",
-)
 def test_late_pre_rename_event_keeps_renamed_column(spark, tmp_path):
     """Field 3 is renamed ``lang`` → ``language`` by batch ``b1``
     (partition 0). A late batch ``b2`` on partition 1 still carries the old

@@ -8,7 +8,6 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
-from patuha_etl_dlt_spark.cdc.engine import EngineConfig
 from patuha_etl_dlt_spark.cdc.orchestrator import SyncOrchestrator
 from patuha_etl_dlt_spark.cdc.retry import RetryPolicy, with_retry
 from patuha_etl_dlt_spark.config import TableConfig, load_table_configs
@@ -69,7 +68,7 @@ def test_config_validation_and_load(tmp_path):
 
 
 def test_multi_table_cycle_and_verify(spark, tmp_path):
-    orch = SyncOrchestrator(spark, str(tmp_path), configs(), EngineConfig(extract_text=False))
+    orch = SyncOrchestrator(spark, str(tmp_path), configs())
     b1 = {
         "pages": pages_events(spark, [(1, "I", "a", 1, "A1"), (2, "I", "b", 1, "B1")]),
         "page_links": links_events(spark, [(1, "I", "a", "b", 1, 10)]),
@@ -127,13 +126,8 @@ def test_concurrent_cycle_matches_sequential(spark, tmp_path):
             },
         }
 
-    seq = SyncOrchestrator(
-        spark, str(tmp_path / "seq"), configs(), EngineConfig(extract_text=False)
-    )
-    con = SyncOrchestrator(
-        spark, str(tmp_path / "con"), configs(), EngineConfig(extract_text=False),
-        max_concurrency=3,
-    )
+    seq = SyncOrchestrator(spark, str(tmp_path / "seq"), configs())
+    con = SyncOrchestrator(spark, str(tmp_path / "con"), configs(), max_concurrency=3)
     for orch in (seq, con):
         for cyc, mk in (("c1", batch1), ("c2", batch2)):
             res = orch.run_cycle(mk(spark), cyc)
@@ -159,8 +153,7 @@ def test_concurrent_cycle_matches_sequential(spark, tmp_path):
 def test_failed_table_goes_to_retry_queue(spark, tmp_path):
     orch = SyncOrchestrator(
         spark, str(tmp_path), configs(),
-        EngineConfig(extract_text=False),
-        RetryPolicy(max_attempts=2, base_delay_s=0.01),
+        retry_policy=RetryPolicy(max_attempts=2, base_delay_s=0.01),
     )
     bad = pages_events(spark, [(1, "I", "a", 1, "A1")]).drop("warc_ts")  # missing cursor col
     res = orch.run_cycle({"pages": bad}, "c1")
@@ -305,7 +298,7 @@ def test_status_and_health_endpoint(spark, tmp_path):
 
     from patuha_etl_dlt_spark.cdc.monitoring import HealthServer
 
-    orch = SyncOrchestrator(spark, str(tmp_path), configs()[:2], EngineConfig(extract_text=False))
+    orch = SyncOrchestrator(spark, str(tmp_path), configs()[:2])
     assert orch.status()["status"] == "idle"
 
     orch.run_cycle(

@@ -47,7 +47,7 @@ def test_offset_filter_prunes_payload(spark, tmp_path):
     feed = spark.read.parquet(feed_dir)
     t = LakeTable.create(spark, str(tmp_path / "t"), PAGES_COLUMNS, "url", "warc_ts")
     eng = CdcEngine(t, CheckpointStore(str(tmp_path / "cp")))
-    pruned = eng._filter_new(feed).groupBy("partition_id").agg(F.max("lsn"))
+    pruned = eng._filter_new(t.snapshot, feed).groupBy("partition_id").agg(F.max("lsn"))
     cols = set(read_schema_columns(pruned))
     assert "html" not in cols and "text" not in cols
 
@@ -159,8 +159,8 @@ def test_engine_apply_plan_one_shuffle_and_no_second_reduce(spark, tmp_path):
     eng.apply_batch(df, batch_id="seed", offsets={p: 99 for p in range(4)}, descriptors=[])
 
     # now offsets exist: the batch plan uses the literal-map filter
-    fresh = eng._filter_new(df)
-    delta = eng._prepare_delta(fresh, [])
+    fresh = eng._filter_new(t.snapshot, df)
+    delta = eng._prepare_delta(t.snapshot, fresh)
     plan = formatted_plan(delta)
     assert count_exchanges(delta) == 1, plan  # the LWW groupBy only
     assert has_partial_aggregation(delta), plan  # map-side combine

@@ -268,6 +268,42 @@ def test_snapshot_mode_pull_crash_heals(spark, tmp_path, crash_at):
         assert (eng.table.snapshot.offsets, eng.table.snapshot.cursor) == ({}, None)
 
 
+def test_snapshot_mode_pull_evolves_from_source(spark, tmp_path):
+    """A source that grows a column upstream evolves the lake table on
+    every pull mode — the full-refresh (snapshot) pull as the cursor and
+    snapshot-diff pulls do — in the pull's own commit, instead of the
+    overwrite silently dropping the new column."""
+    state = {"rows": [(i, i, f"v{i}") for i in range(4)], "ddl": "k long, seq long, v string"}
+
+    def source(spark_, last):
+        return spark_.createDataFrame(state["rows"], state["ddl"])
+
+    cols = (("k", "long"), ("seq", "long"), ("v", "string"))
+    cfgs = [
+        TableConfig(table=mode, merge_key=("k",), cursor="seq" if mode == "cdc" else "",
+                    mode=mode, columns=cols, num_buckets=2)
+        for mode in ("cdc", "snapshot", "snapshot_diff")
+    ]
+    orch = SyncOrchestrator(
+        spark, str(tmp_path / "sync"), cfgs, sources={c.table: source for c in cfgs}
+    )
+    assert all(r.status == "perfect" for r in orch.pull_cycle("c1"))
+    v1 = {c.table: orch.engine(c.table).table.snapshot.version for c in cfgs}
+    state["rows"] = [(i, i, f"v{i}", f"x{i}") for i in range(4, 6)]
+    state["ddl"] = "k long, seq long, v string, x string"
+    for r in orch.pull_cycle("c2"):
+        assert r.status == "perfect", r
+        assert r.metrics["evolution_ops"] == [{"kind": "add", "name": "x", "typ": "string"}], r
+        t = orch.engine(r.table).table
+        assert t.user_columns() == ["k", "seq", "v", "x"], r.table
+        assert t.snapshot.version == v1[r.table] + 1, r.table  # one commit
+        got = {row["k"]: row["x"] for row in t.read().collect()}
+        want = {4: "x4", 5: "x5"}
+        if r.table == "cdc":
+            want.update({i: None for i in range(4)})  # old rows NULL-filled
+        assert got == want, r.table
+
+
 def test_snapshot_diff_pull_crash_heals(spark, tmp_path, crash_at):
     """A snapshot-diff pull that dies before ``CURRENT`` (a) re-diffs on
     replay; one that dies after it (b) is skipped. Either way the next
@@ -580,7 +616,7 @@ def test_snapshot_diff_pull_respects_overlay_and_compacts(spark, tmp_path, monke
     )
     orch = SyncOrchestrator(
         spark, str(tmp_path / "sync"), [cfg], sources={"sd": source},
-        engine_config=EngineConfig(compact_every=2, extract_text=False),
+        engine_config=EngineConfig(compact_every=2),
     )
     (r1,) = orch.pull_cycle("c1")
     t = orch.engine("sd").table
