@@ -167,10 +167,7 @@ class CdcEngine:
 
         Layout note: the dead-letter dir is Hive-partitioned on
         ``_batch_id`` (read the ROOT with ``spark.read.parquet(dir)`` and
-        the batch id appears as a partition column). Quarantine dirs
-        written before this layout (files carrying an appended ``_batch_id``
-        data column at the root) are not mixable with it — point new runs
-        at a fresh ``quarantine_dir``."""
+        the batch id appears as a partition column)."""
         import shutil
 
         from patuha_etl_dlt_spark.functions.diagnose import split_quarantine

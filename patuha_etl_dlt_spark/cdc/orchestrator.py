@@ -211,7 +211,7 @@ class SyncOrchestrator:
         path."""
         if not snap.files:
             return None
-        state = eng.table.read(snapshot_version=snap.version)
+        state = eng.table.read(snap=snap)
         return canonical_cursor(state.agg(F.max(F.col(cursor_col)).alias("m")).first()["m"])
 
     def _pull_one(self, name: str, eng: CdcEngine, bid: str) -> dict:
@@ -298,12 +298,12 @@ class SyncOrchestrator:
         # reuses those exchanges; the merge then places the changes into
         # buckets for its write
         diff_width = diff_shuffle_partitions(
-            eng.table, int(self.spark.conf.get("spark.sql.shuffle.partitions"))
+            eng.table, snap, int(self.spark.conf.get("spark.sql.shuffle.partitions"))
         )
         keys = list(self.configs[name].merge_key)
         delta = diff_snapshots(
             df.repartition(diff_width, *keys),
-            eng.table.read(snapshot_version=snap.version).repartition(diff_width, *keys),
+            eng.table.read(snap=snap).repartition(diff_width, *keys),
             keys,
         ).withColumn("_event_id", F.lit(snap.version + 1).cast("long"))
         obs = Observation()

@@ -47,10 +47,11 @@ from patuha_etl_dlt_spark.lake.table import OP
 
 
 def diff_shuffle_partitions(
-    table, session_partitions: int, target_bytes: int = 64 << 20
+    table, snap, session_partitions: int, target_bytes: int = 64 << 20
 ) -> int:
-    """Shuffle width for a snapshot-diff cycle, derived from the TABLE's
-    on-disk bytes: ``max(session, table_bytes // target_bytes)``.
+    """Shuffle width for a snapshot-diff cycle, derived from the on-disk
+    bytes of ``table`` at snapshot ``snap`` (the head the cycle diffs
+    against): ``max(session, table_bytes // target_bytes)``.
 
     The diff's full-outer join otherwise inherits the session's shuffle
     partitions — right for steady-state micro-batches, but the diff
@@ -62,7 +63,7 @@ def diff_shuffle_partitions(
     keys to this width; a small table stays at the session width. Driver
     cost is one ``os.path.getsize`` per live data file (O(buckets))."""
     total = 0
-    for f in table.snapshot.files:
+    for f in snap.files:
         p = os.path.join(table.root, f.path)
         try:
             total += os.path.getsize(p)

@@ -29,12 +29,17 @@ Spark-first design:
   10^6 duplicate events costs ~1 combined row per input partition in the
   shuffle — the primary skew defense; explicit salting (``cdc.dedup``)
   covers the window-based path.
-- **Atomic commits + exactly-once**: a snapshot manifest lists data files;
-  committing is an atomic pointer swap. Each snapshot records the batch
-  ids it contains; re-applying a committed ``batch_id`` is a no-op
-  (the Iceberg snapshot-summary idempotence protocol). The same swap
-  records the feed's offsets and pull cursor (Delta's ``txn`` action),
-  so there is no second state store to keep in step.
+- **One write step, atomic commits + exactly-once**: every data write
+  (``merge``, ``overwrite``, ``replace_buckets``, the compactions) goes
+  through ``_write``: new files, written bucket-placed and checked,
+  either appended as overlays (a merge) or replacing a set of buckets
+  (Iceberg's AppendFiles vs ReplacePartitions / RewriteFiles). A
+  snapshot manifest lists data files; committing is an atomic pointer
+  swap. Each snapshot records the batch ids it contains; re-applying a
+  committed ``batch_id`` is a no-op (the Iceberg snapshot-summary
+  idempotence protocol). The same swap records the feed's offsets and
+  pull cursor (Delta's ``txn`` action), so there is no second state
+  store to keep in step.
 - **Schema evolution**: add / rename / type-widen with column IDs; old
   files are id-mapped + cast at scan time. An evolved schema is an
   in-memory successor (``Snapshot.with_schema``) that ``merge``,
@@ -345,10 +350,13 @@ class LakeTable:
             .select(*snap.key_cols, *[F.col(f"_w.{c}").alias(c) for c in payload])
         )
 
-    def _resolved(self, snap: Snapshot, files: list[DataFile]) -> DataFrame:
+    def _resolved(
+        self, snap: Snapshot, files: list[DataFile], purge_below: int | None = None
+    ) -> DataFrame:
         """Merge-on-read resolution: buckets without delta overlays stream
         straight from their base files; buckets WITH overlays are
-        LWW-reduced across base ∪ delta. Tombstones retained.
+        LWW-reduced across base ∪ delta. Tombstones retained, except (a
+        compaction's purge) those whose event id is below ``purge_below``.
 
         When every bucket is dirty (a compaction rewrite) the reduced part
         is returned alone, not unioned with an empty frame, so it keeps
@@ -357,11 +365,17 @@ class LakeTable:
         clean_files = [f for f in files if f.bucket not in dirty]
         dirty_files = [f for f in files if f.bucket in dirty]
         if not dirty_files:
-            return self._read_files(snap, clean_files)
-        reduced = self._lww_reduce(snap, self._read_files(snap, dirty_files))
-        if not clean_files:
-            return reduced
-        return self._read_files(snap, clean_files).unionByName(reduced)
+            df = self._read_files(snap, clean_files)
+        else:
+            df = self._lww_reduce(snap, self._read_files(snap, dirty_files))
+            if clean_files:
+                df = self._read_files(snap, clean_files).unionByName(df)
+        if purge_below is None:
+            return df
+        return df.filter(
+            (~F.coalesce(F.col(SYS_DELETED), F.lit(False)))
+            | (F.coalesce(F.col(SYS_EVENT), F.lit(-1)) >= F.lit(int(purge_below)))
+        )
 
     @staticmethod
     def _view(df: DataFrame, include_deleted: bool, include_system: bool) -> DataFrame:
@@ -377,15 +391,12 @@ class LakeTable:
         self,
         include_deleted: bool = False,
         include_system: bool = False,
-        snapshot_version: int | None = None,
+        snap: Snapshot | None = None,
     ) -> DataFrame:
-        """Current (or time-travel) state of the table as a DataFrame
-        (merge-on-read overlays resolved)."""
-        snap = (
-            self.snapshot
-            if snapshot_version is None
-            else M.read_snapshot(self.meta_dir, snapshot_version)
-        )
+        """State of the table at ``snap`` (default: the head; an older one
+        from ``history()`` is time travel) as a DataFrame, merge-on-read
+        overlays resolved."""
+        snap = snap or self.snapshot
         return self._view(self._resolved(snap, snap.files), include_deleted, include_system)
 
     def read_buckets(
@@ -500,46 +511,87 @@ class LakeTable:
 
     # -------------------------------------------------------------- writes
 
-    def _write_files(
-        self, snap: Snapshot, df: DataFrame, kind: str = "base", metrics: tuple = ()
-    ) -> tuple[list[DataFile], dict]:
-        """Write ``df`` (already aligned to snap.schema) bucket-placed, one
-        Hive partition dir per bucket; return the new DataFile entries and
-        the values of the aggregate ``metrics`` columns over the written
-        rows.
+    def _write(
+        self,
+        snap: Snapshot,
+        rows: DataFrame,
+        replace,
+        batch_id: str | None = None,
+        txn=None,
+        operation: str = "merge",
+    ) -> dict:
+        """The one write-and-commit step every data write goes through.
 
-        The metrics are observed AFTER placement, in the write's own
-        stage: observed upstream of the exchange, they are lost when
-        adaptive execution replaces an empty shuffle stage.
+        A ``batch_id`` already in ``snap`` returns ``{"skipped": True}``
+        (exactly-once; ``rows`` is a lazy plan, so nothing has run).
+        Otherwise ``rows`` (aligned to snap.schema, system columns stamped)
+        are written bucket-placed, one Hive partition dir per bucket. The
+        row and tombstone counts are observed AFTER placement, in the
+        write's own stage: observed upstream of the exchange, they are lost
+        when adaptive execution replaces an empty shuffle stage.
 
-        Checks the layout invariant the reads rely on — one file per
-        touched bucket — before anything is committed: a bucket that
-        received more than one file fails the write (and its files are
-        removed) instead of silently fragmenting the table."""
+        The layout the reads rely on is checked before anything is
+        committed: a bucket that received more than one file, or with
+        ``replace`` a row outside the ``replace`` buckets, fails the write
+        and removes its data dir.
+
+        The commit intent is ``replace``: ``None`` (a merge) appends the new
+        files to ``snap``'s as ``delta`` overlays; otherwise (a set of
+        buckets) they become the ``base`` of those buckets and every other
+        bucket's files are kept. ``txn`` as in ``_commit``. Returns the
+        write's metrics (a replacement's carry ``buckets_replaced``), which
+        the snapshot summary records too."""
+        if batch_id and batch_id in snap.batch_ids:
+            return {"skipped": True, "batch_id": batch_id}
         rel = M.new_data_dir(self.root)
         out = os.path.join(self.root, rel)
         # a write task reads whole placed partitions, i.e. whole buckets, so
         # merging them into at most one task per core keeps one file per
         # bucket; adaptive execution never coalesces a numbered repartition
         width = min(snap.num_buckets, self.spark.sparkContext.defaultParallelism)
-        dfw = self._place(snap, df).coalesce(width)
-        obs = Observation() if metrics else None
-        if obs is not None:
-            dfw = dfw.observe(obs, *metrics)
-        dfw = dfw.withColumn("_bucket", self._bucket_expr(snap))
-        dfw.write.partitionBy("_bucket").mode("overwrite").parquet(out)
-        new_files: list[DataFile] = []
+        obs = Observation()
+        placed = self._place(snap, rows).coalesce(width).observe(
+            obs,
+            F.count(F.lit(1)).alias("rows_written"),
+            F.sum(F.col(SYS_DELETED).cast("long")).alias("tombstones"),
+        )
+        placed = placed.withColumn("_bucket", self._bucket_expr(snap))
+        placed.write.partitionBy("_bucket").mode("overwrite").parquet(out)
+        kind = "delta" if replace is None else "base"
+        files: list[DataFile] = []
         for bdir in glob.glob(os.path.join(out, "_bucket=*")):
             b = int(os.path.basename(bdir).split("=", 1)[1])
             for p in glob.glob(os.path.join(bdir, "*.parquet")):
-                new_files.append(DataFile(os.path.relpath(p, self.root), b, snap.schema_id, kind))
-        if len(new_files) != len({f.bucket for f in new_files}):
+                files.append(DataFile(os.path.relpath(p, self.root), b, snap.schema_id, kind))
+        buckets = {f.bucket for f in files}
+        stray = buckets - replace if replace is not None else set()
+        if stray or len(files) != len(buckets):
             shutil.rmtree(out, ignore_errors=True)
+            if stray:
+                raise ValueError(
+                    f"{operation}: rows outside buckets {sorted(replace)}: buckets {sorted(stray)}"
+                )
             raise RuntimeError(
-                f"bucket layout violated: {len(new_files)} files for "
-                f"{len({f.bucket for f in new_files})} touched buckets under {rel}"
+                f"bucket layout violated: {len(files)} files for "
+                f"{len(buckets)} touched buckets under {rel}"
             )
-        return new_files, (obs.get if obs is not None else {})
+        metrics = {
+            "skipped": False,
+            "batch_id": batch_id,
+            "buckets_touched": len(buckets),
+            "files_written": len(files),
+            # on-disk bytes of this write's files (driver-side stat of a
+            # handful of paths)
+            "bytes_written": sum(os.path.getsize(os.path.join(self.root, f.path)) for f in files),
+            **obs.get,
+        }
+        if replace is None:
+            kept = snap.files
+        else:
+            kept = [f for f in snap.files if f.bucket not in replace]
+            metrics["buckets_replaced"] = len(replace)
+        self._commit(snap, kept + files, batch_id, {"operation": operation, **metrics}, txn)
+        return metrics
 
     def _commit(
         self, snap: Snapshot, files: list[DataFile], batch_id: str | None, summary: dict, txn=None
@@ -589,20 +641,13 @@ class LakeTable:
     ) -> dict:
         """Full refresh (the reference's ``write_disposition="replace"`` path,
         ``pipeline_management.py:1225-1506``): target := source, as a new
-        snapshot — O(metadata) "truncate", no row deletes. ``txn``: see
-        ``_commit``; ``snap``: see ``merge``."""
+        snapshot — O(metadata) "truncate", no row deletes: every bucket is
+        replaced. ``txn``: see ``_commit``; ``snap``: see ``merge``."""
         snap = snap or self.snapshot
-        if batch_id and batch_id in snap.batch_ids:
-            return {"skipped": True, "batch_id": batch_id}
-        files, observed = self._write_files(
-            snap,
-            self._stamped(snap, df, batch_id),
-            metrics=(F.count(F.lit(1)).alias("rows_written"),),
+        return self._write(
+            snap, self._stamped(snap, df, batch_id), set(range(snap.num_buckets)),
+            batch_id, txn, "overwrite",
         )
-        self._commit(
-            snap, files, batch_id, {"operation": "overwrite", "batch_id": batch_id}, txn
-        )
-        return {"skipped": False, "batch_id": batch_id, **observed}
 
     def merge(
         self,
@@ -625,7 +670,7 @@ class LakeTable:
         commutative (see module docstring).
 
         Merge-on-read: the batch's LWW winners are APPENDED as overlay
-        files, one per touched bucket (``_write_files``); reads LWW-resolve
+        files, one per touched bucket (``_write``); reads LWW-resolve
         overlays against base. Write cost per batch is O(delta), not
         O(touched table state). ``compact_deltas`` folds overlays back into
         one base file per bucket — run after every merge, that is the
@@ -656,8 +701,6 @@ class LakeTable:
         short-circuits to ``{"skipped": True}`` (exactly-once).
         """
         snap = snap or self.snapshot
-        if batch_id and batch_id in snap.batch_ids:
-            return {"skipped": True, "batch_id": batch_id}
         if observe:
             delta = self._place(snap, delta).observe(*observe)
 
@@ -667,33 +710,10 @@ class LakeTable:
         delta = delta.filter(key_cond)
 
         deleted = F.upper(F.col(OP)) == F.lit("D") if OP in delta.columns else None
-        delta_aligned = self._stamped(snap, delta, batch_id, deleted)
+        delta = self._stamped(snap, delta, batch_id, deleted)
         # winners WITHIN the batch only; no base read: write cost is O(delta)
-        winners = delta_aligned if delta_reduced else self._lww_reduce(snap, delta_aligned)
-
-        new_files, observed = self._write_files(
-            snap,
-            winners,
-            kind="delta",
-            metrics=(
-                F.count(F.lit(1)).alias("rows_written"),
-                F.sum(F.col(SYS_DELETED).cast("long")).alias("tombstones"),
-            ),
-        )
-        metrics: dict = {
-            "skipped": False,
-            "batch_id": batch_id,
-            "buckets_touched": len({f.bucket for f in new_files}),
-            "files_written": len(new_files),
-            # on-disk bytes of this batch's files (driver-side stat of a
-            # handful of paths)
-            "bytes_written": sum(
-                os.path.getsize(os.path.join(self.root, f.path)) for f in new_files
-            ),
-            **observed,
-        }
-        self._commit(snap, snap.files + new_files, batch_id, {"operation": "merge", **metrics}, txn)
-        return metrics
+        winners = delta if delta_reduced else self._lww_reduce(snap, delta)
+        return self._write(snap, winners, None, batch_id, txn)
 
     def replace_buckets(
         self, df: DataFrame, buckets, batch_id: str | None = None, snap: Snapshot | None = None
@@ -701,48 +721,18 @@ class LakeTable:
         """Atomic bucket-granular overwrite: ``df`` must contain ALL
         surviving rows for ``buckets`` (one row per key); those buckets'
         files are replaced with freshly-written base files and every other
-        bucket's files are kept untouched. Batch-id idempotent like merge;
-        ``snap`` as in ``merge``.
+        bucket's files are kept untouched (a row outside ``buckets`` fails
+        the write). Batch-id idempotent like merge; ``snap`` as in
+        ``merge``.
 
         This is the bucket-rewrite primitive the incremental rollup folds
         through: the caller has already read the touched buckets' state and
         recombined it, so the write needs no base read of its own."""
         snap = snap or self.snapshot
-        if batch_id and batch_id in snap.batch_ids:
-            return {"skipped": True, "batch_id": batch_id}
-        wanted = set(buckets)
-        new_files, observed = self._write_files(
-            snap,
-            self._stamped(snap, df, batch_id),
-            metrics=(F.count(F.lit(1)).alias("rows_written"),),
+        return self._write(
+            snap, self._stamped(snap, df, batch_id), set(buckets), batch_id,
+            operation="replace_buckets",
         )
-        stray = {f.bucket for f in new_files} - wanted
-        if stray:
-            raise ValueError(f"replace_buckets: df contains rows outside {sorted(wanted)}: buckets {sorted(stray)}")
-        kept = [f for f in snap.files if f.bucket not in wanted]
-        metrics = {
-            "skipped": False,
-            "batch_id": batch_id,
-            "buckets_replaced": len(wanted),
-            **observed,
-        }
-        self._commit(snap, kept + new_files, batch_id, {"operation": "replace_buckets", **metrics})
-        return metrics
-
-    def _rewrite_buckets(
-        self, snap: Snapshot, buckets: set, purge_below: int | None, summary: dict
-    ) -> None:
-        """Rewrite ``buckets`` to one resolved base file each and commit;
-        every other bucket's files are kept. With ``purge_below``, tombstones
-        whose event id is below it are dropped from the rewrite."""
-        resolved = self._resolved(snap, [f for f in snap.files if f.bucket in buckets])
-        if purge_below is not None:
-            resolved = resolved.filter(
-                (~F.coalesce(F.col(SYS_DELETED), F.lit(False)))
-                | (F.coalesce(F.col(SYS_EVENT), F.lit(-1)) >= F.lit(int(purge_below)))
-            )
-        kept = [f for f in snap.files if f.bucket not in buckets]
-        self._commit(snap, kept + self._write_files(snap, resolved)[0], None, summary)
 
     def compact_deltas(
         self, purge_tombstones_below: int | None = None, snap: Snapshot | None = None
@@ -757,7 +747,7 @@ class LakeTable:
         anyway — zero extra I/O vs a standalone ``compact_tombstones``
         full rewrite. Safe ONLY when the table's LWW order is LSN-monotone
         per key — in particular when ``order_cols[0]`` is the ``_event_id``
-        lineage column itself (the engine's ``_gc_safe`` checks this
+        lineage column itself (``CdcEngine.maybe_compact`` checks this
         before passing a horizon). With a business order column, a future
         above-horizon event can carry an older/NULL order value and LOSE
         the LWW race to a below-horizon tombstone; purging that tombstone
@@ -771,12 +761,12 @@ class LakeTable:
         ``snap``: the head the caller already read (default: read here)."""
         snap = snap or self.snapshot
         targets = {f.bucket for f in snap.files if f.kind == "delta"}
-        if not targets:
-            return 0
-        self._rewrite_buckets(
-            snap, targets, purge_tombstones_below,
-            {"operation": "compact_deltas", "buckets": len(targets)},
-        )
+        if targets:
+            files = [f for f in snap.files if f.bucket in targets]
+            self._write(
+                snap, self._resolved(snap, files, purge_tombstones_below), targets,
+                operation="compact_deltas",
+            )
         return len(targets)
 
     # ----------------------------------------------------- schema evolution
@@ -832,7 +822,7 @@ class LakeTable:
         """Purge tombstones whose LSN every feed partition has passed —
         safe once no event with a smaller LSN can still arrive."""
         snap = self.snapshot
-        self._rewrite_buckets(
-            snap, {f.bucket for f in snap.files}, older_than_event_id,
-            {"operation": "compact_tombstones"},
+        self._write(
+            snap, self._resolved(snap, snap.files, older_than_event_id),
+            {f.bucket for f in snap.files}, operation="compact_tombstones",
         )

@@ -289,8 +289,8 @@ def test_manifest_io_per_commit(spark, tmp_path, manifest_io):
     adds a column and a late one on the pre-rename descriptor, and every
     cursor pull, including one that evolves from the source — parses the
     head at most twice, writes exactly one snapshot and advances the head
-    version by exactly one. A compacting apply adds at most one parse and
-    one write."""
+    version by exactly one; a snapshot-diff pull parses the head exactly
+    once. A compacting apply adds at most one parse and one write."""
     from patuha_etl_dlt_spark.cdc.orchestrator import SyncOrchestrator
     from patuha_etl_dlt_spark.config import TableConfig
 
@@ -355,6 +355,24 @@ def test_manifest_io_per_commit(spark, tmp_path, manifest_io):
         assert reads <= 2 and writes == versions == 1, (cycle, reads, writes, versions)
         state["n"] += 3
     assert t.user_columns() == ["k", "c", "v", "x"]
+
+    # a snapshot-diff pull sizes and diffs against the head it was handed
+    rows = [(i, f"n{i}") for i in range(6)]
+    cfg = TableConfig(
+        table="sd", merge_key=("k",), cursor="", mode="snapshot_diff",
+        columns=(("k", "long"), ("n", "string")), num_buckets=2,
+    )
+    orch = SyncOrchestrator(
+        spark, str(tmp_path / "diff"), [cfg],
+        sources={"sd": lambda spark_, last: spark_.createDataFrame(rows, "k long, n string")},
+    )
+    t = orch.engine("sd").table
+    for cycle in range(3):
+        (r,), reads, writes, versions = counted(t, lambda: orch.pull_cycle(f"d{cycle}"))
+        assert r.status == "perfect" and r.metrics["changes"] == (6, 2, 2)[cycle], r
+        assert reads == 1 and writes == versions == 1, (cycle, reads, writes, versions)
+        rows = rows[1:] + [(10 + cycle, "new")]  # one upstream delete, one insert
+    assert sorted(r["k"] for r in t.read().collect()) == [2, 3, 4, 5, 10, 11]
 
 
 def test_offset_filter_broadcast_fallback_matches_literal_map(spark, tmp_path, monkeypatch):

@@ -7,6 +7,8 @@ SURVEY.md §5 — so this suite implements its TRD's intended scenarios)."""
 from __future__ import annotations
 
 import datetime as dt
+import glob
+import os
 from decimal import Decimal
 
 import pytest
@@ -162,10 +164,10 @@ def test_time_travel_and_expire(spark, table):
     # merges append overlays; compacting REPLACES the bucket's files with
     # one base file, so expiring the old snapshots can reclaim them
     table.merge(ev(spark, [(1, "I", "a", 1, "A1")]), batch_id="b1")
-    v1 = table.snapshot.version
+    s1 = table.snapshot
     table.merge(ev(spark, [(2, "U", "a", 2, "A2")]), batch_id="b2")
     assert table.compact_deltas() == 1
-    assert {r["text"] for r in table.read(snapshot_version=v1).collect()} == {"A1"}
+    assert {r["text"] for r in table.read(snap=s1).collect()} == {"A1"}
     n = table.expire_snapshots(keep_last=1)
     assert n >= 1
     assert state(table) == {"a": "A2"}
@@ -572,19 +574,37 @@ def test_lookup_matches_semi_join_for_every_key_type(spark, tmp_path, columns, k
 
 
 def test_write_rejects_more_than_one_file_per_bucket(spark, tmp_path, monkeypatch):
-    """The one-file-per-bucket invariant is checked before the commit: a
-    write that fragments a bucket raises and commits nothing."""
+    """The layout is checked before the commit, for every write kind: a
+    write that fragments a bucket — a merge, an overwrite, a bucket
+    replacement or a compaction — or a bucket replacement with a row
+    outside its buckets, raises, commits nothing and leaves no data dir."""
     t = LakeTable.create(
         spark, str(tmp_path / "inv"), PAGES, key_cols="url", order_col="warc_ts", num_buckets=2
     )
-    v0 = t.snapshot.version
-    rows = [(i, "I", f"u{i}", 1, f"X{i}") for i in range(40)]
+    df = ev(spark, [(i, "I", f"u{i}", 1, f"X{i}") for i in range(40)])
+    t.merge(df, batch_id="seed")  # overlays for the compaction to fold
+    data_dirs = os.path.join(t.root, "data", "*")
+
+    def rejected(write, error, match):
+        v, dirs = t.snapshot.version, sorted(glob.glob(data_dirs))
+        with pytest.raises(error, match=match):
+            write()
+        assert t.snapshot.version == v
+        assert sorted(glob.glob(data_dirs)) == dirs
+
+    # a bucket replacement whose rows hash into both buckets, of which it
+    # replaces one
+    rejected(lambda: t.replace_buckets(df, [0], batch_id="r0"), ValueError, "outside")
     # without placement every input split writes into every bucket
     monkeypatch.setattr(LakeTable, "_place", lambda self, snap, df: df.repartition(4))
-    with pytest.raises(RuntimeError, match="bucket layout violated"):
-        t.merge(ev(spark, rows), batch_id="b0", delta_reduced=True)
-    assert t.snapshot.version == v0
-    assert not t.has_batch("b0")
+    for write in (
+        lambda: t.merge(df, batch_id="b0", delta_reduced=True),
+        lambda: t.overwrite(df, batch_id="o0"),
+        lambda: t.replace_buckets(df, [0, 1], batch_id="r1"),
+        lambda: t.compact_deltas(),
+    ):
+        rejected(write, RuntimeError, "bucket layout violated")
+    assert not any(t.has_batch(b) for b in ("r0", "b0", "o0", "r1"))
 
 
 def test_empty_writes_keep_their_observed_metrics(spark, tmp_path):

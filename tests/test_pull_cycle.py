@@ -740,8 +740,8 @@ def test_diff_shuffle_partitions_sized_from_table_bytes(spark, tmp_path):
     )
     assert total > 0
     # small table: session width wins (AQE-coalesce-friendly floor)
-    assert diff_shuffle_partitions(t, 8) == 8
+    assert diff_shuffle_partitions(t, t.snapshot, 8) == 8
     # big-table regime simulated by shrinking the per-partition target:
     # width scales with bytes, never below the session width
-    assert diff_shuffle_partitions(t, 8, target_bytes=total // 32) == 32
-    assert diff_shuffle_partitions(t, 64, target_bytes=total // 32) == 64
+    assert diff_shuffle_partitions(t, t.snapshot, 8, target_bytes=total // 32) == 32
+    assert diff_shuffle_partitions(t, t.snapshot, 64, target_bytes=total // 32) == 64
